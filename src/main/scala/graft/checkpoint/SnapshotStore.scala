@@ -1,6 +1,7 @@
 package graft.checkpoint
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -127,12 +128,14 @@ final class SnapshotStore(val root: String) {
     JsonMethods.parse(Files.readString(manifestPath(version))).extract[Manifest]
 
   /** Time-travel read of a table at a given snapshot (merge-on-read for
-    * view tables). */
-  def readTable(spark: SparkSession, version: Int, name: String): DataFrame = {
+    * view tables). A caller that knows the schema the table was written
+    * with passes it, and the read runs no schema-inference job. */
+  def readTable(spark: SparkSession, version: Int, name: String,
+                schema: Option[StructType] = None): DataFrame = {
     val meta = manifest(version).tables(name)
     meta.view match {
       case Some(kind) => readView(spark, meta.path, kind)
-      case None       => spark.read.parquet(meta.path)
+      case None => schema.fold(spark.read)(spark.read.schema).parquet(meta.path)
     }
   }
 

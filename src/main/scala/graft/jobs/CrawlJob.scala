@@ -1,7 +1,8 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.checkpoint.SnapshotStore
@@ -57,10 +58,6 @@ object CrawlJob {
       title: String, markdown: String, outlinks: Seq[String],
       chunks: Seq[ChunkRec], fetch_status: Int, n_chunks: Int)
 
-  final case class RoundMetrics(
-      round: Int, scheduled: Long, fetched: Long, missing: Long,
-      robots_denied: Long, new_frontier: Long, chunks: Long, elapsedSec: Double)
-
   /** Per-process managed-table scratch: tmpfs when the host has it,
     * java.io.tmpdir otherwise (portability beyond Linux). */
   private[graft] def defaultWarehouseDir: String = {
@@ -103,7 +100,15 @@ object CrawlJob {
       // other's table directories mid-scan (createBucketedTable rm-rf's
       // <warehouse>/<table>). Overridable for an intentionally shared
       // (e.g. pre-built cluster) warehouse.
-      dflt("spark.sql.warehouse.dir", defaultWarehouseDir))
+      dflt("spark.sql.warehouse.dir", defaultWarehouseDir),
+      // every crawl round plans the same queries again; Spark's default
+      // 100-entry generated-class cache (keyed by class loader and source,
+      // so each stage takes two entries) is smaller than one round's
+      // working set and evicted each class before the next round asked
+      // for it — every polite round recompiled ~170 classes. The cache is
+      // JVM-global and sized at the JVM's first codegen, so this takes
+      // effect only when this session plans the JVM's first query.
+      dflt("spark.sql.codegen.cache.maxEntries", "1000"))
       .foldLeft(SparkSession.builder()
         .master(s"local[$cpus]")
         .appName(appName)) { case (b, (k, v)) => b.config(k, v) }
@@ -146,6 +151,47 @@ object CrawlJob {
   }
 
   private def frontierCols = Seq("url", "url_hash", "host", "depth", "priority")
+
+  // The engine's own tables, read back with the schema they were written
+  // with: a parquet read that names its schema runs no inference job
+  private val frontierSchema = StructType.fromDDL(
+    "url STRING, url_hash BIGINT, host STRING, depth INT, priority DOUBLE")
+  // one `assigned` batch directory (batch_no is its path)
+  private val batchSchema = frontierSchema.add("rank", IntegerType)
+  private val visitedSchema = StructType.fromDDL(
+    "round INT, host STRING, rank INT, url STRING, url_hash BIGINT")
+  private lazy val resultsSchema = org.apache.spark.sql.Encoders.product[Extracted].schema
+    .add("round", IntegerType, nullable = false).add("fp", LongType, nullable = false)
+
+  /** The assign write's Observation: row count, max batch, and batch 0's
+    * row count (the first round of the epoch reads it instead of
+    * counting). */
+  private def observeAssign(assigned: DataFrame,
+                            obs: org.apache.spark.sql.Observation): DataFrame =
+    assigned.observe(obs, count(lit(1)).as("n"), max("batch_no").as("mb"),
+      count(when(col("batch_no") === 0, 1)).as("n0"))
+
+  /** Batches `from` to `to` of an `assigned` table, read as their
+    * partition directories: no partition discovery over the table's
+    * other batches (a listing job past 32 directories). Every batch in
+    * between exists, since per-host ranks are consecutive. */
+  private def readBatches(spark: SparkSession, assignedPath: String,
+                          from: Int, to: Int): DataFrame =
+    spark.read.schema(batchSchema).parquet((from to to).map(b => s"$assignedPath/batch_no=$b"): _*)
+
+  /** Generated classes compiled so far in this JVM (`GRAFT_TIMING`). */
+  private def compiledClasses: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** The round stamp of `results` and `visited`, as a value generated
+    * code reads from its references array. A `lit(round)` is inlined
+    * into the generated source, so every round's extract and `visited`
+    * classes differed from the last round's only in that constant and
+    * missed the codegen cache. Non-nullable keeps the column
+    * `round INT NOT NULL`, as the literal wrote it; nondeterministic
+    * keeps the optimizer from treating it as a constant. */
+  private def roundStamp(r: Int): Column =
+    udf(() => r).asNonNullable().asNondeterministic()()
 
   private def emptyFrontier(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -207,10 +253,12 @@ object CrawlJob {
       .select("sm_host", "sm_url")
     val ifTiming = sys.env.contains("GRAFT_TIMING")
     var tIf = System.nanoTime()
+    var cIf = compiledClasses
     def ifPhase(name: String): Unit = if (ifTiming) {
       val now = System.nanoTime()
-      println(f"[timing] initial-frontier $name: ${(now - tIf) / 1e9}%.1fs")
-      tIf = now
+      val c = compiledClasses
+      println(f"[timing] initial-frontier $name: ${(now - tIf) / 1e9}%.1fs, ${c - cIf} classes compiled")
+      tIf = now; cIf = c
     }
     // Fixpoint job discipline: each level runs exactly TWO jobs — the
     // eager parse checkpoint (entryParts re-reads it later, so it must
@@ -332,7 +380,7 @@ object CrawlJob {
     val ranked = if (paths.isEmpty) {
       emptyFrontier(spark).select(col("url"), lit(0.0).as("link_rank")).limit(0)
     } else {
-      val raw = spark.read.parquet(paths: _*)
+      val raw = spark.read.schema(resultsSchema).parquet(paths: _*)
         .select(col("url").as("src_url"), explode(col("outlinks")).as("raw_url"))
       val edges = Frontier.withFrontierKeys(raw, "raw_url")
         .select(col("src_url").as("src"), col("url").as("dst"))
@@ -446,6 +494,8 @@ object CrawlJob {
     var assignedTotal = 0L // rows assigned at the epoch boundary
     var consumed = 0L // assigned rows whose batch has been consumed
     var maxBatch = -1
+    // batch 0's row count, known when this run assigned the epoch
+    var batch0Rows: Option[Long] = None
     var carryDf: DataFrame = emptyFrontier(spark)
     var carryCount = 0L
     if (round > 0) {
@@ -454,8 +504,9 @@ object CrawlJob {
       assignedTotal = m.metrics("assigned_total").toLong
       consumed = m.metrics("assigned_consumed").toLong
       maxBatch = m.metrics("assigned_max_batch").toInt
+      if (maxBatch == 0) batch0Rows = Some(assignedTotal)
       assignedPath = m.tables("assigned").path
-      carryDf = store.readTable(spark, round - 1, "carry")
+      carryDf = store.readTable(spark, round - 1, "carry", Some(frontierSchema))
       carryCount = m.tables("carry").rows
     }
 
@@ -496,7 +547,7 @@ object CrawlJob {
     def seenDfAt(r: Int): DataFrame = {
       val paths = activeSeenMeta(r).map(_._2)
       if (paths.isEmpty) emptyFrontier(spark).select("url_hash", "url")
-      else spark.read.parquet(paths: _*).select("url_hash", "url")
+      else spark.read.schema(visitedSchema).parquet(paths: _*).select("url_hash", "url")
     }
     // ---- adaptive recrawl state: the EPOCH-FROZEN due set ----
     // At every recrawl boundary (rounds ≡ 0 mod recrawlEvery) the fetch
@@ -514,7 +565,7 @@ object CrawlJob {
       val due =
         if (paths.isEmpty) emptyFrontier(spark)
         else {
-          val hist = spark.read.parquet(paths: _*)
+          val hist = spark.read.schema(resultsSchema).parquet(paths: _*)
             // rounds ARE the time axis: timestamp_seconds(round) runs
             // Recrawl's exact integer arithmetic in units of rounds
             .select(col("url"), timestamp_seconds(col("round")).as("ts"), col("fp"))
@@ -542,7 +593,7 @@ object CrawlJob {
         val active =
           if (since.isEmpty) dueFrontierDf.select("url_hash")
           else dueFrontierDf.select("url_hash")
-            .join(spark.read.parquet(since: _*).select("url_hash"),
+            .join(spark.read.schema(visitedSchema).parquet(since: _*).select("url_hash"),
               Seq("url_hash"), "left_anti")
         base.join(active, Seq("url_hash"), "left_anti")
       }
@@ -634,6 +685,47 @@ object CrawlJob {
         }
       case None => ()
     }
+    // cuckoo expiry: the rounds that leave the TTL window at round `r`
+    // retire by DELETING their deltas from a COPY of the sketch
+    // (republish — in-flight broadcasts of the old sketch never see
+    // mutation). O(expired delta + slot-array memcpy) per shift vs the
+    // bloom path's stale positives. Runs at the end of round r-1, before
+    // retention drops those deltas' files. A missing delta file, a
+    // not-found delete (bookkeeping drift), or a saturated sketch falls
+    // back to a full rebuild from round r's window — the self-healing
+    // path; either way no false negative can be introduced (deletes only
+    // ever remove entries whose round is OUTSIDE the exact-join window).
+    def cuckooExpire(r: Int): Unit = if (cuckooMode && cuckoo.isDefined) {
+      cfg.seenTtlRounds.foreach { ttl =>
+        val expiring = seenMeta.filter { case (v, _, _) =>
+          v > cuckooDeletedThrough && r - v > ttl }
+        if (expiring.nonEmpty) {
+          val cf = cuckoo.get.copySketch()
+          var ok = !cf.saturated
+          var nDeleted = 0L
+          expiring.foreach { case (_, path, _) =>
+            if (ok) {
+              if (!new java.io.File(path).exists()) ok = false
+              else {
+                val it = spark.read.schema(visitedSchema).parquet(path).select("url_hash")
+                  .as[Long](org.apache.spark.sql.Encoders.scalaLong).toLocalIterator()
+                while (ok && it.hasNext) {
+                  ok = cf.delete(it.next())
+                  if (ok) nDeleted += 1
+                }
+              }
+            }
+          }
+          if (ok) { cuckoo = Some(cf); cuckooExpiredDeletes += nDeleted }
+          else {
+            bloomCap = math.max(activeSeenMeta(r).map(_._3).sum * 4, bloomCap)
+            cuckoo = Some(graft.frontier.CuckooFilter.build(seenDfAt(r), bloomCap))
+            cuckooExpiryRebuilds += 1L
+          }
+          cuckooDeletedThrough = math.max(cuckooDeletedThrough, r - ttl - 1)
+        }
+      }
+    }
     def notSeenDf(df: DataFrame, seenDf: DataFrame): DataFrame = shardCfg match {
       case Some(sh) => ShardedBloom.notSeen(df, seenDf, sh)
       case None if cuckooMode => Frontier.notSeenCuckoo(df, seenDf, cuckoo)
@@ -642,64 +734,26 @@ object CrawlJob {
 
     val debugTiming = sys.env.contains("GRAFT_TIMING")
     var tPhase = System.nanoTime()
+    var cPhase = compiledClasses
     def phase(name: String): Unit = {
       if (debugTiming) {
         val now = System.nanoTime()
-        println(f"[timing] r$round $name: ${(now - tPhase) / 1e9}%.1fs")
-        tPhase = now
+        val c = compiledClasses
+        println(f"[timing] r$round $name: ${(now - tPhase) / 1e9}%.1fs, ${c - cPhase} classes compiled")
+        tPhase = now; cPhase = c
       }
     }
 
     var done = false
     while (!done && round < maxRounds) {
       val t0 = System.nanoTime()
-      tPhase = t0
+      tPhase = t0; cPhase = compiledClasses
       var batchIdx = round - epochStart
       // refresh the seen window (it shifts per round under a TTL; under
       // adaptive recrawl the due-exclusion shrinks as refetch deltas land)
       if (cfg.seenTtlRounds.isDefined || (adaptive && dueFrontierDf != null)) {
         seen = seenWithDue(round)
         seenCount = activeSeenMeta(round).map(_._3).sum
-        // cuckoo expiry: rounds that left the TTL window retire by
-        // DELETING their deltas from a COPY of the sketch (republish —
-        // in-flight broadcasts of the old sketch never see mutation).
-        // O(expired delta + slot-array memcpy) per shift vs the bloom
-        // path's stale positives. A missing delta file (snapshot expire
-        // already dropped it), a not-found delete (bookkeeping drift),
-        // or a saturated sketch falls back to a full rebuild from the
-        // windowed seen — the self-healing path; either way no false
-        // negative can be introduced (deletes only ever remove entries
-        // whose round is OUTSIDE the exact-join window).
-        if (cuckooMode && cfg.seenTtlRounds.isDefined && cuckoo.isDefined) {
-          val ttl = cfg.seenTtlRounds.get
-          val expiring = seenMeta.filter { case (v, _, _) =>
-            v > cuckooDeletedThrough && round - v > ttl }
-          if (expiring.nonEmpty) {
-            val cf = cuckoo.get.copySketch()
-            var ok = !cf.saturated
-            var nDeleted = 0L
-            expiring.foreach { case (_, path, _) =>
-              if (ok) {
-                if (!new java.io.File(path).exists()) ok = false
-                else {
-                  val it = spark.read.parquet(path).select("url_hash")
-                    .as[Long](org.apache.spark.sql.Encoders.scalaLong).toLocalIterator()
-                  while (ok && it.hasNext) {
-                    ok = cf.delete(it.next())
-                    if (ok) nDeleted += 1
-                  }
-                }
-              }
-            }
-            if (ok) { cuckoo = Some(cf); cuckooExpiredDeletes += nDeleted }
-            else {
-              bloomCap = math.max(seenCount * 4, bloomCap)
-              cuckoo = Some(graft.frontier.CuckooFilter.build(seen, bloomCap))
-              cuckooExpiryRebuilds += 1L
-            }
-            cuckooDeletedThrough = math.max(cuckooDeletedThrough, round - ttl - 1)
-          }
-        }
       }
 
       // ---- epoch boundary: one-shot W2 batch assignment ----
@@ -739,9 +793,9 @@ object CrawlJob {
           // partitionBy write (only _SUCCESS; no readable schema) —
           // re-invoking run() on a completed workDir lands here
           else if (assignedTotal == 0) carryDf
-          else spark.read.parquet(assignedPath)
-            .filter(col("batch_no") >= batchIdx)
-            .select(frontierCols.map(col): _*) // drop batch_no + stored rank
+          else if (batchIdx > maxBatch) carryDf
+          else readBatches(spark, assignedPath, batchIdx, maxBatch)
+            .select(frontierCols.map(col): _*) // drop the stored rank
             .unionByName(carryDf)
         val fresh0 = notSeenDf(mergeFrontier(input), seen)
         // due urls enter AFTER the seen filter (they are, by
@@ -783,17 +837,17 @@ object CrawlJob {
                 .select(frontierCols.map(col): _*)
           } else allowed
         val path = s"${store.root}/data/v$round/assigned"
-        // row count + max batch ride the write job as an Observation —
-        // no read-back job, and the zero-row case (no part files, no
-        // inferable schema) falls out as (0, null) instead of an
-        // AnalysisException
+        // row count, max batch and batch 0's row count ride the write
+        // job as an Observation — no read-back job, and the zero-row case
+        // (no part files, no inferable schema) falls out as (0, null)
+        // instead of an AnalysisException
         val asgObs = org.apache.spark.sql.Observation(s"assign_epoch_r$round")
-        Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots)
-          .observe(asgObs, count(lit(1)).as("n"), max("batch_no").as("mb"))
+        observeAssign(Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots), asgObs)
           .write.partitionBy("batch_no").mode("overwrite").parquet(path)
         val asgM = asgObs.get
         assignedTotal = asgM("n").asInstanceOf[Long]
         maxBatch = if (assignedTotal == 0) -1 else asgM("mb").asInstanceOf[Int]
+        batch0Rows = Some(asgM("n0").asInstanceOf[Long])
         assignedPath = path
         epochStart = round
         batchIdx = 0
@@ -812,18 +866,16 @@ object CrawlJob {
         val batchDf0 =
           if (assignedTotal == 0)
             emptyFrontier(spark).withColumn("rank", lit(null).cast("int"))
-          else spark.read.parquet(assignedPath)
-            .filter(col("batch_no") === batchIdx).drop("batch_no")
+          else readBatches(spark, assignedPath, batchIdx, batchIdx)
             .select(batchCols.map(col): _*)
-        // single-batch epoch (maxBatch == 0 — every epoch of a
-        // budget-unbound crawl): the batch IS the whole assigned table,
-        // whose row count already rode the assign write's Observation —
-        // skip the per-round count job (pure driver latency, the kind
-        // that caps low-core scaling efficiency)
+        // batch 0's row count rode the assign write's Observation —
+        // skip the count job (pure driver latency, the kind that caps
+        // low-core scaling efficiency); later batches of a budget-bound
+        // epoch still count theirs
         val nBatchRows =
           if (assignedTotal == 0) 0L
-          else if (maxBatch == 0 && batchIdx == 0) assignedTotal
-          else batchDf0.count() // partition-pruned metadata count
+          else if (batchIdx == 0 && batch0Rows.isDefined) batch0Rows.get
+          else batchDf0.count() // one batch directory's row count
         // FAST PATH: the epoch was assigned at THIS round's boundary
         // (epoch block above, or the previous round's commit-time
         // assignment) and there is no carry — the batch is already
@@ -998,7 +1050,7 @@ object CrawlJob {
           // Observation — zero extra jobs, zero re-scan of the output
           val exObs = org.apache.spark.sql.Observation(s"extract_r$round")
           extract(spark, fetchedForExtract, cfg).toDF()
-            .withColumn("round", lit(round))
+            .withColumn("round", roundStamp(round))
             // content fingerprint, stored AT extract so the adaptive-
             // recrawl history pass reads (url, round, fp) columnar and
             // never re-touches the markdown payload
@@ -1006,7 +1058,7 @@ object CrawlJob {
             .observe(exObs, count(lit(1)).as("n_rows"),
               coalesce(sum(col("n_chunks").cast("long")), lit(0L)).as("n_chunks"))
             .write.mode("overwrite").parquet(resultsPath)
-          val extracted = spark.read.parquet(resultsPath)
+          val extracted = spark.read.schema(resultsSchema).parquet(resultsPath)
           val exM = exObs.get
           val nFetched = exM("n_rows").asInstanceOf[Long]
           val nChunks = exM("n_chunks").asInstanceOf[Long]
@@ -1065,9 +1117,9 @@ object CrawlJob {
           // (rank is null ⇔ denied) instead of its own count() job
           val visitObs = org.apache.spark.sql.Observation(s"visited_r$round")
           val visited = selected
-            .select(lit(round).as("round"), col("host"), col("rank").cast("int").as("rank"),
+            .select(roundStamp(round).as("round"), col("host"), col("rank").cast("int").as("rank"),
               col("url"), col("url_hash"))
-            .unionByName(deniedAll.select(lit(round).as("round"), col("host"),
+            .unionByName(deniedAll.select(roundStamp(round).as("round"), col("host"),
               lit(null).cast("int").as("rank"), col("url"), col("url_hash")))
             .observe(visitObs,
               coalesce(sum(when(col("rank").isNull, 1L).otherwise(0L)), lit(0L)).as("n_denied"))
@@ -1114,7 +1166,7 @@ object CrawlJob {
             seenMeta = seenMeta :+ ((thisRound, visitedPath, nScheduled + nDen))
             seen = seenDfAt(thisRound)
             seenCount += nScheduled + nDen
-            bloomAdd(spark.read.parquet(visitedPath))
+            bloomAdd(spark.read.schema(visitedSchema).parquet(visitedPath))
           }(scala.concurrent.ExecutionContext.global)
 
           // Epoch fast-path: this round consumed the LAST assigned batch,
@@ -1136,20 +1188,26 @@ object CrawlJob {
           var nextAssignedPath: String = null
           var nextTotal = 0L
           var nextMax = -1
+          var nextBatch0 = 0L
+          var nCarry = 0L
           val carryPath = s"${store.root}/data/v$round/carry"
           if (preAssignNext) {
             nextAssignedPath = s"${store.root}/data/v$round/assigned_next"
             // stats ride the write job (see the epoch-assign Observation)
             val nxObs = org.apache.spark.sql.Observation(s"assign_next_r$round")
-            Scheduler.assignBatches(carryNext, limits, cfg, budgetRobots)
-              .observe(nxObs, count(lit(1)).as("n"), max("batch_no").as("mb"))
+            observeAssign(Scheduler.assignBatches(carryNext, limits, cfg, budgetRobots), nxObs)
               .write.partitionBy("batch_no").mode("overwrite").parquet(nextAssignedPath)
             val nxM = nxObs.get
             nextTotal = nxM("n").asInstanceOf[Long]
             nextMax = if (nextTotal == 0) -1 else nxM("mb").asInstanceOf[Int]
+            nextBatch0 = nxM("n0").asInstanceOf[Long]
             phase("epoch-next")
           } else {
-            carryNext.write.mode("overwrite").parquet(carryPath)
+            // the carry's row count rides its write, as the assign's does
+            val carryObs = org.apache.spark.sql.Observation(s"carry_r$round")
+            carryNext.observe(carryObs, count(lit(1)).as("n"))
+              .write.mode("overwrite").parquet(carryPath)
+            nCarry = carryObs.get("n").asInstanceOf[Long]
           }
           scala.concurrent.Await.result(visitedF, scala.concurrent.duration.Duration.Inf)
           val nDenied = visitObs.get("n_denied").asInstanceOf[Long]
@@ -1198,8 +1256,8 @@ object CrawlJob {
               "results" -> nFetched,
               "chunks" -> nChunks,
               "trace" -> nScheduled,
-              "assigned" -> committedTotal) ++
-              (if (preAssignNext) Map("carry" -> 0L) else Map.empty),
+              "assigned" -> committedTotal,
+              "carry" -> nCarry),
             preWritten = Map("results" -> resultsPath,
               "visited" -> visitedPath,
               "assigned" -> (if (preAssignNext) nextAssignedPath else assignedPath)) ++
@@ -1217,19 +1275,19 @@ object CrawlJob {
                else Map.empty))
           phase("commit")
 
-          // advance state from the committed manifest
-          val m = store.manifest(round)
+          // advance state to the committed round
           if (preAssignNext) {
             assignedPath = nextAssignedPath
             epochStart = round + 1
             assignedTotal = nextTotal
             maxBatch = nextMax
+            batch0Rows = Some(nextBatch0)
             consumed = 0
             carryDf = emptyFrontier(spark)
             carryCount = 0
           } else {
-            carryCount = m.tables("carry").rows
-            carryDf = store.readTable(spark, round, "carry")
+            carryCount = nCarry
+            carryDf = store.readTable(spark, round, "carry", Some(frontierSchema))
             consumed += nBatchRows
           }
           // seen-window advance + sketch add ran on the bloomF thread,
@@ -1238,6 +1296,9 @@ object CrawlJob {
           scala.concurrent.Await.result(bloomF, scala.concurrent.duration.Duration.Inf)
           phase("bloom")
 
+          // the sketch drops the deltas leaving the window first (a
+          // resumed run builds its sketch from the window instead)
+          if (round + 1 < maxRounds) cuckooExpire(round + 1)
           // retention: rounds that left the TTL window hold no table any
           // future round (or resume) reads — drop their data files,
           // keep manifests. The active epoch's `assigned` dir lives at
@@ -1246,6 +1307,7 @@ object CrawlJob {
             val upTo = math.min((round + 1) - ttl, epochStart - 1)
             if (upTo > 0) store.expire(upTo)
           }
+          phase("expiry")
 
           fresh.unpersist(); selected.unpersist(); newGate.unpersist()
           if (epochGate != null) epochGate.unpersist()
@@ -1284,7 +1346,10 @@ object CrawlJob {
     * run below measures the ENGINE, not first-use JIT + codegen
     * compilation (~30 s constant regardless of core count — a pure
     * distortion of single-run scaling cells; the multi-run median bench
-    * is warm by construction and unaffected). */
+    * is warm by construction and unaffected). The generated classes it
+    * compiles stay in the session's codegen cache (see `session`) and
+    * the round stamp is not part of their source, so the timed crawl
+    * reuses every class whose plan shape the warmup already ran. */
   def warmup(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
     val site = java.nio.file.Files.createTempDirectory("graft_warm_site").toString

@@ -17,14 +17,15 @@ import graft.jobs.CrawlJob
   *       optimization did not change what a query computes
   *   runMain graft.tools.ProbeTool explainexec <outDir> <name>[,<name>...]
   *     — EXECUTE the query (collect), then write the final
-  *       ADAPTIVE plan (`isFinalPlan=true`) — AQE join re-selection
-  *       (e.g. SMJ → shuffled-hash under runtime sizes) only appears
-  *       here, never in the pre-execution `explain` output
+  *       ADAPTIVE plan (`isFinalPlan=true`) to <outDir>/<name>.exec.txt —
+  *       AQE join re-selection (e.g. SMJ → shuffled-hash under runtime
+  *       sizes) only appears here, never in the pre-execution `explain`
+  *       output
   *
   * Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench. */
 object ProbeTool {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: ProbeTool explain|snapshot <outDir> <names-csv>|all")
+    require(args.length >= 3, "usage: ProbeTool explain|explainexec|snapshot <outDir> <names-csv>|all")
     val mode = args(0)
     val outDir = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -51,7 +52,7 @@ object ProbeTool {
           // collect() executes THIS df's QueryExecution (count()/noop-write
           // would build a separate one and leave this plan un-finalized)
           df.collect()
-          val w = new PrintWriter(new File(outDir, s"$name.txt"))
+          val w = new PrintWriter(new File(outDir, s"$name.exec.txt"))
           try w.write(df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
           finally w.close()

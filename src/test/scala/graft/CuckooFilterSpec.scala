@@ -86,4 +86,42 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(!cf.saturated)
     assert(ks.forall(cf.mightContain), "false negative after distributed build+merge")
   }
+
+  test("TTL-2 crawl with snapshot expiry retires the sketch by deletes, never a rebuild") {
+    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val site = java.nio.file.Files.createTempDirectory("graft_ttl2_site").toString
+    graft.synth.SyntheticWeb.generate(spark, site, 400, 5, seed = 42L, partitions = 4)
+    // retention drops a round's data as soon as it leaves the TTL-2
+    // window; the sketch must have deleted that round's delta before
+    def crawl(expire: Boolean): (String, Int) = {
+      val wd = java.nio.file.Files.createTempDirectory("graft_ttl2").toString
+      val cfg = graft.frontier.Scheduler.Config(seenTtlRounds = Some(2),
+        seenSketch = "cuckoo", expireBeyondTtl = expire)
+      (wd, graft.jobs.CrawlJob.run(spark, site, wd, cfg, maxRounds = 12, bloomThreshold = 10L))
+    }
+    val (wdExp, last) = crawl(expire = true)
+    val (wdKeep, lastKeep) = crawl(expire = false)
+    assert(last == lastKeep)
+    val exp = new graft.checkpoint.SnapshotStore(wdExp)
+    val keep = new graft.checkpoint.SnapshotStore(wdKeep)
+    val m = exp.manifest(last).metrics
+    assert(m("cuckoo_expiry_rebuilds") == 0.0, s"expiry fell back to a rebuild: $m")
+    assert(m("cuckoo_expired_deletes") > 0.0, s"no expiry deletes: $m")
+    assert((0 to last).exists(exp.isExpired), "retention never dropped a round")
+    // same crawl: every round's counters and per-host trace lineage, and
+    // the trace and seen rows of every round whose data is retained
+    (0 to last).foreach { v =>
+      val (a, b) = (exp.manifest(v), keep.manifest(v))
+      assert(a.metrics - "elapsed_sec" == b.metrics - "elapsed_sec", s"round $v")
+      assert(a.tables("trace").partitions == b.tables("trace").partitions, s"round $v")
+      if (!exp.isExpired(v)) Seq("trace", "seen_delta").foreach { t =>
+        def rows(s: graft.checkpoint.SnapshotStore) =
+          s.readTable(spark, v, t).collect().map(_.toString).sorted.toSeq
+        assert(rows(exp) == rows(keep), s"round $v $t")
+      }
+    }
+  }
 }
