@@ -117,15 +117,21 @@ final class SnapshotStore(val root: String) {
       val rows = knownCounts.getOrElse(name, readView(spark, srcPath, kind).count())
       name -> TableMeta(rows, srcPath, knownLineage.getOrElse(name, Map.empty[String, Long]), Some(kind))
     }
-    val manifest = Manifest(version, version - 1, metas, metrics)
+    val manifest = Manifest(version, version - 1,
+      metas.map { case (name, m) => name -> m.copy(path = m.path.stripPrefix(s"$root/")) }, metrics)
     val tmp = snapshotsDir.resolve(s".v$version.json.tmp")
     Files.writeString(tmp, Serialization.writePretty(manifest))
     Files.move(tmp, manifestPath(version), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  def manifest(version: Int): Manifest =
-    JsonMethods.parse(Files.readString(manifestPath(version))).extract[Manifest]
+  /** A table path under `root` is recorded relative to it, so a copied
+    * work dir reads its own files; callers see it resolved. */
+  def manifest(version: Int): Manifest = {
+    val m = JsonMethods.parse(Files.readString(manifestPath(version))).extract[Manifest]
+    m.copy(tables = m.tables.view.mapValues(t =>
+      if (Paths.get(t.path).isAbsolute) t else t.copy(path = s"$root/${t.path}")).toMap)
+  }
 
   /** Time-travel read of a table at a given snapshot (merge-on-read for
     * view tables). A caller that knows the schema the table was written

@@ -53,8 +53,8 @@ object Dedup {
     *    (the batch refetches the same page twice in a day);
     *  2. corpus anti-join on text_hash — with an optional broadcast
     *     Bloom sketch over the corpus hashes, rows the sketch rules out
-    *     skip the exact anti-join entirely (the `Frontier.notSeen`
-    *     split-path pattern applied to content: at 10^10 corpus hashes
+    *     skip the exact anti-join entirely (the URL-seen set's
+    *     split-path anti-join, [[graft.frontier.SeenIndex.antiJoin]], applied to content: at 10^10 corpus hashes
     *     vs a 10^6-row batch, most of the batch is definitely-new and
     *     never shuffles). False positives only cost an extra exact
     *     check, never a wrong result.
@@ -70,18 +70,11 @@ object Dedup {
     val w = Window.partitionBy(col("text_hash")).orderBy(col(idCol))
     val batchDeduped = hashed.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
-    val corpusFps = corpusIndex.select("text_hash")
-    bloom match {
-      case Some(bf) =>
-        val bcast = batch.sparkSession.sparkContext.broadcast(bf)
-        val mightContain = udf((h: String) => bcast.value.mightContainString(h))
-        val definitelyNew = batchDeduped.filter(!mightContain(col("text_hash")))
-        val maybeSeen = batchDeduped.filter(mightContain(col("text_hash")))
-        definitelyNew.unionByName(
-          maybeSeen.join(corpusFps, Seq("text_hash"), "left_anti"))
-      case None =>
-        batchDeduped.join(corpusFps, Seq("text_hash"), "left_anti")
+    val mightContain = bloom.map { bf =>
+      val bcast = batch.sparkSession.sparkContext.broadcast(bf)
+      udf((h: String) => bcast.value.mightContainString(h)).apply(col("text_hash"))
     }
+    graft.frontier.SeenIndex.antiJoin(batchDeduped, corpusIndex, "text_hash", mightContain)
   }
 
   // --- paragraph-level exact dedup (CCNet-style boilerplate removal) ---

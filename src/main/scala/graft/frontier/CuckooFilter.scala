@@ -3,17 +3,17 @@ package graft.frontier
 import org.apache.spark.sql.DataFrame
 
 /** Partial-key cuckoo filter over 64-bit keys (Fan et al., "Cuckoo
-  * Filter: Practically Better Than Bloom", CoNEXT'14) — the OTHER
-  * approximate-membership sketch the URL-seen set can ride
-  * (`Scheduler.Config.seenSketch = "cuckoo"`). What it buys over the
-  * Bloom sketch is DELETION: a TTL'd seen window can retire an expired
-  * round by deleting that round's url_hash delta — O(round delta) —
-  * where the Bloom path must periodically rebuild from the whole
-  * window — O(window). Same correctness contract as the Bloom in
-  * [[Frontier.notSeen]]: NO false negatives ever (a false negative
-  * would classify a seen url definitely-new, skip the exact anti-join,
-  * and re-crawl it — trace divergence); false positives only cost an
-  * exact-join probe.
+  * Filter: Practically Better Than Bloom", CoNEXT'14) — the in-memory
+  * approximate-membership sketch of the URL-seen set ([[SeenIndex]]).
+  * What it buys over a Bloom sketch is DELETION: a TTL'd seen window
+  * retires an expired round by deleting that round's url_hash delta —
+  * O(round delta) — where an add-only sketch must periodically rebuild
+  * from the whole window — O(window) (the sliding-window expiry of
+  * "A Learned Cuckoo Filter for AMQ over Variable-sized Sliding
+  * Windows", SIGMOD'23). Correctness contract: NO false negatives
+  * ever (a false negative would classify a seen url definitely-new,
+  * skip the exact anti-join, and re-crawl it — trace divergence);
+  * false positives only cost an exact-join probe.
   *
   * Design notes, all serving that contract:
   *   - MULTISET semantics: every insert stores an entry (duplicate
@@ -35,9 +35,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Sizing: 4-slot buckets, 16-bit fingerprints, power-of-two bucket
   * count at ≤~0.95 load → ~2.4 bytes/key at high occupancy (vs ~1.1
-  * bytes/key for the 3% Bloom) — deletion costs ~2× space. At the
-  * 10^10 design point the same hash-range sharding as
-  * [[ShardedBloom]] applies; this class is the single-sketch cell. */
+  * bytes/key for a 3% Bloom) — deletion costs ~2× space. At the
+  * 10^10 design point the seen set rides hash-range [[ShardedBloom]]
+  * files instead; this class is the single-sketch cell. */
 final class CuckooFilter private (
     val numBuckets: Int, // power of two
     private val slots: Array[Short], // numBuckets * 4, 0 = empty
@@ -68,50 +68,20 @@ final class CuckooFilter private (
 
   /** Insert; returns false only when the filter saturated (the key is
     * still covered — saturation makes membership answer true). */
-  def insert(key: Long): Boolean = {
-    if (saturatedFlag) return false
-    val fp = fingerprint(key)
-    val i1 = index(key, numBuckets)
-    if (tryPut(i1, fp)) return true
-    val i2 = altIndex(i1, fp)
-    if (tryPut(i2, fp)) return true
-    // eviction walk: displace a deterministic victim slot up to maxKicks
-    var curI = if (nextBit()) i1 else i2
-    var curFp = fp
-    var kicks = 0
-    while (kicks < MaxKicks) {
-      val slot = nextSlot()
-      val base = curI * 4
-      val victim = slots(base + slot)
-      slots(base + slot) = curFp
-      curFp = victim
-      curI = altIndex(curI, curFp)
-      if (tryPut(curI, curFp)) return true
-      kicks += 1
-    }
-    stash = (curI, curFp) :: stash
-    if (stash.size > StashCap) { saturatedFlag = true; stash = Nil }
-    true
-  }
+  def insert(key: Long): Boolean =
+    !saturatedFlag && { insertFp(index(key, numBuckets), fingerprint(key), kickFromEither = true); true }
 
   /** Delete ONE entry for the key; returns whether an entry was found.
     * On a saturated filter membership is degenerate — nothing is
     * deleted (the caller falls back to rebuild). */
-  def delete(key: Long): Boolean = {
-    if (saturatedFlag) return false
-    val fp = fingerprint(key)
-    val i1 = index(key, numBuckets)
-    val i2 = altIndex(i1, fp)
-    var i = 0
-    for (b <- Seq(i1, i2)) {
-      val base = b * 4
-      i = 0
-      while (i < 4) {
-        if (slots(base + i) == fp) { slots(base + i) = 0; return true }
-        i += 1
-      }
-    }
-    stash.indexWhere { case (bi, f) => (bi == i1 || bi == i2) && f == fp } match {
+  def delete(key: Long): Boolean = !saturatedFlag && deleteFp(index(key, numBuckets), fingerprint(key))
+
+  /** Delete ONE entry of fingerprint `fp` homed in bucket `i1` or its
+    * alternate. */
+  private def deleteFp(i1: Int, fp: Short): Boolean = {
+    val s = slotOf(i1, fp)
+    if (s >= 0) { slots(s) = 0; true }
+    else stashIndex(i1, fp) match {
       case -1 => false
       case k =>
         stash = stash.patch(k, Nil, 1)
@@ -119,21 +89,39 @@ final class CuckooFilter private (
     }
   }
 
-  def mightContain(key: Long): Boolean = {
-    if (saturatedFlag) return true
-    val fp = fingerprint(key)
-    val i1 = index(key, numBuckets)
+  /** The slot holding `fp` in bucket `i1` or its alternate, or -1. */
+  private def slotOf(i1: Int, fp: Short): Int = {
     val i2 = altIndex(i1, fp)
-    var i = 0
-    for (b <- Seq(i1, i2)) {
-      val base = b * 4
-      i = 0
-      while (i < 4) {
-        if (slots(base + i) == fp) return true
-        i += 1
-      }
+    var k = 0
+    while (k < 8) {
+      val s = (if (k < 4) i1 else i2) * 4 + (k & 3)
+      if (slots(s) == fp) return s
+      k += 1
     }
-    stash.exists { case (bi, f) => (bi == i1 || bi == i2) && f == fp }
+    -1
+  }
+
+  private def stashIndex(i1: Int, fp: Short): Int = {
+    val i2 = altIndex(i1, fp)
+    stash.indexWhere { case (bi, f) => (bi == i1 || bi == i2) && f == fp }
+  }
+
+  def mightContain(key: Long): Boolean = saturatedFlag || {
+    val i1 = index(key, numBuckets)
+    val fp = fingerprint(key)
+    slotOf(i1, fp) >= 0 || stashIndex(i1, fp) >= 0
+  }
+
+  /** Applies `f` to every stored (bucket, fingerprint) entry — slots in
+    * bucket order, then the stash — while it returns true; returns
+    * whether every call did. */
+  private def forallEntries(f: (Int, Int) => Boolean): Boolean = {
+    var k = 0
+    while (k < slots.length) {
+      if (slots(k) != 0 && !f(k / 4, slots(k))) return false
+      k += 1
+    }
+    stash.forall { case (b, fp) => f(b, fp) }
   }
 
   /** Fold `other`'s entries into this filter (same numBuckets
@@ -145,25 +133,33 @@ final class CuckooFilter private (
     require(other.numBuckets == numBuckets,
       s"cannot merge cuckoo filters of different geometry ($numBuckets vs ${other.numBuckets})")
     if (other.saturatedFlag) { saturatedFlag = true; stash = Nil; return this }
-    var b = 0
-    while (b < numBuckets && !saturatedFlag) {
-      var s = 0
-      while (s < 4) {
-        val fp = other.slots(b * 4 + s)
-        if (fp != 0) insertFp(b, fp)
-        s += 1
-      }
-      b += 1
-    }
-    other.stash.foreach { case (bi, fp) => if (!saturatedFlag) insertFp(bi, fp) }
+    other.forallEntries { (b, fp) => insertFp(b, fp.toShort); !saturatedFlag }
     this
   }
 
-  private def insertFp(i: Int, fp: Short): Unit = {
+  /** Remove one entry per entry of `other` (same numBuckets required) —
+    * the bulk form of [[delete]]: a stored (bucket, fingerprint) names
+    * the same bucket pair `delete(key)` searches for its key, so
+    * subtracting a sketch of keys equals deleting the keys one by one.
+    * Returns the number of entries removed, or None when either filter
+    * is saturated or an entry is not found; this filter is then partly
+    * modified, so callers subtract from a [[copySketch]]. */
+  def subtract(other: CuckooFilter): Option[Long] = {
+    require(other.numBuckets == numBuckets,
+      s"cannot subtract cuckoo filters of different geometry ($numBuckets vs ${other.numBuckets})")
+    if (saturatedFlag || other.saturatedFlag) return None
+    var n = 0L
+    if (other.forallEntries { (b, fp) => n += 1; deleteFp(b, fp.toShort) }) Some(n) else None
+  }
+
+  /** Store `fp` in bucket `i` or its alternate, evicting along a
+    * deterministic walk of up to MaxKicks victims (from either bucket
+    * when `kickFromEither`, else the alternate) and stashing the last. */
+  private def insertFp(i: Int, fp: Short, kickFromEither: Boolean = false): Unit = {
     if (tryPut(i, fp)) return
     val i2 = altIndex(i, fp)
     if (tryPut(i2, fp)) return
-    var curI = i2
+    var curI = if (kickFromEither && nextBit()) i else i2
     var curFp = fp
     var kicks = 0
     while (kicks < MaxKicks) {
@@ -183,10 +179,9 @@ final class CuckooFilter private (
   private def nextBit(): Boolean = { lcg = lcg * 6364136223846793005L + 1442695040888963407L; (lcg >>> 63) != 0L }
   private def nextSlot(): Int = { lcg = lcg * 6364136223846793005L + 1442695040888963407L; ((lcg >>> 33) & 3L).toInt }
 
-  /** Independent copy (cloned slot array) — the crawl mutates a copy
-    * for TTL deletes and republishes, so in-flight plans holding a
-    * broadcast of the previous sketch never see shared mutation (the
-    * same no-shared-mutation discipline as the Bloom delta-merge). */
+  /** Independent copy (cloned slot array) — the seen index adds to and
+    * deletes from a copy and republishes, so in-flight plans holding a
+    * broadcast of the previous sketch never see shared mutation. */
   def copySketch(): CuckooFilter =
     new CuckooFilter(numBuckets, slots.clone(), stash, lcg, saturatedFlag)
 }
@@ -225,13 +220,13 @@ object CuckooFilter {
 
   /** Build over a url_hash column: per-partition filters of the SAME
     * geometry (mergeable by fingerprint re-insert), tree-merged to the
-    * driver — the cuckoo twin of [[Frontier.buildBloom]]. RDD
-    * treeAggregate because the accumulator is this custom sketch. */
+    * driver. RDD treeAggregate because the accumulator is this custom
+    * sketch. */
   def build(df: DataFrame, expectedItems: Long): CuckooFilter =
     buildWithBuckets(df, bucketsFor(expectedItems))
 
-  /** Build at an EXPLICIT geometry — the delta-merge path must match
-    * the main sketch's bucket count to merge. */
+  /** Build at an EXPLICIT geometry — a delta merged into, or subtracted
+    * from, the main sketch must match its bucket count. */
   def buildWithBuckets(df: DataFrame, m: Int): CuckooFilter = {
     val spark = df.sparkSession
     import spark.implicits._

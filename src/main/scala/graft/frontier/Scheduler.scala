@@ -123,16 +123,12 @@ object Scheduler {
       // fetch join once more per round (a second sink cannot ride the
       // extract write's scan).
       archiveWarc: Boolean = false,
-      // Approximate-membership sketch fronting the exact seen anti-join
-      // (single-sketch path only; bloomShards overrides both): "bloom"
-      // (Spark's sketch — add-only, so a TTL'd window accumulates stale
-      // positives until a growth-triggered rebuild) or "cuckoo"
-      // (frontier.CuckooFilter — supports DELETE, so expired rounds
-      // retire in O(round delta) and the sketch stays tight through an
-      // arbitrarily long TTL crawl). Both sit in front of the same
-      // exact join: the choice affects only prefilter efficiency,
-      // never the trace.
-      seenSketch: String = "bloom")
+      // The in-memory sketch fronting the exact seen anti-join
+      // (bloomShards overrides it): "cuckoo" (frontier.CuckooFilter,
+      // via frontier.SeenIndex) is the only value; the single Bloom
+      // sketch is retired. The key stays only because existing callers
+      // still pass it.
+      seenSketch: String = "cuckoo")
 
   object Config {
     /** Layered config (the reference's env/YAML/JSON layering,

@@ -18,8 +18,8 @@ import org.apache.spark.util.sketch.BloomFilter
   * cached per task). No driver or single-executor materialization of the
   * full sketch ever happens.
   *
-  * Correctness contract is identical to the single-sketch path
-  * ([[Frontier.notSeen]]): the sketch only PREFILTERS — "definitely new"
+  * Correctness contract is identical to the in-memory sketch's
+  * ([[SeenIndex]]): the sketch only PREFILTERS — "definitely new"
   * rows skip the exact anti-join, "maybe seen" rows are confirmed by the
   * exact left_anti backstop, so a false positive costs a join probe,
   * never a wrong result, and false negatives cannot occur because every
@@ -194,38 +194,29 @@ object ShardedBloom {
     prune(fs0, root)
   }
 
-  /** Split-path seen filter against the shard files (the sharded analogue
-    * of [[Frontier.notSeen]]). The probe side is repartitioned by shard;
-    * each task lazily loads + caches only its shards' sketches. Rows of
-    * hashes with no shard file yet are definitely new. */
+  /** Split-path seen filter against the shard files: [[SeenIndex.antiJoin]]
+    * with a shard-file probe. The probe side is repartitioned by shard,
+    * and each task lazily loads + caches only its shards' sketches (the
+    * probe is nondeterministic, so the filter stays above the
+    * repartition). Rows of hashes with no shard file yet are definitely
+    * new. */
   def notSeen(frontier: DataFrame, seenExact: DataFrame, shards: Shards): DataFrame = {
     val Shards(dir, n, _, _) = shards
-    val cols = frontier.columns
-    val flagged = frontier
-      .withColumn("__shard", shardOf(n))
-      .repartition(n, col("__shard"))
-      .mapPartitions { rows =>
-        val cache = scala.collection.mutable.Map.empty[Int, Option[BloomFilter]]
-        lazy val (fs, root) = fsFor(dir)
-        // one listing per task resolves each shard's max-generation file
-        lazy val files = listShards(fs, root)._1
-        rows.map { r =>
-          val bf = cache.getOrElseUpdate(r.getAs[Int]("__shard"), {
-            files.get(r.getAs[Int]("__shard")).map(readShard(fs, _))
-          })
-          val maybe = bf.exists(_.mightContainLong(r.getAs[Long]("url_hash")))
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ maybe)
-        }
-      }(org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(
-        org.apache.spark.sql.types.StructType(
-          frontier.schema.fields :+
-            org.apache.spark.sql.types.StructField("__shard", org.apache.spark.sql.types.IntegerType, false) :+
-            org.apache.spark.sql.types.StructField("__maybe", org.apache.spark.sql.types.BooleanType, false))))
-      .drop("__shard")
-    val definitelyNew = flagged.filter(!col("__maybe")).drop("__maybe")
-    val maybeSeen = flagged.filter(col("__maybe")).drop("__maybe")
-    definitelyNew.unionByName(
-      maybeSeen.join(seenExact.select("url_hash"), Seq("url_hash"), "left_anti"))
-      .select(cols.map(col): _*)
+    val probe = new ShardProbe(dir)
+    val maybeSeen = udf((shard: Int, h: Long) => probe.mightContain(shard, h)).asNondeterministic()
+    SeenIndex.antiJoin(frontier.repartition(n, shardOf(n)), seenExact, "url_hash",
+      Some(maybeSeen(shardOf(n), col("url_hash"))))
+      .select(frontier.columns.map(col): _*)
+  }
+
+  /** One task's view of the shard files (each task deserializes its own):
+    * one listing resolves each shard's max-generation file, read on
+    * first use. */
+  private final class ShardProbe(dir: String) extends Serializable {
+    @transient private lazy val (fs, root) = fsFor(dir)
+    @transient private lazy val files = listShards(fs, root)._1
+    @transient private lazy val loaded = scala.collection.mutable.Map.empty[Int, Option[BloomFilter]]
+    def mightContain(shard: Int, h: Long): Boolean =
+      loaded.getOrElseUpdate(shard, files.get(shard).map(readShard(fs, _))).exists(_.mightContainLong(h))
   }
 }

@@ -3,11 +3,10 @@ package graft.jobs
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
-import org.apache.spark.util.sketch.BloomFilter
 
 import graft.checkpoint.SnapshotStore
 import graft.chunk.{ChunkRec, Chunker}
-import graft.frontier.{Frontier, ShardedBloom, Scheduler}
+import graft.frontier.{Frontier, Scheduler, SeenIndex}
 import graft.html.{Doc, DocRender}
 import graft.model._
 import graft.robots.Robots
@@ -21,7 +20,7 @@ import graft.sitemap.Sitemap
   *     → write partitionBy(batch_no)                     [O(frontier), amortized]
   *   ROUND k of the epoch:
   *     candidates = assigned[batch_no = k] (partition-pruned scan) ∪ carry
-  *     → merge → Bloom + left_anti vs seen (J1)
+  *     → merge → seen-sketch prefilter + left_anti vs seen (J1, SeenIndex)
   *     → rank ≤ budget within candidates (W2) + W4 cap   [O(batch + carry)]
   *     → inner join pages ("fetch", J4)
   *     → one-pass parse → markdown/outlinks/chunks (P4/P8/G1)
@@ -158,18 +157,27 @@ object CrawlJob {
     "url STRING, url_hash BIGINT, host STRING, depth INT, priority DOUBLE")
   // one `assigned` batch directory (batch_no is its path)
   private val batchSchema = frontierSchema.add("rank", IntegerType)
-  private val visitedSchema = StructType.fromDDL(
-    "round INT, host STRING, rank INT, url STRING, url_hash BIGINT")
   private lazy val resultsSchema = org.apache.spark.sql.Encoders.product[Extracted].schema
     .add("round", IntegerType, nullable = false).add("fp", LongType, nullable = false)
 
-  /** The assign write's Observation: row count, max batch, and batch 0's
-    * row count (the first round of the epoch reads it instead of
-    * counting). */
-  private def observeAssign(assigned: DataFrame,
-                            obs: org.apache.spark.sql.Observation): DataFrame =
-    assigned.observe(obs, count(lit(1)).as("n"), max("batch_no").as("mb"),
-      count(when(col("batch_no") === 0, 1)).as("n0"))
+  /** An epoch's batch assignment as written: its row count, max batch
+    * (-1 when empty), and batch 0's row count (the first round of the
+    * epoch reads it instead of counting). */
+  private final case class Assigned(path: String, total: Long, maxBatch: Int, batch0: Long)
+
+  /** Write `batches` partitioned by batch_no to `path`. The stats ride
+    * the write job as an Observation — no read-back job, and the
+    * zero-row case (no part files, no inferable schema) needs no read
+    * that would fail with an AnalysisException. */
+  private def writeAssigned(batches: DataFrame, path: String, name: String): Assigned = {
+    val obs = org.apache.spark.sql.Observation(name)
+    batches.observe(obs, count(lit(1)).as("n"), max("batch_no").as("mb"),
+        count(when(col("batch_no") === 0, 1)).as("n0"))
+      .write.partitionBy("batch_no").mode("overwrite").parquet(path)
+    val m = obs.get
+    val n = m("n").asInstanceOf[Long]
+    Assigned(path, n, if (n == 0) -1 else m("mb").asInstanceOf[Int], m("n0").asInstanceOf[Long])
+  }
 
   /** Batches `from` to `to` of an `assigned` table, read as their
     * partition directories: no partition discovery over the table's
@@ -179,9 +187,23 @@ object CrawlJob {
                           from: Int, to: Int): DataFrame =
     spark.read.schema(batchSchema).parquet((from to to).map(b => s"$assignedPath/batch_no=$b"): _*)
 
-  /** Generated classes compiled so far in this JVM (`GRAFT_TIMING`). */
+  /** Generated classes compiled so far in this JVM. */
   private def compiledClasses: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** `GRAFT_TIMING` phase lines: each call prints the wall time and the
+    * generated classes compiled since the previous call (or `restart`). */
+  private final class PhaseTimer(prefix: () => String) {
+    private val on = sys.env.contains("GRAFT_TIMING")
+    private var t = System.nanoTime()
+    private var c = compiledClasses
+    def restart(): Unit = { t = System.nanoTime(); c = compiledClasses }
+    def apply(name: String): Unit = if (on) {
+      val (now, cNow) = (System.nanoTime(), compiledClasses)
+      println(f"[timing] ${prefix()} $name: ${(now - t) / 1e9}%.1fs, ${cNow - c} classes compiled")
+      t = now; c = cNow
+    }
+  }
 
   /** The round stamp of `results` and `visited`, as a value generated
     * code reads from its references array. A `lit(round)` is inlined
@@ -251,15 +273,7 @@ object CrawlJob {
         org.apache.spark.sql.expressions.Window.partitionBy("sm_host").orderBy("cand_rank")))
       .filter(col("rn") === 1)
       .select("sm_host", "sm_url")
-    val ifTiming = sys.env.contains("GRAFT_TIMING")
-    var tIf = System.nanoTime()
-    var cIf = compiledClasses
-    def ifPhase(name: String): Unit = if (ifTiming) {
-      val now = System.nanoTime()
-      val c = compiledClasses
-      println(f"[timing] initial-frontier $name: ${(now - tIf) / 1e9}%.1fs, ${c - cIf} classes compiled")
-      tIf = now; cIf = c
-    }
+    val ifPhase = new PhaseTimer(() => "initial-frontier")
     // Fixpoint job discipline: each level runs exactly TWO jobs — the
     // eager parse checkpoint (entryParts re-reads it later, so it must
     // materialize) and one count() that lazily materializes BOTH the
@@ -375,12 +389,9 @@ object CrawlJob {
   private def linkRanks(spark: SparkSession, store: SnapshotStore,
                         upToRound: Int, cfg: Scheduler.Config): DataFrame = {
     import graft.graph.LinkGraph
-    val paths = (0 until upToRound).filterNot(store.isExpired)
-      .map(v => store.manifest(v).tables("results").path)
-    val ranked = if (paths.isEmpty) {
-      emptyFrontier(spark).select(col("url"), lit(0.0).as("link_rank")).limit(0)
-    } else {
-      val raw = spark.read.schema(resultsSchema).parquet(paths: _*)
+    resultsBefore(spark, store, upToRound).fold(
+      emptyFrontier(spark).select(col("url"), lit(0.0).as("link_rank")).limit(0)) { results =>
+      val raw = results
         .select(col("url").as("src_url"), explode(col("outlinks")).as("raw_url"))
       val edges = Frontier.withFrontierKeys(raw, "raw_url")
         .select(col("src_url").as("src"), col("url").as("dst"))
@@ -406,7 +417,13 @@ object CrawlJob {
             .select(col("url"), round(col("rank"), 6).as("link_rank"))
       }
     }
-    ranked
+  }
+
+  /** The `results` tables of the retained rounds before `upTo`, if any. */
+  private def resultsBefore(spark: SparkSession, store: SnapshotStore, upTo: Int): Option[DataFrame] = {
+    val paths = (0 until upTo).filterNot(store.isExpired)
+      .map(v => store.manifest(v).tables("results").path)
+    if (paths.isEmpty) None else Some(spark.read.schema(resultsSchema).parquet(paths: _*))
   }
 
   /** Run (or resume) the crawl. Returns the final snapshot version. */
@@ -416,8 +433,8 @@ object CrawlJob {
           bloomThreshold: Long = 100000L): Int = {
     require(cfg.linkPriorityMode.forall(Set("indegree", "pagerank", "hostrank", "urlshape")),
       s"linkPriorityMode must be indegree|pagerank|hostrank|urlshape, got ${cfg.linkPriorityMode}")
-    require(Set("bloom", "cuckoo")(cfg.seenSketch),
-      s"seenSketch must be bloom|cuckoo, got ${cfg.seenSketch}")
+    require(cfg.seenSketch == "cuckoo",
+      s"seenSketch must be cuckoo (the single Bloom sketch is retired), got ${cfg.seenSketch}")
     require(cfg.linkPriorityEvery > 0,
       s"linkPriorityEvery must be positive, got ${cfg.linkPriorityEvery}")
     require(cfg.recrawlMinRounds.isDefined == cfg.recrawlMaxRounds.isDefined,
@@ -510,18 +527,8 @@ object CrawlJob {
       carryCount = m.tables("carry").rows
     }
 
-    // seen is committed as per-round DELTAS (append semantics, like a
-    // real Iceberg append — a full rewrite per round would be quadratic
-    // in total crawl size); the live set is a FLAT multi-path read over
-    // the ACTIVE deltas (not an incremental union DAG, which would deepen
-    // the plan every round). With a TTL (cache.py:211-311 recrawl
-    // semantics) the active window excludes deltas older than
-    // ttl rounds — an expired url blocks nothing and a link-rediscovery
-    // re-fetches it. The cumulative Bloom may still contain expired urls:
-    // that is only a false "maybe-seen", corrected by the exact anti-join
-    // over the active window.
     // Resuming a workDir that ran with expireBeyondTtl: expired versions'
-    // DATA is gone (manifests remain). They are skipped here, but only
+    // DATA is gone (manifests remain). The seen index skips them, but only
     // legally — an expired version inside the RESUME config's active
     // window (TTL absent or larger than the original run's) would change
     // seen semantics silently, so that is a hard error instead of an
@@ -534,21 +541,7 @@ object CrawlJob {
           s"but fall inside this config's seen-TTL window (seenTtlRounds=${cfg.seenTtlRounds}); " +
           "resume with a seenTtlRounds no larger than the run that expired them")
     }
-    var seenMeta: Vector[(Int, String, Long)] =
-      if (round == 0) Vector.empty
-      else (0 until round).flatMap { v =>
-        if (store.isExpired(v)) None
-        else { val t = store.manifest(v).tables("seen_delta"); Some((v, t.path, t.rows)) }
-      }.toVector
-    def activeSeenMeta(r: Int): Vector[(Int, String, Long)] = cfg.seenTtlRounds match {
-      case Some(ttl) => seenMeta.filter { case (v, _, _) => r - v <= ttl }
-      case None => seenMeta
-    }
-    def seenDfAt(r: Int): DataFrame = {
-      val paths = activeSeenMeta(r).map(_._2)
-      if (paths.isEmpty) emptyFrontier(spark).select("url_hash", "url")
-      else spark.read.schema(visitedSchema).parquet(paths: _*).select("url_hash", "url")
-    }
+    var seen = SeenIndex.open(spark, store, round, cfg.seenTtlRounds, bloomThreshold, cfg.bloomShards)
     // ---- adaptive recrawl state: the EPOCH-FROZEN due set ----
     // At every recrawl boundary (rounds ≡ 0 mod recrawlEvery) the fetch
     // history folds into the due url set, which is (a) injected into the
@@ -560,43 +553,24 @@ object CrawlJob {
     var dueFrontierDf: DataFrame = null // url, url_hash, host, depth=0, priority
     var dueFreeze = -1
     def freezeDue(asOf: Int): Unit = {
-      val paths = (0 until asOf).filterNot(store.isExpired)
-        .map(v => store.manifest(v).tables("results").path)
-      val due =
-        if (paths.isEmpty) emptyFrontier(spark)
-        else {
-          val hist = spark.read.schema(resultsSchema).parquet(paths: _*)
-            // rounds ARE the time axis: timestamp_seconds(round) runs
-            // Recrawl's exact integer arithmetic in units of rounds
-            .select(col("url"), timestamp_seconds(col("round")).as("ts"), col("fp"))
-          val d = graft.frontier.Recrawl.dueFilter(hist, "url", "ts", "fp",
-            timestamp_seconds(lit(asOf)),
-            cfg.recrawlMinRounds.get.toLong, cfg.recrawlMaxRounds.get.toLong)
-          // recrawls re-enter as roots (depth 0) ranked by overdue-ness
-          Frontier.withFrontierKeys(
-              d.select(col("url").as("raw_url"), col("priority")), "raw_url")
-            .withColumn("depth", lit(0))
-            .select(frontierCols.map(col): _*)
-        }
+      val due = resultsBefore(spark, store, asOf).fold(emptyFrontier(spark)) { results =>
+        val hist = results
+          // rounds ARE the time axis: timestamp_seconds(round) runs
+          // Recrawl's exact integer arithmetic in units of rounds
+          .select(col("url"), timestamp_seconds(col("round")).as("ts"), col("fp"))
+        val d = graft.frontier.Recrawl.dueFilter(hist, "url", "ts", "fp",
+          timestamp_seconds(lit(asOf)),
+          cfg.recrawlMinRounds.get.toLong, cfg.recrawlMaxRounds.get.toLong)
+        // recrawls re-enter as roots (depth 0) ranked by overdue-ness
+        Frontier.withFrontierKeys(
+            d.select(col("url").as("raw_url"), col("priority")), "raw_url")
+          .withColumn("depth", lit(0))
+          .select(frontierCols.map(col): _*)
+      }
       // small (due urls only) — checkpoint so the whole-history fold
       // runs once per boundary, not once per downstream consumer
       dueFrontierDf = due.localCheckpoint(true)
       dueFreeze = asOf
-    }
-    // seen minus the still-due urls (due AND not refetched since the
-    // freeze): the blocking set every notSeen call uses in adaptive mode
-    def seenWithDue(r: Int): DataFrame = {
-      val base = seenDfAt(r)
-      if (!adaptive || dueFrontierDf == null) base
-      else {
-        val since = seenMeta.filter(_._1 >= dueFreeze).map(_._2)
-        val active =
-          if (since.isEmpty) dueFrontierDf.select("url_hash")
-          else dueFrontierDf.select("url_hash")
-            .join(spark.read.schema(visitedSchema).parquet(since: _*).select("url_hash"),
-              Seq("url_hash"), "left_anti")
-        base.join(active, Seq("url_hash"), "left_anti")
-      }
     }
     // Resume: reconstruct the last freeze (the largest recrawl boundary
     // that already executed) from the persisted results tables — a
@@ -607,154 +581,19 @@ object CrawlJob {
       val lastFreeze = ((round - 1) / cfg.recrawlEvery) * cfg.recrawlEvery
       if (lastFreeze > 0) freezeDue(lastFreeze)
     }
-    var seen: DataFrame = seenWithDue(round)
-    var seenCount: Long = activeSeenMeta(round).map(_._3).sum
+    // the still-due urls (due AND not refetched since the freeze) do not
+    // block: in adaptive mode every seen filter lifts them out
+    def notSeenDf(df: DataFrame): DataFrame = seen.notSeen(df, round,
+      Option(dueFrontierDf).map(_.select("url_hash")
+        .join(seen.seenSince(dueFreeze), Seq("url_hash"), "left_anti")))
 
-    // Bloom sketch maintained INCREMENTALLY: built once (resume) over the
-    // full seen set, then per-round delta sketches (same capacity/fpp →
-    // compatible bit arrays) merged in — no O(seen) aggregation per round.
-    // Rebuilt (amortized, geometric) when the capacity is outgrown.
-    var bloomCap = math.max(bloomThreshold * 8, seenCount * 4).max(1024L)
-    // Sharded sketch (cfg.bloomShards): the 10^10 path — per-hash-range
-    // Bloom FILES in the work dir instead of one broadcast sketch; every
-    // delta is added from round 0 (a shard gap would be a false negative
-    // = a re-crawl, so shards must always cover the full active seen
-    // set). On resume the shards are rebuilt from the seen set once —
-    // a kill between commit and shard-add can otherwise lose a delta.
-    val shardCfg: Option[ShardedBloom.Shards] = cfg.bloomShards.map { s =>
-      ShardedBloom.Shards(s"$workDir/bloom_shards", s,
-        itemsPerShard = math.max(1024L, bloomCap / s), fpp = 0.03)
-    }
-    shardCfg.foreach { sh =>
-      ShardedBloom.clear(sh.dir)
-      if (seenCount > 0) ShardedBloom.add(seen, sh)
-    }
-    // "cuckoo" swaps the single-sketch prefilter for a deletable one
-    // (frontier.CuckooFilter): trace-identical by construction (both
-    // sketches front the SAME exact anti-join), but under a seen TTL
-    // the expired rounds' deltas are DELETED from the sketch per round
-    // instead of accumulating as stale positives until a rebuild
-    val cuckooMode = shardCfg.isEmpty && cfg.seenSketch == "cuckoo"
-    var bloom: Option[BloomFilter] =
-      if (shardCfg.isEmpty && !cuckooMode && seenCount > bloomThreshold)
-        Some(Frontier.buildBloom(seen, bloomCap)) else None
-    var cuckoo: Option[graft.frontier.CuckooFilter] =
-      if (cuckooMode && seenCount > bloomThreshold)
-        Some(graft.frontier.CuckooFilter.build(seen, bloomCap)) else None
-    // rounds whose deltas are already absent from the cuckoo sketch
-    // (deleted, or excluded by a rebuild from the windowed seen)
-    var cuckooDeletedThrough =
-      cfg.seenTtlRounds.map(ttl => round - ttl - 1).getOrElse(-1)
-    // expiry accounting (manifest metrics when cuckooMode): cumulative
-    // deleted entries + fallback rebuild count — the observable proof
-    // that the delete path, not its rebuild safety net, carried expiry
-    var cuckooExpiredDeletes = 0L
-    var cuckooExpiryRebuilds = 0L
-    def bloomAdd(delta: DataFrame): Unit = shardCfg match {
-      case Some(sh) => ShardedBloom.add(delta, sh)
-      case None if cuckooMode =>
-        if (seenCount > bloomThreshold) {
-          if (cuckoo.isEmpty || seenCount > bloomCap / 2) {
-            bloomCap = math.max(seenCount * 4, bloomCap)
-            cuckoo = Some(graft.frontier.CuckooFilter.build(seen, bloomCap))
-            cfg.seenTtlRounds.foreach(ttl => cuckooDeletedThrough = round - ttl - 1)
-          } else {
-            // same no-shared-mutation discipline as the bloom branch:
-            // fold the published sketch INTO the fresh delta sketch
-            // (mergeInPlace only READS its argument) and republish
-            val merged = graft.frontier.CuckooFilter
-              .buildWithBuckets(delta, cuckoo.get.numBuckets)
-            merged.mergeInPlace(cuckoo.get)
-            cuckoo = Some(merged)
-          }
-        }
-      case None if seenCount > bloomThreshold =>
-        if (bloom.isEmpty || seenCount > bloomCap / 2) {
-          bloomCap = math.max(seenCount * 4, bloomCap)
-          bloom = Some(Frontier.buildBloom(seen, bloomCap))
-        } else {
-          // merge INTO the fresh delta sketch and republish the var —
-          // never mutate the already-published object: in local mode a
-          // broadcast can alias it, and bloomAdd now runs concurrently
-          // with the next-epoch job whose plan captured the pre-delta
-          // sketch (OR-only mutation would still be read-safe, but
-          // no-shared-mutation needs no such argument)
-          val merged = Frontier.buildBloom(delta, bloomCap)
-          merged.mergeInPlace(bloom.get)
-          bloom = Some(merged)
-        }
-      case None => ()
-    }
-    // cuckoo expiry: the rounds that leave the TTL window at round `r`
-    // retire by DELETING their deltas from a COPY of the sketch
-    // (republish — in-flight broadcasts of the old sketch never see
-    // mutation). O(expired delta + slot-array memcpy) per shift vs the
-    // bloom path's stale positives. Runs at the end of round r-1, before
-    // retention drops those deltas' files. A missing delta file, a
-    // not-found delete (bookkeeping drift), or a saturated sketch falls
-    // back to a full rebuild from round r's window — the self-healing
-    // path; either way no false negative can be introduced (deletes only
-    // ever remove entries whose round is OUTSIDE the exact-join window).
-    def cuckooExpire(r: Int): Unit = if (cuckooMode && cuckoo.isDefined) {
-      cfg.seenTtlRounds.foreach { ttl =>
-        val expiring = seenMeta.filter { case (v, _, _) =>
-          v > cuckooDeletedThrough && r - v > ttl }
-        if (expiring.nonEmpty) {
-          val cf = cuckoo.get.copySketch()
-          var ok = !cf.saturated
-          var nDeleted = 0L
-          expiring.foreach { case (_, path, _) =>
-            if (ok) {
-              if (!new java.io.File(path).exists()) ok = false
-              else {
-                val it = spark.read.schema(visitedSchema).parquet(path).select("url_hash")
-                  .as[Long](org.apache.spark.sql.Encoders.scalaLong).toLocalIterator()
-                while (ok && it.hasNext) {
-                  ok = cf.delete(it.next())
-                  if (ok) nDeleted += 1
-                }
-              }
-            }
-          }
-          if (ok) { cuckoo = Some(cf); cuckooExpiredDeletes += nDeleted }
-          else {
-            bloomCap = math.max(activeSeenMeta(r).map(_._3).sum * 4, bloomCap)
-            cuckoo = Some(graft.frontier.CuckooFilter.build(seenDfAt(r), bloomCap))
-            cuckooExpiryRebuilds += 1L
-          }
-          cuckooDeletedThrough = math.max(cuckooDeletedThrough, r - ttl - 1)
-        }
-      }
-    }
-    def notSeenDf(df: DataFrame, seenDf: DataFrame): DataFrame = shardCfg match {
-      case Some(sh) => ShardedBloom.notSeen(df, seenDf, sh)
-      case None if cuckooMode => Frontier.notSeenCuckoo(df, seenDf, cuckoo)
-      case None => Frontier.notSeen(df, seenDf, bloom)
-    }
-
-    val debugTiming = sys.env.contains("GRAFT_TIMING")
-    var tPhase = System.nanoTime()
-    var cPhase = compiledClasses
-    def phase(name: String): Unit = {
-      if (debugTiming) {
-        val now = System.nanoTime()
-        val c = compiledClasses
-        println(f"[timing] r$round $name: ${(now - tPhase) / 1e9}%.1fs, ${c - cPhase} classes compiled")
-        tPhase = now; cPhase = c
-      }
-    }
+    val phase = new PhaseTimer(() => s"r$round")
 
     var done = false
     while (!done && round < maxRounds) {
       val t0 = System.nanoTime()
-      tPhase = t0; cPhase = compiledClasses
+      phase.restart()
       var batchIdx = round - epochStart
-      // refresh the seen window (it shifts per round under a TTL; under
-      // adaptive recrawl the due-exclusion shrinks as refetch deltas land)
-      if (cfg.seenTtlRounds.isDefined || (adaptive && dueFrontierDf != null)) {
-        seen = seenWithDue(round)
-        seenCount = activeSeenMeta(round).map(_._3).sum
-      }
 
       // ---- epoch boundary: one-shot W2 batch assignment ----
       // Triggered when the epoch's batches are exhausted or the carry
@@ -783,10 +622,7 @@ object CrawlJob {
       val recrawlDue = adaptive && round > 0 && round % cfg.recrawlEvery == 0
       if (assignedPath == null || batchIdx > maxBatch ||
           carryCount > (assignedTotal - consumed) || rescoreDue || recrawlDue) {
-        if (recrawlDue) {
-          freezeDue(round)
-          seen = seenWithDue(round)
-        }
+        if (recrawlDue) freezeDue(round)
         val input =
           if (round == 0) { val f = initialFrontier(spark, siteDir, rules); phase("epoch-assign/initial-frontier"); f }
           // assignedTotal == 0 → the assigned dir is a zero-row
@@ -797,7 +633,7 @@ object CrawlJob {
           else readBatches(spark, assignedPath, batchIdx, maxBatch)
             .select(frontierCols.map(col): _*) // drop the stored rank
             .unionByName(carryDf)
-        val fresh0 = notSeenDf(mergeFrontier(input), seen)
+        val fresh0 = notSeenDf(mergeFrontier(input))
         // due urls enter AFTER the seen filter (they are, by
         // construction, seen) and merge against any link-rediscovered
         // twin already in the input (min depth, max priority — the
@@ -836,19 +672,12 @@ object CrawlJob {
                 .withColumnRenamed("link_rank", "priority")
                 .select(frontierCols.map(col): _*)
           } else allowed
-        val path = s"${store.root}/data/v$round/assigned"
-        // row count, max batch and batch 0's row count ride the write
-        // job as an Observation — no read-back job, and the zero-row case
-        // (no part files, no inferable schema) falls out as (0, null)
-        // instead of an AnalysisException
-        val asgObs = org.apache.spark.sql.Observation(s"assign_epoch_r$round")
-        observeAssign(Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots), asgObs)
-          .write.partitionBy("batch_no").mode("overwrite").parquet(path)
-        val asgM = asgObs.get
-        assignedTotal = asgM("n").asInstanceOf[Long]
-        maxBatch = if (assignedTotal == 0) -1 else asgM("mb").asInstanceOf[Int]
-        batch0Rows = Some(asgM("n0").asInstanceOf[Long])
-        assignedPath = path
+        val a = writeAssigned(Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots),
+          s"${store.root}/data/v$round/assigned", s"assign_epoch_r$round")
+        assignedPath = a.path
+        assignedTotal = a.total
+        maxBatch = a.maxBatch
+        batch0Rows = Some(a.batch0)
         epochStart = round
         batchIdx = 0
         consumed = 0
@@ -882,7 +711,7 @@ object CrawlJob {
         // merged, seen-filtered, and ranked, and nothing can have
         // entered the seen set since assignment, so the stored
         // within-batch rank IS the round rank. Skips a merge shuffle, a
-        // Bloom/anti-join pass, and a window per round (measured 2–3 s
+        // seen-filter pass, and a window per round (measured 2–3 s
         // of the ~8 s rounds in the budget-unbound bench). Budget-bound
         // epochs (carry present or batchIdx > 0) take the general path,
         // whose re-rank under the fixed key is trace-equivalent —
@@ -899,32 +728,33 @@ object CrawlJob {
             (batchDf0.select(frontierCols.map(col): _*).cache(), sel.cache())
           } else {
             val fr = notSeenDf(
-              mergeFrontier(batchDf0.select(frontierCols.map(col): _*).unionByName(carryDf)),
-              seen).cache()
+              mergeFrontier(batchDf0.select(frontierCols.map(col): _*).unionByName(carryDf))).cache()
             (fr, Scheduler.rankSelect(fr, limits, cfg, budgetRobots).cache())
           }
-        // one action gives the scheduled count AND the trace's per-host
-        // lineage (the manifest requirement): when the round touches
-        // ≤10k hosts (the common case — politeness bounds hosts/round)
-        // the groupBy result IS the complete lineage; only a >10k-host
-        // round pays a second pass for the bounded top-N + rollup
+        // one query gives the scheduled count AND the trace's per-host
+        // lineage (the manifest requirement): each partition of the
+        // per-host counts keeps its top maxLineageParts hosts by (count
+        // DESC, host ASC), the driver merges those, and the row total
+        // rides the same query as an Observation. The lineage is every
+        // host of a round that touches fewer (the common case —
+        // politeness bounds hosts/round), else the top ones plus an
+        // `<other>` rollup. (An orderBy + limit here is replanned by AQE
+        // into a global sort once it learns the host count fits the
+        // limit — a range-sampling job and a shuffle more.)
         val maxLineageParts = 10000
+        val byCountDesc = Ordering.by[(String, Long), (Long, String)] { case (h, n) => (-n, h) }
         def lineageAndCount(): (Long, Map[String, Long]) = {
-          val hostRows = selected.groupBy("host").count()
-            .limit(maxLineageParts + 1).collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-          if (hostRows.length <= maxLineageParts)
-            (hostRows.map(_._2).sum, hostRows.toMap)
-          else {
-            val hc = selected.groupBy("host").count().cache()
-            val n = hc.agg(coalesce(sum("count"), lit(0L))).head.getLong(0)
-            val top = hc.orderBy(desc("count"), asc("host")).limit(maxLineageParts)
-              .collect().map(r => (r.getString(0), r.getLong(1)))
-            hc.unpersist()
-            val m = top.toMap
-            val counted = top.map(_._2).sum
-            (n, if (n > counted) m + ("<other>" -> (n - counted)) else m)
-          }
+          def top(hs: Array[(String, Long)]) = hs.sorted(byCountDesc).take(maxLineageParts)
+          val obs = org.apache.spark.sql.Observation(s"lineage_r$round")
+          val enc = org.apache.spark.sql.Encoders.tuple(
+            org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.scalaLong)
+          val hosts = top(selected.groupBy("host").count()
+            .observe(obs, coalesce(sum("count"), lit(0L)).as("n"))
+            .as(enc).mapPartitions(rows => top(rows.toArray).iterator)(enc)
+            .collect())
+          val n = obs.get("n").asInstanceOf[Long]
+          val counted = hosts.map(_._2).sum
+          (n, if (n > counted) hosts.toMap + ("<other>" -> (n - counted)) else hosts.toMap)
         }
         // Fast path: the scheduled count is KNOWN analytically (the whole
         // pruned batch, min'd with the W4 cap), so the lineage groupBy —
@@ -947,7 +777,7 @@ object CrawlJob {
             (n, scala.concurrent.Future.successful(m))
           }
         // A4 cache-stats accounting (cache.py:598-649 analogue): requests
-        // entering this round vs requests skipped by the seen set (Bloom
+        // entering this round vs requests skipped by the seen set (sketch
         // fast-path + exact anti-join + in-round dedup merge = the
         // request-cache hit semantics). fresh is already materialized by
         // the schedule actions, so this count reads cached blocks.
@@ -966,51 +796,35 @@ object CrawlJob {
           fresh.unpersist(); selected.unpersist()
           if (epochGate != null) epochGate.unpersist()
         } else {
-          // "fetch" = equi join against the pages table (J4). The batch is
-          // politeness-budget-bounded, so broadcast IT into the pages scan:
-          // pages stream through a hash probe with no shuffle/sort of the
-          // (html-payload-heavy) big side. An SMJ here re-sorts the whole
-          // pages table every round. At the 10^10 design point with 10^8
-          // batches, the equivalent is a bucketed/storage-partitioned pages
-          // table joined on url_hash (no big-side shuffle either); AQE
-          // skew-join covers the fallback path.
-          val batchCols = selected.select("url", "url_hash", "host", "depth", "rank")
-          val fetched = aliasMap match {
-            case None => cfg.bucketedPagesTable match {
-              case Some(_) =>
-                // bucketed fetch: no broadcast hint — the bucket-aligned
-                // pages scan has no Exchange either way, and letting the
-                // planner shuffle only the batch side into bucket
-                // alignment is the 10^10 shape (a broadcast batch also
-                // preserves it; AQE picks per batch size).
-                pages.join(batchCols, Seq("url"), "inner")
-              case None =>
-                if (nScheduled <= 2000000L)
-                  pages.join(broadcast(batchCols), Seq("url"), "inner")
-                else selected.join(pages, Seq("url"), "inner")
-            }
-            case Some(am) =>
-              // alias resolution folds into the batch side of the SAME
-              // fetch plan: rows whose chain failed (redir set,
-              // redirect_final null) are unfetchable and land in
-              // `missing`; the rest fetch the destination's payload and
-              // attribute it to the REQUESTED url (scraper.py:158-169 —
-              // cache key, conversion base, chunk source_url all use the
-              // requested url).
-              val bf = batchCols.join(broadcast(am), Seq("url"), "left")
-                .filter(col("redir").isNull || col("redirect_final").isNotNull)
-                .select(col("url").as("req_url"), col("url_hash"), col("host"),
-                  col("depth"), col("rank"),
-                  coalesce(col("redirect_final"), col("url")).as("fetch_url"))
-              val pj = cfg.bucketedPagesTable match {
-                case Some(_) => pages.join(bf, pages("url") === bf("fetch_url"), "inner")
-                case None =>
-                  if (nScheduled <= 2000000L)
-                    pages.join(broadcast(bf), pages("url") === bf("fetch_url"), "inner")
-                  else pages.join(bf, pages("url") === bf("fetch_url"), "inner")
-              }
-              pj.drop("url").withColumnRenamed("req_url", "url")
+          // "fetch" = ONE equi join of the pages table on the batch's
+          // fetch_url (J4). With a redirects side table, alias resolution
+          // folds into the batch side: rows whose chain failed (redir
+          // set, redirect_final null) are unfetchable and land in
+          // `missing`; the rest fetch the destination's payload and
+          // attribute it to the REQUESTED url (scraper.py:158-169 — cache
+          // key, conversion base, chunk source_url all use it). The batch
+          // is politeness-budget-bounded, so it is broadcast into the
+          // pages scan: pages stream through a hash probe with no
+          // shuffle/sort of the (html-payload-heavy) big side. Over the
+          // bucketed pages table there is no hint: the bucket-aligned scan
+          // has no Exchange either way, and shuffling only the batch side
+          // into bucket alignment is the 10^10 shape (AQE picks per batch
+          // size); AQE skew-join covers a too-large batch.
+          val requested = selected.select(col("url").as("req_url"), col("url_hash"),
+            col("host"), col("depth"), col("rank"))
+          val batch = aliasMap match {
+            case None => requested.withColumn("fetch_url", col("req_url"))
+            case Some(am) => requested
+              .join(broadcast(am.withColumnRenamed("url", "req_url")), Seq("req_url"), "left")
+              .filter(col("redir").isNull || col("redirect_final").isNotNull)
+              .withColumn("fetch_url", coalesce(col("redirect_final"), col("req_url")))
+              .drop("redirect_final", "redir")
           }
+          val batchSide =
+            if (cfg.bucketedPagesTable.isEmpty && nScheduled <= 2000000L) broadcast(batch)
+            else batch
+          val fetched = pages.join(batchSide, pages("url") === batchSide("fetch_url"), "inner")
+            .drop(pages("url")).withColumnRenamed("req_url", "url")
           // redirect accounting rides the extract write (url != fetch_url
           // ⇔ the row arrived via an alias) — no extra job
           val redirObs = org.apache.spark.sql.Observation(s"redir_r$round")
@@ -1072,8 +886,7 @@ object CrawlJob {
           // fault filter is re-applied so only payloads that actually
           // arrived are archived. Capture attribution matches extract:
           // requested url, the matched page row's warc_ts.
-          var nWarcCaptures = -1L
-          if (cfg.archiveWarc) {
+          val nWarcCaptures = if (!cfg.archiveWarc) -1L else {
             val src = faultMap match {
               case None => fetched
               case Some(fm) => graft.frontier.FetchRetry
@@ -1085,8 +898,8 @@ object CrawlJob {
               s"${store.root}/data/v$round/warc", gzip = true)
             idx.write.mode("overwrite")
               .parquet(s"${store.root}/data/v$round/warc_index")
-            nWarcCaptures = idx.count() // local: idx is checkpointed
             phase("warc-archive")
+            idx.count() // local: idx is checkpointed
           }
 
           // frontier growth: outlinks → canonical keys → depth+1 (G6),
@@ -1100,10 +913,10 @@ object CrawlJob {
             .withColumn("priority", lit(null).cast("double"))
             .select(frontierCols.map(col): _*)
           // second anti-join excludes THIS round's selections (not yet in
-          // the committed seen set / Bloom). The right side is just the
+          // the committed seen set). The right side is just the
           // round's url_hash column (≤ budget × 8 bytes) — broadcast it
           // so the 10M-row outlink set is not shuffled for it.
-          val newFresh = notSeenDf(newLinks, seen)
+          val newFresh = notSeenDf(newLinks)
             .join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
           val (newAllowed, newDenied, newGate) = Scheduler.robotsGate(newFresh, robotsDf)
           phase("links")
@@ -1149,24 +962,16 @@ object CrawlJob {
             visited.write.mode("overwrite").parquet(visitedPath)
           }(scala.concurrent.ExecutionContext.global)
 
-          // Seen-set + Bloom maintenance CHAINED onto the visited write
-          // and overlapped with the epoch-next assign below (it was the
-          // last serialized job of every round). Safe because (a) the
-          // main thread does not touch seenMeta/seen/seenCount/bloom
-          // between this launch and the Await (commit + state advance
-          // read neither), (b) this round's in-flight plans captured
-          // their own references to the PRE-delta sketch, which bloomAdd
-          // never mutates (the merge path now merges INTO the fresh
-          // delta sketch and republishes the var; the sharded path's
-          // publish is generation-fenced), and (c) the await below
-          // happens-before every next-round read of these vars.
-          val thisRound = round
-          val bloomF = visitedF.map { _ =>
-            val nDen = visitObs.get("n_denied").asInstanceOf[Long]
-            seenMeta = seenMeta :+ ((thisRound, visitedPath, nScheduled + nDen))
-            seen = seenDfAt(thisRound)
-            seenCount += nScheduled + nDen
-            bloomAdd(spark.read.schema(visitedSchema).parquet(visitedPath))
+          // The seen index takes the round's delta CHAINED onto the
+          // visited write, overlapped with the epoch-next assign below
+          // (it was the last serialized job of every round); the index
+          // is immutable, so this round's in-flight plans keep the
+          // sketch they captured, and the main thread takes the next
+          // index at the await after commit
+          val (thisRound, seenNow) = (round, seen)
+          val seenF = visitedF.map { _ =>
+            seenNow.add(thisRound, visitedPath,
+              nScheduled + visitObs.get("n_denied").asInstanceOf[Long])
           }(scala.concurrent.ExecutionContext.global)
 
           // Epoch fast-path: this round consumed the LAST assigned batch,
@@ -1185,37 +990,28 @@ object CrawlJob {
             (round + 1) % cfg.linkPriorityEvery == 0) ||
             (adaptive && (round + 1) % cfg.recrawlEvery == 0)
           val preAssignNext = epochExhausted && !nextIsRescore
-          var nextAssignedPath: String = null
-          var nextTotal = 0L
-          var nextMax = -1
-          var nextBatch0 = 0L
-          var nCarry = 0L
           val carryPath = s"${store.root}/data/v$round/carry"
-          if (preAssignNext) {
-            nextAssignedPath = s"${store.root}/data/v$round/assigned_next"
-            // stats ride the write job (see the epoch-assign Observation)
-            val nxObs = org.apache.spark.sql.Observation(s"assign_next_r$round")
-            observeAssign(Scheduler.assignBatches(carryNext, limits, cfg, budgetRobots), nxObs)
-              .write.partitionBy("batch_no").mode("overwrite").parquet(nextAssignedPath)
-            val nxM = nxObs.get
-            nextTotal = nxM("n").asInstanceOf[Long]
-            nextMax = if (nextTotal == 0) -1 else nxM("mb").asInstanceOf[Int]
-            nextBatch0 = nxM("n0").asInstanceOf[Long]
-            phase("epoch-next")
-          } else {
-            // the carry's row count rides its write, as the assign's does
-            val carryObs = org.apache.spark.sql.Observation(s"carry_r$round")
-            carryNext.observe(carryObs, count(lit(1)).as("n"))
-              .write.mode("overwrite").parquet(carryPath)
-            nCarry = carryObs.get("n").asInstanceOf[Long]
-          }
+          val (next, nCarry) =
+            if (preAssignNext) {
+              val a = writeAssigned(Scheduler.assignBatches(carryNext, limits, cfg, budgetRobots),
+                s"${store.root}/data/v$round/assigned_next", s"assign_next_r$round")
+              phase("epoch-next")
+              (Some(a), 0L)
+            } else {
+              // the carry's row count rides its write, as the assign's does
+              val carryObs = org.apache.spark.sql.Observation(s"carry_r$round")
+              carryNext.observe(carryObs, count(lit(1)).as("n"))
+                .write.mode("overwrite").parquet(carryPath)
+              (None, carryObs.get("n").asInstanceOf[Long])
+            }
           scala.concurrent.Await.result(visitedF, scala.concurrent.duration.Duration.Inf)
           val nDenied = visitObs.get("n_denied").asInstanceOf[Long]
 
           val elapsed = (System.nanoTime() - t0) / 1e9
-          val (committedEpochStart, committedTotal, committedConsumed, committedMax) =
-            if (preAssignNext) (round + 1, nextTotal, 0L, nextMax)
-            else (epochStart, assignedTotal, consumed + nBatchRows, maxBatch)
+          val (committedEpochStart, committedTotal, committedConsumed, committedMax) = next match {
+            case Some(a) => (round + 1, a.total, 0L, a.maxBatch)
+            case None => (epochStart, assignedTotal, consumed + nBatchRows, maxBatch)
+          }
           store.commit(spark, round,
             Map.empty,
             Map(
@@ -1245,10 +1041,7 @@ object CrawlJob {
               (if (cfg.archiveWarc)
                 Map("warc_captures" -> nWarcCaptures.toDouble)
               else Map.empty) ++
-              (if (cuckooMode)
-                Map("cuckoo_expired_deletes" -> cuckooExpiredDeletes.toDouble,
-                  "cuckoo_expiry_rebuilds" -> cuckooExpiryRebuilds.toDouble)
-              else Map.empty),
+              seen.counters,
             partitionKeyCol = Some("host"),
             knownCounts = Map(
               "visited" -> (nScheduled + nDenied),
@@ -1260,7 +1053,7 @@ object CrawlJob {
               "carry" -> nCarry),
             preWritten = Map("results" -> resultsPath,
               "visited" -> visitedPath,
-              "assigned" -> (if (preAssignNext) nextAssignedPath else assignedPath)) ++
+              "assigned" -> next.fold(assignedPath)(_.path)) ++
               (if (preAssignNext) Map.empty else Map("carry" -> carryPath)),
             knownLineage = Map("trace" -> scala.concurrent.Await.result(
               lineageF, scala.concurrent.duration.Duration.Inf)),
@@ -1276,29 +1069,27 @@ object CrawlJob {
           phase("commit")
 
           // advance state to the committed round
-          if (preAssignNext) {
-            assignedPath = nextAssignedPath
-            epochStart = round + 1
-            assignedTotal = nextTotal
-            maxBatch = nextMax
-            batch0Rows = Some(nextBatch0)
-            consumed = 0
-            carryDf = emptyFrontier(spark)
-            carryCount = 0
-          } else {
-            carryCount = nCarry
-            carryDf = store.readTable(spark, round, "carry", Some(frontierSchema))
-            consumed += nBatchRows
+          next match {
+            case Some(a) =>
+              assignedPath = a.path
+              epochStart = round + 1
+              assignedTotal = a.total
+              maxBatch = a.maxBatch
+              batch0Rows = Some(a.batch0)
+              consumed = 0
+              carryDf = emptyFrontier(spark)
+              carryCount = 0
+            case None =>
+              carryCount = nCarry
+              carryDf = store.readTable(spark, round, "carry", Some(frontierSchema))
+              consumed += nBatchRows
           }
-          // seen-window advance + sketch add ran on the bloomF thread,
-          // overlapped with the epoch-next assign and the commit; this
-          // await publishes those var writes to every later read
-          scala.concurrent.Await.result(bloomF, scala.concurrent.duration.Duration.Inf)
-          phase("bloom")
+          seen = scala.concurrent.Await.result(seenF, scala.concurrent.duration.Duration.Inf)
+          phase("seen")
 
           // the sketch drops the deltas leaving the window first (a
           // resumed run builds its sketch from the window instead)
-          if (round + 1 < maxRounds) cuckooExpire(round + 1)
+          if (round + 1 < maxRounds) seen = seen.expire(round + 1)
           // retention: rounds that left the TTL window hold no table any
           // future round (or resume) reads — drop their data files,
           // keep manifests. The active epoch's `assigned` dir lives at
@@ -1342,7 +1133,7 @@ object CrawlJob {
 
   /** One-time JVM warmup: a 200-page micro-crawl on a throwaway site,
     * exercising every hot path of the real crawl (extract codegen, the
-    * window rank, dynamic-partition writes, Bloom, commit) so the timed
+    * window rank, dynamic-partition writes, seen sketch, commit) so the timed
     * run below measures the ENGINE, not first-use JIT + codegen
     * compilation (~30 s constant regardless of core count — a pure
     * distortion of single-run scaling cells; the multi-run median bench
@@ -1355,7 +1146,7 @@ object CrawlJob {
     val site = java.nio.file.Files.createTempDirectory("graft_warm_site").toString
     val wd = java.nio.file.Files.createTempDirectory("graft_warm_wd").toString
     graft.synth.SyntheticWeb.generate(spark, site, 200, 4, seed = 7L, partitions = 4)
-    // bloomThreshold 50 forces the Bloom build/filter path at 200 pages
+    // bloomThreshold 50 forces the seen sketch's build/filter path at 200 pages
     run(spark, site, wd, Scheduler.Config(defaultRps = 50.0, maxDepth = 2),
       maxRounds = 3, bloomThreshold = 50L)
     Seq(site, wd).foreach(graft.util.LocalFs.deleteRecursively)
@@ -1373,7 +1164,7 @@ object CrawlJob {
     // layered config: defaults ← spark.graft.* conf (spark-submit --conf)
     val t0 = System.nanoTime()
     // sketch engagement point (run() default 100k suits the bench
-    // corpus; a TTL/cuckoo CLI run on a small corpus lowers it)
+    // corpus; a TTL CLI run on a small corpus lowers it)
     val bloomThreshold = spark.conf.getOption("spark.graft.bloomThreshold")
       .map(_.toLong).getOrElse(100000L)
     val last = run(spark, siteDir, workDir, Scheduler.Config.fromSpark(spark),

@@ -325,6 +325,22 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(sparkSeen(workKill, lastResumed) == ref.seen)
   }
 
+  test("a copied work dir resumes from its own files: same trace and seen set with the original deleted") {
+    val oneShot = java.nio.file.Files.createTempDirectory("graft_copy_ref").toString
+    val last = runSparkCrawl(oneShot)
+    val orig = java.nio.file.Files.createTempDirectory("graft_copy_orig")
+    runSparkCrawl(orig.toString, maxRounds = 2)
+    val copy = java.nio.file.Files.createTempDirectory("graft_copy").resolve("wd")
+    scala.util.Using.resource(java.nio.file.Files.walk(orig)) { paths =>
+      paths.forEach(p => java.nio.file.Files.copy(p, copy.resolve(orig.relativize(p))))
+    }
+    graft.util.LocalFs.deleteRecursively(orig)
+    val lastCopy = runSparkCrawl(copy.toString)
+    assert(lastCopy == last)
+    assert(sparkTrace(copy.toString, lastCopy) == sparkTrace(oneShot, last))
+    assert(sparkSeen(copy.toString, lastCopy) == sparkSeen(oneShot, last))
+  }
+
   test("robots-denied urls are never fetched (/sec6/ disallowed, page0 allowed back)") {
     import spark.implicits._
     val workDir = java.nio.file.Files.createTempDirectory("graft_robots").toString

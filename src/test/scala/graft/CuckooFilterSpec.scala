@@ -63,6 +63,45 @@ class CuckooFilterSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](a.mergeInPlace(c))
   }
 
+  test("subtract equals deleting the sketch's keys one by one") {
+    val rounds = (0 until 5).map(r => keys(2000, 200L + r))
+    val byKey = CuckooFilter(10000L)
+    rounds.foreach(_.foreach(byKey.insert))
+    val bySketch = byKey.copySketch()
+    rounds.take(3).foreach(_.foreach(k => assert(byKey.delete(k))))
+    val leaving = CuckooFilter(10000L)
+    rounds.take(3).foreach(_.foreach(leaving.insert))
+    assert(bySketch.subtract(leaving).contains(6000L))
+    rounds.drop(3).foreach(_.foreach(k =>
+      assert(bySketch.mightContain(k), "live round lost after subtracting older rounds")))
+    val probe = keys(20000, 300L)
+    assert(probe.forall(k => bySketch.mightContain(k) == byKey.mightContain(k)))
+    // an entry the filter does not hold fails the subtraction
+    val stranger = CuckooFilter(10000L)
+    stranger.insert(rounds(0)(0))
+    assert(bySketch.subtract(stranger).isEmpty)
+    assertThrows[IllegalArgumentException](bySketch.subtract(CuckooFilter(100000L)))
+  }
+
+  test("subtract removes stash entries; a saturated delta refuses") {
+    // 16 buckets = 64 slots: inserting past them parks entries in the stash
+    val ks = keys(80, 8L)
+    val cf = CuckooFilter(16L)
+    ks.foreach(cf.insert)
+    assert(!cf.saturated && cf.stashSize > 0)
+    val same = CuckooFilter(16L) // same inserts in the same order: same layout
+    ks.foreach(same.insert)
+    assert(cf.subtract(same).contains(ks.length.toLong))
+    assert(cf.stashSize == 0 && !ks.exists(cf.mightContain))
+    // a delta sketch that saturated no longer names its entries
+    val saturated = CuckooFilter(16L)
+    keys(100000, 9L).foreach(saturated.insert)
+    assert(saturated.saturated)
+    val target = CuckooFilter(16L)
+    ks.take(10).foreach(target.insert)
+    assert(target.subtract(saturated).isEmpty)
+  }
+
   test("serialization round-trip preserves answers") {
     val cf = CuckooFilter(5000L)
     val ks = keys(4000, 6L)
