@@ -172,9 +172,6 @@ final class SnapshotStore(val root: String) {
     }
   }
 
-  def hasTable(version: Int, name: String): Boolean =
-    manifest(version).tables.contains(name)
-
   private def expiredMarker(v: Int): Path = snapshotsDir.resolve(s"v$v.expired")
 
   def isExpired(version: Int): Boolean = Files.exists(expiredMarker(version))

@@ -257,28 +257,16 @@ object Scheduler {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= coalesce(col("budget"), lit(1L)))
       .drop("budget")
-    // W4: global cap per round — deterministic (priority DESC NULLS
-    // LAST, host, rank); (host, rank) is unique so the order is total.
-    // orderBy+limit → TakeOrderedAndProject (per-partition heap), not a
-    // global sort; g is small by definition (a per-round request cap).
-    cfg.globalBudget match {
-      case Some(g) => selected
-        .orderBy(desc_nulls_last("priority"), asc("host"), asc("rank"))
-        .limit(g.toInt)
-      case None => selected
-    }
+    globalCap(selected, cfg)
   }
 
-  /** One scheduling pass over a full frontier: robots-gate then rank.
-    * Returns (selected, robotsDenied, gateCache). Kept as the simple
-    * single-shot API; the crawl loop uses robotsGate at insert +
-    * assignBatches per epoch + rankSelect per round instead. */
-  def schedule(frontier: DataFrame, robots: DataFrame, limits: DataFrame, cfg: Config)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (allowed, denied, gated) = robotsGate(frontier, robots)
-    (rankSelect(allowed, limits, cfg,
-      if (cfg.honorCrawlDelay) Some(robots) else None), denied, gated)
-  }
+  /** W4: the global cap per round over ranked rows — deterministic
+    * (priority DESC NULLS LAST, host, rank); (host, rank) is unique so the
+    * order is total. orderBy+limit → TakeOrderedAndProject (per-partition
+    * heap), not a global sort; g is small by definition (a per-round
+    * request cap). */
+  def globalCap(ranked: DataFrame, cfg: Config): DataFrame = cfg.globalBudget.fold(ranked)(g =>
+    ranked.orderBy(desc_nulls_last("priority"), asc("host"), asc("rank")).limit(g.toInt))
 
   /** W2 one-shot batch assignment (SURVEY §2.6): rank the WHOLE frontier
     * per host once per scheduling epoch and assign

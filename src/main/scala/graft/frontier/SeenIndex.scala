@@ -24,15 +24,19 @@ import graft.checkpoint.SnapshotStore
   * through an arbitrarily long TTL crawl. Either sketch is a prefilter
   * only: the trace is the exact anti-join's.
   *
-  * An immutable value: `add` and `expire` return the next index and
-  * never mutate a sketch a running plan may hold (they work on a copy),
-  * so `add` can run on another thread while the round's next-epoch
-  * assign still reads the previous index. */
+  * An immutable value for one round: `add` and `expire` return the next
+  * index and never mutate a sketch a running plan may hold (they work on
+  * a copy), so `add` can run on another thread while the round's
+  * next-epoch assign still reads the previous index. The round's window
+  * relation is built once, by `open` or by the `add` that ends the
+  * previous round, so `notSeen` lists no delta files. */
 final case class SeenIndex private (
     spark: SparkSession,
     ttl: Option[Int],
     threshold: Long,
+    round: Int, // the round this index serves
     deltas: Vector[SeenIndex.Delta], // the retained rounds, oldest first
+    window: DataFrame, // the (url_hash, url) rows round `round` treats as seen
     shards: Option[ShardedBloom.Shards],
     cuckoo: Option[CuckooFilter],
     capacity: Long,
@@ -52,19 +56,22 @@ final case class SeenIndex private (
     if (ds.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), deltaSchema)
     else spark.read.schema(deltaSchema).parquet(ds.map(_.path): _*)
 
+  /** This index moved to round `r`, with that round's window. */
+  private def at(r: Int): SeenIndex =
+    copy(round = r, window = read(activeAt(r)).select("url_hash", "url"))
+
   /** The (url_hash, url) rows round `r` treats as seen. */
-  private def seenAt(r: Int): DataFrame = read(activeAt(r)).select("url_hash", "url")
+  private def seenAt(r: Int): DataFrame = if (r == round) window else at(r).window
 
   /** The url_hash rows of the deltas of round `v` and later. */
   def seenSince(v: Int): DataFrame = read(deltas.filter(_.round >= v)).select("url_hash")
 
-  /** Rows of `df` (with url_hash) that round `r` has not seen. `except`
+  /** Rows of `df` (with url_hash) that this round has not seen. `except`
     * (url_hash) lifts urls out of the blocking set — adaptive recrawl's
     * due urls; the sketch may still hold them, which only sends them to
     * the exact join. */
-  def notSeen(df: DataFrame, r: Int, except: Option[DataFrame] = None): DataFrame = {
-    val all = seenAt(r)
-    val exact = except.fold(all)(e => all.join(e, Seq("url_hash"), "left_anti"))
+  def notSeen(df: DataFrame, except: Option[DataFrame] = None): DataFrame = {
+    val exact = except.fold(window)(e => window.join(e, Seq("url_hash"), "left_anti"))
     shards match {
       case Some(sh) => ShardedBloom.notSeen(df, exact, sh)
       case None =>
@@ -76,12 +83,12 @@ final case class SeenIndex private (
     }
   }
 
-  /** The index after round `round` committed its delta of `rows` rows at
-    * `path`. The cuckoo merges the delta's sketch into a copy of the
-    * published one, or rebuilds from the window when it would pass half
-    * its capacity. */
-  def add(round: Int, path: String, rows: Long): SeenIndex = {
-    val next = copy(deltas = deltas :+ Delta(round, path, rows))
+  /** The index for the next round, after this round committed its delta
+    * of `rows` rows at `path`. The cuckoo merges the delta's sketch into a
+    * copy of the published one, or rebuilds from the window when it would
+    * pass half its capacity. */
+  def add(path: String, rows: Long): SeenIndex = {
+    val next = copy(deltas = deltas :+ Delta(round, path, rows)).at(round + 1)
     val n = next.rowsAt(round)
     lazy val delta = read(Seq(next.deltas.last))
     shards match {
@@ -102,16 +109,17 @@ final case class SeenIndex private (
       deletedThrough = ttl.fold(deletedThrough)(t => r - t - 1))
   }
 
-  /** The index for round `r`: the cuckoo drops the deltas that left the
-    * TTL window, subtracting one sketch of them, built on executors at
-    * the same geometry, from a copy of the published sketch. Run before
-    * retention drops their files. A missing file, an entry not found
-    * (bookkeeping drift) or a saturated sketch rebuilds from round `r`'s
-    * window instead; either way no false negative can arise, since only
-    * entries of rounds outside the exact window are removed. */
-  def expire(r: Int): SeenIndex = (cuckoo, ttl) match {
+  /** This index with the deltas that left the TTL window dropped from
+    * the cuckoo sketch (the window is already without them): one sketch of
+    * them, built on executors at the same geometry, is subtracted from a
+    * copy of the published sketch. Run before retention drops their
+    * files. A missing file, an entry not found (bookkeeping drift) or a
+    * saturated sketch rebuilds from the window instead; either way no
+    * false negative can arise, since only entries of rounds outside the
+    * exact window are removed. */
+  def expire(): SeenIndex = (cuckoo, ttl) match {
     case (Some(published), Some(t)) =>
-      val leaving = deltas.filter(d => d.round > deletedThrough && r - d.round > t)
+      val leaving = deltas.filter(d => d.round > deletedThrough && round - d.round > t)
       if (leaving.isEmpty) this
       else {
         val cf = published.copySketch()
@@ -120,9 +128,9 @@ final case class SeenIndex private (
           else cf.subtract(CuckooFilter.buildWithBuckets(read(leaving), cf.numBuckets))
         val next = removed match {
           case Some(n) => copy(cuckoo = Some(cf), expiredDeletes = expiredDeletes + n)
-          case None => rebuilt(r).copy(expiryRebuilds = expiryRebuilds + 1)
+          case None => rebuilt(round).copy(expiryRebuilds = expiryRebuilds + 1)
         }
-        next.copy(deletedThrough = math.max(next.deletedThrough, r - t - 1))
+        next.copy(deletedThrough = math.max(next.deletedThrough, round - t - 1))
       }
     case _ => this
   }
@@ -145,17 +153,21 @@ object SeenIndex {
     StructType.fromDDL("round INT, host STRING, rank INT, url STRING, url_hash BIGINT")
 
   /** The seen set for round `round` of the crawl in `store`: the deltas
-    * of every retained earlier round, and the sketch over the window
+    * of every retained earlier round, the sketch over the window
     * (sharded files rebuilt from it on every open — a kill between
-    * commit and a shard add could otherwise lose a delta). */
+    * commit and a shard add could otherwise lose a delta), and the
+    * cumulative expiry counters of the last manifest. */
   def open(spark: SparkSession, store: SnapshotStore, round: Int, ttl: Option[Int],
            threshold: Long, bloomShards: Option[Int]): SeenIndex = {
     val ds = (0 until round).filterNot(store.isExpired).map { v =>
       val t = store.manifest(v).tables("seen_delta")
       Delta(v, t.path, t.rows)
     }.toVector
-    val empty = SeenIndex(spark, ttl, threshold, ds, None, None, 0L,
-      ttl.fold(-1)(t => round - t - 1), 0L, 0L)
+    val last = if (round == 0) Map.empty[String, Double] else store.manifest(round - 1).metrics
+    def counter(k: String): Long = last.getOrElse(k, 0.0).toLong
+    val empty = SeenIndex(spark, ttl, threshold, round, ds, spark.emptyDataFrame, None, None, 0L,
+      ttl.fold(-1)(t => round - t - 1),
+      counter("cuckoo_expired_deletes"), counter("cuckoo_expiry_rebuilds")).at(round)
     val n = empty.rowsAt(round)
     val base = empty.copy(capacity = math.max(threshold * 8, n * 4).max(1024L))
     bloomShards match {

@@ -49,9 +49,9 @@ import graft.sitemap.Sitemap
   */
 object CrawlJob {
 
-  /** One-pass extraction product for a fetched page. */
-  /** `n_chunks` is denormalized so per-round accounting reads a plain
-    * int column instead of materializing the chunk array column. */
+  /** One-pass extraction product for a fetched page. `n_chunks` is
+    * denormalized so per-round accounting reads a plain int column
+    * instead of materializing the chunk array column. */
   final case class Extracted(
       url: String, url_hash: Long, host: String, depth: Int,
       title: String, markdown: String, outlinks: Seq[String],
@@ -161,9 +161,36 @@ object CrawlJob {
     .add("round", IntegerType, nullable = false).add("fp", LongType, nullable = false)
 
   /** An epoch's batch assignment as written: its row count, max batch
-    * (-1 when empty), and batch 0's row count (the first round of the
-    * epoch reads it instead of counting). */
-  private final case class Assigned(path: String, total: Long, maxBatch: Int, batch0: Long)
+    * (-1 when empty), and batch 0's row count when it is known without a
+    * count job — the assign write observed it, or batch 0 is all there is
+    * (the first round of the epoch reads it instead of counting). */
+  private final case class Assigned(path: String, total: Long, maxBatch: Int, batch0: Option[Long])
+
+  /** The epoch in progress: the round that assigned it, its batches, and
+    * the assigned rows whose batch has been consumed. A crawl resumes it
+    * from the last manifest (`of`) and commits it (`metrics`): the only
+    * reader and writer of its four manifest keys. */
+  private final case class Epoch(start: Int, assigned: Assigned, consumed: Long) {
+    def metrics: Map[String, Double] = Map(
+      "epoch_start" -> start.toDouble,
+      "assigned_total" -> assigned.total.toDouble,
+      "assigned_consumed" -> consumed.toDouble,
+      "assigned_max_batch" -> assigned.maxBatch.toDouble)
+  }
+
+  private object Epoch {
+    def of(m: SnapshotStore.Manifest): Epoch = {
+      val total = m.metrics("assigned_total").toLong
+      val maxBatch = m.metrics("assigned_max_batch").toInt
+      Epoch(m.metrics("epoch_start").toInt,
+        Assigned(m.tables("assigned").path, total, maxBatch, Option.when(maxBatch <= 0)(total)),
+        m.metrics("assigned_consumed").toLong)
+    }
+  }
+
+  /** A long metric of a completed Observation. */
+  private def observed(obs: org.apache.spark.sql.Observation, key: String): Long =
+    obs.get(key).asInstanceOf[Long]
 
   /** Write `batches` partitioned by batch_no to `path`. The stats ride
     * the write job as an Observation — no read-back job, and the
@@ -174,9 +201,8 @@ object CrawlJob {
     batches.observe(obs, count(lit(1)).as("n"), max("batch_no").as("mb"),
         count(when(col("batch_no") === 0, 1)).as("n0"))
       .write.partitionBy("batch_no").mode("overwrite").parquet(path)
-    val m = obs.get
-    val n = m("n").asInstanceOf[Long]
-    Assigned(path, n, if (n == 0) -1 else m("mb").asInstanceOf[Int], m("n0").asInstanceOf[Long])
+    val n = observed(obs, "n")
+    Assigned(path, n, if (n == 0) -1 else obs.get("mb").asInstanceOf[Int], Some(observed(obs, "n0")))
   }
 
   /** Batches `from` to `to` of an `assigned` table, read as their
@@ -192,15 +218,14 @@ object CrawlJob {
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** `GRAFT_TIMING` phase lines: each call prints the wall time and the
-    * generated classes compiled since the previous call (or `restart`). */
-  private final class PhaseTimer(prefix: () => String) {
+    * generated classes compiled since the previous call. */
+  private final class PhaseTimer(prefix: String) {
     private val on = sys.env.contains("GRAFT_TIMING")
     private var t = System.nanoTime()
     private var c = compiledClasses
-    def restart(): Unit = { t = System.nanoTime(); c = compiledClasses }
     def apply(name: String): Unit = if (on) {
       val (now, cNow) = (System.nanoTime(), compiledClasses)
-      println(f"[timing] ${prefix()} $name: ${(now - t) / 1e9}%.1fs, ${cNow - c} classes compiled")
+      println(f"[timing] $prefix $name: ${(now - t) / 1e9}%.1fs, ${cNow - c} classes compiled")
       t = now; c = cNow
     }
   }
@@ -273,7 +298,7 @@ object CrawlJob {
         org.apache.spark.sql.expressions.Window.partitionBy("sm_host").orderBy("cand_rank")))
       .filter(col("rn") === 1)
       .select("sm_host", "sm_url")
-    val ifPhase = new PhaseTimer(() => "initial-frontier")
+    val ifPhase = new PhaseTimer("initial-frontier")
     // Fixpoint job discipline: each level runs exactly TWO jobs — the
     // eager parse checkpoint (entryParts re-reads it later, so it must
     // materialize) and one count() that lazily materializes BOTH the
@@ -343,29 +368,23 @@ object CrawlJob {
         val h = graft.sources.Charset.decodeHtml(html)._2
         val root = graft.html.HtmlParser.parse(h) // parse ONCE for doc + links
         val doc = Doc.fromRoot(root, url)
-        if (cfg.honorPageDirectives) {
-          // robots meta + per-anchor rel (html.PageDirectives): noindex
-          // suppresses corpus content (url still enters the seen set —
-          // it was fetched), nofollow zeroes outlink expansion, anchor
-          // rel=nofollow/sponsored/ugc drops single links. Same parsed
-          // root — no second parse.
-          val dir = graft.html.PageDirectives.fromRoot(root, url)
-          val links =
-            if (dir.nofollow) Seq.empty[String]
-            else graft.html.PageDirectives.followableLinksFromRoot(root, url)
-          val md = if (dir.noindex) "" else DocRender.toMarkdown(doc)
-          val chunks =
-            if (dir.noindex) Seq.empty[ChunkRec]
-            else Chunker.semanticChunks(md, url, warcTs.toInstant.toString,
-              cfg.chunkSize, cfg.chunkOverlap)
-          Extracted(url, hash, host, depth, doc.title, md, links, chunks, 200, chunks.length)
-        } else {
-          val md = DocRender.toMarkdown(doc)
-          val links = Doc.extractLinksFromRoot(root, url)
-          val chunks = Chunker.semanticChunks(md, url, warcTs.toInstant.toString,
-            cfg.chunkSize, cfg.chunkOverlap)
-          Extracted(url, hash, host, depth, doc.title, md, links, chunks, 200, chunks.length)
+        // when honored, robots meta + per-anchor rel (html.PageDirectives):
+        // noindex suppresses corpus content (url still enters the seen set
+        // — it was fetched), nofollow zeroes outlink expansion, anchor
+        // rel=nofollow/sponsored/ugc drops single links. Same parsed
+        // root — no second parse.
+        val dir = Option.when(cfg.honorPageDirectives)(graft.html.PageDirectives.fromRoot(root, url))
+        val links = dir match {
+          case None => Doc.extractLinksFromRoot(root, url)
+          case Some(d) if d.nofollow => Seq.empty[String]
+          case Some(_) => graft.html.PageDirectives.followableLinksFromRoot(root, url)
         }
+        val noindex = dir.exists(_.noindex)
+        val md = if (noindex) "" else DocRender.toMarkdown(doc)
+        val chunks =
+          if (noindex) Seq.empty[ChunkRec]
+          else Chunker.semanticChunks(md, url, warcTs.toInstant.toString, cfg.chunkSize, cfg.chunkOverlap)
+        Extracted(url, hash, host, depth, doc.title, md, links, chunks, 200, chunks.length)
       }
   }
 
@@ -424,6 +443,94 @@ object CrawlJob {
     val paths = (0 until upTo).filterNot(store.isExpired)
       .map(v => store.manifest(v).tables("results").path)
     if (paths.isEmpty) None else Some(spark.read.schema(resultsSchema).parquet(paths: _*))
+  }
+
+  /** Adaptive recrawl's due set as frozen at recrawl boundary `freeze`
+    * (url, url_hash, host, depth 0, priority). */
+  private final case class Due(frontier: DataFrame, freeze: Int)
+
+  /** Fold the fetch history before round `asOf` into the due url set.
+    * At every recrawl boundary (rounds ≡ 0 mod recrawlEvery) the due set
+    * is (a) injected into the frontier and (b) excluded from the blocking
+    * seen set until each url is refetched (a post-freeze delta re-blocks
+    * it). Freezing per boundary — not per row-read — keeps dueness one
+    * deterministic snapshot both the batch assignment and every later
+    * round of the epoch agree on, which is what lets RefCrawl mirror it
+    * exactly. */
+  private def freezeDue(spark: SparkSession, store: SnapshotStore, cfg: Scheduler.Config,
+                        asOf: Int): Due = {
+    val due = resultsBefore(spark, store, asOf).fold(emptyFrontier(spark)) { results =>
+      val hist = results
+        // rounds ARE the time axis: timestamp_seconds(round) runs
+        // Recrawl's exact integer arithmetic in units of rounds
+        .select(col("url"), timestamp_seconds(col("round")).as("ts"), col("fp"))
+      val d = graft.frontier.Recrawl.dueFilter(hist, "url", "ts", "fp",
+        timestamp_seconds(lit(asOf)),
+        cfg.recrawlMinRounds.get.toLong, cfg.recrawlMaxRounds.get.toLong)
+      // recrawls re-enter as roots (depth 0) ranked by overdue-ness
+      Frontier.withFrontierKeys(
+          d.select(col("url").as("raw_url"), col("priority")), "raw_url")
+        .withColumn("depth", lit(0))
+        .select(frontierCols.map(col): _*)
+    }
+    // small (due urls only) — checkpoint so the whole-history fold
+    // runs once per boundary, not once per downstream consumer
+    Due(due.localCheckpoint(true), asOf)
+  }
+
+  /** What a round starts from: everything a killed crawl needs to go on,
+    * each field read back from the last committed manifest (`resume`).
+    * `epoch` is empty before round 0 assigns the first one. */
+  private final case class CrawlState(round: Int, epoch: Option[Epoch], carry: DataFrame,
+                                      carryRows: Long, seen: SeenIndex, due: Option[Due]) {
+    def finished: Boolean = CrawlState.finished(round, epoch, carryRows)
+
+    /** Rows of `df` this round has not seen. The still-due urls (due AND
+      * not refetched since the freeze) do not block: in adaptive mode
+      * every seen filter lifts them out. */
+    def notSeenDf(df: DataFrame): DataFrame = seen.notSeen(df, due.map(d =>
+      d.frontier.select("url_hash").join(seen.seenSince(d.freeze), Seq("url_hash"), "left_anti")))
+  }
+
+  private object CrawlState {
+    /** All batches consumed and nothing carried. */
+    def finished(round: Int, epoch: Option[Epoch], carryRows: Long): Boolean =
+      carryRows == 0 && epoch.exists(e => round - e.start > e.assigned.maxBatch)
+
+    /** The state after the last committed round of the crawl in `store`
+      * (round 0's when there is none), or None when that crawl finished:
+      * a re-run then opens no seen index (the sharded one rewrites its
+      * files) and does no round work. */
+    def resume(spark: SparkSession, store: SnapshotStore, cfg: Scheduler.Config,
+               bloomThreshold: Long): Option[CrawlState] = {
+      val round = store.latestVersion.map(_ + 1).getOrElse(0)
+      // Resuming a workDir that ran with expireBeyondTtl: expired
+      // versions' DATA is gone (manifests remain). The seen index skips
+      // them, but only legally — an expired version inside the RESUME
+      // config's active window (TTL absent or larger than the original
+      // run's) would change seen semantics silently, so that is a hard
+      // error instead of an AnalysisException on a deleted path halfway
+      // into the round.
+      val expiredInWindow = (0 until round).filter(v =>
+        store.isExpired(v) && cfg.seenTtlRounds.forall(ttl => round - v <= ttl))
+      require(expiredInWindow.isEmpty,
+        s"cannot resume: rounds ${expiredInWindow.mkString(",")} were expired by a previous run " +
+          s"but fall inside this config's seen-TTL window (seenTtlRounds=${cfg.seenTtlRounds}); " +
+          "resume with a seenTtlRounds no larger than the run that expired them")
+      val last = Option.when(round > 0)(store.manifest(round - 1))
+      val (epoch, carryRows) = (last.map(Epoch.of), last.fold(0L)(_.tables("carry").rows))
+      // the last freeze (the largest recrawl boundary that already
+      // executed), rebuilt from the persisted results tables: a killed
+      // run must resume with the identical due snapshot or the epoch's
+      // surviving assigned batches would be re-filtered differently than
+      // the unkilled run filtered them
+      val lastFreeze =
+        if (cfg.recrawlMinRounds.isEmpty) 0 else cfg.recrawlEvery * ((round - 1) / cfg.recrawlEvery)
+      Option.unless(finished(round, epoch, carryRows))(CrawlState(round, epoch,
+        last.fold(emptyFrontier(spark))(_ => store.readTable(spark, round - 1, "carry", Some(frontierSchema))),
+        carryRows, SeenIndex.open(spark, store, round, cfg.seenTtlRounds, bloomThreshold, cfg.bloomShards),
+        Option.when(lastFreeze > 0)(freezeDue(spark, store, cfg, lastFreeze))))
+    }
   }
 
   /** Run (or resume) the crawl. Returns the final snapshot version. */
@@ -503,208 +610,114 @@ object CrawlJob {
       else Some(graft.frontier.FetchRetry.loadFaults(spark, fp))
     }
 
-    var round = store.latestVersion.map(_ + 1).getOrElse(0)
+    // Rounds whose epoch boundary is forced, each a pure function of the
+    // round number, so RefCrawl mirrors it and trace parity holds through
+    // it (CrawlParitySpec). Link-graph re-scoring at rounds ≡ 0 (mod
+    // linkPriorityEvery) replaces the WHOLE frontier's priority by the
+    // link-graph rank over the edges accumulated so far: the ranking key
+    // changes, so batches must be re-cut (between re-scores it is fixed
+    // and the epoch-batch stability argument above holds). Adaptive
+    // recrawl at rounds ≡ 0 (mod recrawlEvery) re-freezes the due set and
+    // injects it: the frontier gains rows.
+    def rescores(r: Int): Boolean =
+      cfg.linkPriorityMode.isDefined && r > 0 && r % cfg.linkPriorityEvery == 0
+    def refreezes(r: Int): Boolean = adaptive && r > 0 && r % cfg.recrawlEvery == 0
+    def forcedBoundary(r: Int): Boolean = rescores(r) || refreezes(r)
 
-    // ---- epoch + carry state (resumable from the last manifest) ----
-    var assignedPath: String = null
-    var epochStart = 0
-    var assignedTotal = 0L // rows assigned at the epoch boundary
-    var consumed = 0L // assigned rows whose batch has been consumed
-    var maxBatch = -1
-    // batch 0's row count, known when this run assigned the epoch
-    var batch0Rows: Option[Long] = None
-    var carryDf: DataFrame = emptyFrontier(spark)
-    var carryCount = 0L
-    if (round > 0) {
-      val m = store.manifest(round - 1)
-      epochStart = m.metrics("epoch_start").toInt
-      assignedTotal = m.metrics("assigned_total").toLong
-      consumed = m.metrics("assigned_consumed").toLong
-      maxBatch = m.metrics("assigned_max_batch").toInt
-      if (maxBatch == 0) batch0Rows = Some(assignedTotal)
-      assignedPath = m.tables("assigned").path
-      carryDf = store.readTable(spark, round - 1, "carry", Some(frontierSchema))
-      carryCount = m.tables("carry").rows
-    }
-
-    // Resuming a workDir that ran with expireBeyondTtl: expired versions'
-    // DATA is gone (manifests remain). The seen index skips them, but only
-    // legally — an expired version inside the RESUME config's active
-    // window (TTL absent or larger than the original run's) would change
-    // seen semantics silently, so that is a hard error instead of an
-    // AnalysisException on a deleted path halfway into the round.
-    if (round > 0) {
-      val expiredInWindow = (0 until round).filter(v =>
-        store.isExpired(v) && cfg.seenTtlRounds.forall(ttl => round - v <= ttl))
-      require(expiredInWindow.isEmpty,
-        s"cannot resume: rounds ${expiredInWindow.mkString(",")} were expired by a previous run " +
-          s"but fall inside this config's seen-TTL window (seenTtlRounds=${cfg.seenTtlRounds}); " +
-          "resume with a seenTtlRounds no larger than the run that expired them")
-    }
-    var seen = SeenIndex.open(spark, store, round, cfg.seenTtlRounds, bloomThreshold, cfg.bloomShards)
-    // ---- adaptive recrawl state: the EPOCH-FROZEN due set ----
-    // At every recrawl boundary (rounds ≡ 0 mod recrawlEvery) the fetch
-    // history folds into the due url set, which is (a) injected into the
-    // frontier and (b) excluded from the blocking seen set until each
-    // url is refetched (a post-freeze delta re-blocks it). Freezing per
-    // boundary — not per row-read — keeps dueness one deterministic
-    // snapshot both the batch assignment and every later round of the
-    // epoch agree on, which is what lets RefCrawl mirror it exactly.
-    var dueFrontierDf: DataFrame = null // url, url_hash, host, depth=0, priority
-    var dueFreeze = -1
-    def freezeDue(asOf: Int): Unit = {
-      val due = resultsBefore(spark, store, asOf).fold(emptyFrontier(spark)) { results =>
-        val hist = results
-          // rounds ARE the time axis: timestamp_seconds(round) runs
-          // Recrawl's exact integer arithmetic in units of rounds
-          .select(col("url"), timestamp_seconds(col("round")).as("ts"), col("fp"))
-        val d = graft.frontier.Recrawl.dueFilter(hist, "url", "ts", "fp",
-          timestamp_seconds(lit(asOf)),
-          cfg.recrawlMinRounds.get.toLong, cfg.recrawlMaxRounds.get.toLong)
-        // recrawls re-enter as roots (depth 0) ranked by overdue-ness
-        Frontier.withFrontierKeys(
-            d.select(col("url").as("raw_url"), col("priority")), "raw_url")
-          .withColumn("depth", lit(0))
-          .select(frontierCols.map(col): _*)
+    // Transient-fault replay (FetchRetry): attempt classification and
+    // exhausted-row removal fold into the fetch plan. `observe` sits below
+    // the fetch_ok filter, so it sees every scheduled-and-present row.
+    def fetchedOk(fetched: DataFrame, observe: DataFrame => DataFrame = identity): DataFrame =
+      faultMap.fold(fetched) { fm =>
+        observe(graft.frontier.FetchRetry.withAttempts(fetched, fm, cfg.fetchMaxRetries))
+          .filter(col("fetch_ok"))
+          .drop("fetch_ok", "fetch_attempts")
       }
-      // small (due urls only) — checkpoint so the whole-history fold
-      // runs once per boundary, not once per downstream consumer
-      dueFrontierDf = due.localCheckpoint(true)
-      dueFreeze = asOf
-    }
-    // Resume: reconstruct the last freeze (the largest recrawl boundary
-    // that already executed) from the persisted results tables — a
-    // killed run must resume with the identical due snapshot or the
-    // epoch's surviving assigned batches would be re-filtered
-    // differently than the unkilled run filtered them.
-    if (adaptive && round > 0) {
-      val lastFreeze = ((round - 1) / cfg.recrawlEvery) * cfg.recrawlEvery
-      if (lastFreeze > 0) freezeDue(lastFreeze)
-    }
-    // the still-due urls (due AND not refetched since the freeze) do not
-    // block: in adaptive mode every seen filter lifts them out
-    def notSeenDf(df: DataFrame): DataFrame = seen.notSeen(df, round,
-      Option(dueFrontierDf).map(_.select("url_hash")
-        .join(seen.seenSince(dueFreeze), Seq("url_hash"), "left_anti")))
 
-    val phase = new PhaseTimer(() => s"r$round")
-
-    var done = false
-    while (!done && round < maxRounds) {
+    /** Round `s0.round`: the state after it commits, or None when it
+      * finds nothing to schedule (the crawl ends; the round commits
+      * nothing). */
+    def step(s0: CrawlState): Option[CrawlState] = {
       val t0 = System.nanoTime()
-      phase.restart()
-      var batchIdx = round - epochStart
+      val round = s0.round
+      val phase = new PhaseTimer(s"r$round")
+      // the round's cached frames, unpersisted however the round ends
+      val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      try {
+        // ---- epoch boundary: one-shot W2 batch assignment ----
+        // Triggered when the epoch's batches are exhausted, the carry
+        // outgrows what remains assigned (amortized-geometric: total
+        // re-assignment work over the crawl is O(frontier · log), never
+        // O(rounds · frontier)), or the round forces it. Assignment is a
+        // pure re-ordering under a fixed ranking key, so WHEN it happens
+        // cannot change the trace.
+        val boundary = forcedBoundary(round) || s0.epoch.forall(e =>
+          round - e.start > e.assigned.maxBatch || s0.carryRows > e.assigned.total - e.consumed)
+        val (s, epochDenied, nEpochDenied) = if (!boundary) (s0, None, 0L) else {
+          val st = if (refreezes(round)) s0.copy(due = Some(freezeDue(spark, store, cfg, round))) else s0
+          val input = st.epoch match {
+            case None => val f = initialFrontier(spark, siteDir, rules); phase("epoch-assign/initial-frontier"); f
+            // every batch consumed; a zero-row epoch (max batch -1) left
+            // a partitionBy dir with only _SUCCESS and no readable schema
+            case Some(e) if round - e.start > e.assigned.maxBatch => st.carry
+            case Some(e) => readBatches(spark, e.assigned.path, round - e.start, e.assigned.maxBatch)
+              .select(frontierCols.map(col): _*) // drop the stored rank
+              .unionByName(st.carry)
+          }
+          val fresh0 = st.notSeenDf(mergeFrontier(input))
+          // due urls enter AFTER the seen filter (they are, by
+          // construction, seen) and merge against any link-rediscovered
+          // twin already in the input (min depth, max priority — the
+          // injected row's depth 0 and Recrawl.priority win); they carry
+          // no robots risk (only FETCHED urls have history ⇒ they were
+          // allowed, and rules are static per crawl)
+          val fresh =
+            if (refreezes(round)) mergeFrontier(fresh0.unionByName(st.due.get.frontier))
+            else fresh0
+          // F7 at insert: only the round-0 input is un-gated (later epochs
+          // re-rank rows that were gated when they were first inserted)
+          val (allowed, denied, nDenied) = if (round == 0) {
+            val (alw, den, gate) = Scheduler.robotsGate(fresh, robotsDf)
+            cached += gate
+            val n = den.count()
+            phase("epoch-assign/robots-gate")
+            (alw, Some(den), n)
+          } else (fresh, None, 0L)
+          val toAssign =
+            if (rescores(round)) {
+              if (cfg.linkPriorityMode.contains("urlshape"))
+                // URL-shape mode needs no graph and no join: the score is
+                // a pure codegen'd function of the url string, evaluated
+                // in the same projection that feeds assignBatches — every
+                // url gets a score (no NULL fallback)
+                allowed.withColumn("priority",
+                    graft.url.UrlQuality.qualityScore(col("url")))
+                  .select(frontierCols.map(col): _*)
+              else
+                // replace (not merge) priority: once the link graph drives
+                // the frontier, rank IS the signal — urls without an inbound
+                // edge yet fall back to NULL (ranked last, url ASC), exactly
+                // like link-discovered rows between re-scores
+                allowed.drop("priority")
+                  .join(linkRanks(spark, store, round, cfg), Seq("url"), "left")
+                  .withColumnRenamed("link_rank", "priority")
+                  .select(frontierCols.map(col): _*)
+            } else allowed
+          val a = writeAssigned(Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots),
+            s"${store.root}/data/v$round/assigned", s"assign_epoch_r$round")
+          phase("epoch-assign")
+          (st.copy(epoch = Some(Epoch(round, a, 0L)), carry = emptyFrontier(spark), carryRows = 0L),
+            denied, nDenied)
+        }
 
-      // ---- epoch boundary: one-shot W2 batch assignment ----
-      // Triggered when the epoch's batches are exhausted or the carry
-      // outgrows what remains assigned (amortized-geometric: total
-      // re-assignment work over the crawl is O(frontier · log), never
-      // O(rounds · frontier)). Assignment is a pure re-ordering under a
-      // fixed ranking key, so WHEN it happens cannot change the trace.
-      var epochDenied: DataFrame = null
-      var epochGate: DataFrame = null
-      var nEpochDenied = 0L
-      // Link-graph re-scoring cadence: at rounds ≡ 0 (mod every) the
-      // WHOLE frontier's priority is replaced by the link-graph rank
-      // over edges accumulated so far, which forces an epoch boundary
-      // (the ranking key changes, so batches must be re-cut). Between
-      // re-score rounds the key is fixed and the epoch-batch stability
-      // argument above holds unchanged; RefCrawl mirrors the same
-      // cadence, so CrawlParitySpec can hold trace parity through it.
-      val rescoreDue = cfg.linkPriorityMode.isDefined && round > 0 &&
-        round % cfg.linkPriorityEvery == 0
-      // Adaptive-recrawl cadence: at rounds ≡ 0 (mod recrawlEvery) the
-      // due set is re-frozen and injected, which forces an epoch
-      // boundary (the frontier gains rows) — the same forced-boundary
-      // pattern as the link re-score, and for the same reason: the
-      // injection round is a pure function of the round number, so
-      // RefCrawl mirrors it and trace parity holds through it.
-      val recrawlDue = adaptive && round > 0 && round % cfg.recrawlEvery == 0
-      if (assignedPath == null || batchIdx > maxBatch ||
-          carryCount > (assignedTotal - consumed) || rescoreDue || recrawlDue) {
-        if (recrawlDue) freezeDue(round)
-        val input =
-          if (round == 0) { val f = initialFrontier(spark, siteDir, rules); phase("epoch-assign/initial-frontier"); f }
-          // assignedTotal == 0 → the assigned dir is a zero-row
-          // partitionBy write (only _SUCCESS; no readable schema) —
-          // re-invoking run() on a completed workDir lands here
-          else if (assignedTotal == 0) carryDf
-          else if (batchIdx > maxBatch) carryDf
-          else readBatches(spark, assignedPath, batchIdx, maxBatch)
-            .select(frontierCols.map(col): _*) // drop the stored rank
-            .unionByName(carryDf)
-        val fresh0 = notSeenDf(mergeFrontier(input))
-        // due urls enter AFTER the seen filter (they are, by
-        // construction, seen) and merge against any link-rediscovered
-        // twin already in the input (min depth, max priority — the
-        // injected row's depth 0 and Recrawl.priority win); they carry
-        // no robots risk (only FETCHED urls have history ⇒ they were
-        // allowed, and rules are static per crawl)
-        val fresh =
-          if (recrawlDue) mergeFrontier(fresh0.unionByName(dueFrontierDf))
-          else fresh0
-        // F7 at insert: only the round-0 input is un-gated (later epochs
-        // re-rank rows that were gated when they were first inserted)
-        val allowed = if (round == 0) {
-          val (alw, den, gate) = Scheduler.robotsGate(fresh, robotsDf)
-          epochDenied = den; epochGate = gate
-          nEpochDenied = den.count()
-          phase("epoch-assign/robots-gate")
-          alw
-        } else fresh
-        val toAssign =
-          if (rescoreDue) {
-            if (cfg.linkPriorityMode.contains("urlshape"))
-              // URL-shape mode needs no graph and no join: the score is
-              // a pure codegen'd function of the url string, evaluated
-              // in the same projection that feeds assignBatches — every
-              // url gets a score (no NULL fallback)
-              allowed.withColumn("priority",
-                  graft.url.UrlQuality.qualityScore(col("url")))
-                .select(frontierCols.map(col): _*)
-            else
-              // replace (not merge) priority: once the link graph drives
-              // the frontier, rank IS the signal — urls without an inbound
-              // edge yet fall back to NULL (ranked last, url ASC), exactly
-              // like link-discovered rows between re-scores
-              allowed.drop("priority")
-                .join(linkRanks(spark, store, round, cfg), Seq("url"), "left")
-                .withColumnRenamed("link_rank", "priority")
-                .select(frontierCols.map(col): _*)
-          } else allowed
-        val a = writeAssigned(Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots),
-          s"${store.root}/data/v$round/assigned", s"assign_epoch_r$round")
-        assignedPath = a.path
-        assignedTotal = a.total
-        maxBatch = a.maxBatch
-        batch0Rows = Some(a.batch0)
-        epochStart = round
-        batchIdx = 0
-        consumed = 0
-        carryDf = emptyFrontier(spark)
-        carryCount = 0
-        phase("epoch-assign")
-      }
-
-      if (assignedTotal == 0 && nEpochDenied == 0) {
-        done = true
-        if (epochGate != null) epochGate.unpersist()
-      } else {
         // ---- round: consume ONE batch partition + the carry ----
-        val batchCols = frontierCols :+ "rank"
+        val e = s.epoch.get
+        val batchIdx = round - e.start
         val batchDf0 =
-          if (assignedTotal == 0)
+          if (e.assigned.total == 0)
             emptyFrontier(spark).withColumn("rank", lit(null).cast("int"))
-          else readBatches(spark, assignedPath, batchIdx, batchIdx)
-            .select(batchCols.map(col): _*)
-        // batch 0's row count rode the assign write's Observation —
-        // skip the count job (pure driver latency, the kind that caps
-        // low-core scaling efficiency); later batches of a budget-bound
-        // epoch still count theirs
-        val nBatchRows =
-          if (assignedTotal == 0) 0L
-          else if (batchIdx == 0 && batch0Rows.isDefined) batch0Rows.get
-          else batchDf0.count() // one batch directory's row count
+          else readBatches(spark, e.assigned.path, batchIdx, batchIdx)
+            .select((frontierCols :+ "rank").map(col): _*)
         // FAST PATH: the epoch was assigned at THIS round's boundary
         // (epoch block above, or the previous round's commit-time
         // assignment) and there is no carry — the batch is already
@@ -716,21 +729,26 @@ object CrawlJob {
         // epochs (carry present or batchIdx > 0) take the general path,
         // whose re-rank under the fixed key is trace-equivalent —
         // CrawlParitySpec holds parity over both.
-        val epochFresh = carryCount == 0 && epochStart == round
+        val epochFresh = s.carryRows == 0 && e.start == round
+        // the general path's batch size and the rows that pass its seen
+        // filter ride the lineage job below, which builds `fresh`'s cache
+        val batchObs = org.apache.spark.sql.Observation(s"batch_r$round")
+        val freshObs = org.apache.spark.sql.Observation(s"fresh_r$round")
         val (fresh, selected) =
-          if (epochFresh) {
-            val sel = cfg.globalBudget match {
-              case Some(g) => batchDf0
-                .orderBy(desc_nulls_last("priority"), asc("host"), asc("rank"))
-                .limit(g.toInt)
-              case None => batchDf0
-            }
-            (batchDf0.select(frontierCols.map(col): _*).cache(), sel.cache())
-          } else {
-            val fr = notSeenDf(
-              mergeFrontier(batchDf0.select(frontierCols.map(col): _*).unionByName(carryDf))).cache()
+          if (epochFresh)
+            (batchDf0.select(frontierCols.map(col): _*).cache(), Scheduler.globalCap(batchDf0, cfg).cache())
+          else {
+            val fr = s.notSeenDf(mergeFrontier(
+                batchDf0.observe(batchObs, count(lit(1)).as("n"))
+                  .select(frontierCols.map(col): _*).unionByName(s.carry)))
+              .observe(freshObs, count(lit(1)).as("n"))
+              .cache()
             (fr, Scheduler.rankSelect(fr, limits, cfg, budgetRobots).cache())
           }
+        cached ++= Seq(fresh, selected)
+        // batch 0's row count rode the assign write's Observation when
+        // this run assigned the epoch; a round resumed into it counts it
+        lazy val nBatch0 = e.assigned.batch0.getOrElse(batchDf0.count())
         // one query gives the scheduled count AND the trace's per-host
         // lineage (the manifest requirement): each partition of the
         // per-host counts keeps its top maxLineageParts hosts by (count
@@ -752,7 +770,7 @@ object CrawlJob {
             .observe(obs, coalesce(sum("count"), lit(0L)).as("n"))
             .as(enc).mapPartitions(rows => top(rows.toArray).iterator)(enc)
             .collect())
-          val n = obs.get("n").asInstanceOf[Long]
+          val n = observed(obs, "n")
           val counted = hosts.map(_._2).sum
           (n, if (n > counted) hosts.toMap + ("<other>" -> (n - counted)) else hosts.toMap)
         }
@@ -766,7 +784,7 @@ object CrawlJob {
         // count requires the job anyway, so it stays synchronous.
         val (nScheduled, lineageF) =
           if (epochFresh) {
-            val n = cfg.globalBudget.map(g => math.min(g, nBatchRows)).getOrElse(nBatchRows)
+            val n = cfg.globalBudget.map(g => math.min(g, nBatch0)).getOrElse(nBatch0)
             val f =
               if (n == 0) scala.concurrent.Future.successful(Map.empty[String, Long])
               else scala.concurrent.Future(lineageAndCount()._2)(
@@ -776,26 +794,21 @@ object CrawlJob {
             val (n, m) = lineageAndCount()
             (n, scala.concurrent.Future.successful(m))
           }
-        // A4 cache-stats accounting (cache.py:598-649 analogue): requests
-        // entering this round vs requests skipped by the seen set (sketch
-        // fast-path + exact anti-join + in-round dedup merge = the
-        // request-cache hit semantics). fresh is already materialized by
-        // the schedule actions, so this count reads cached blocks.
-        val nCandidates = nBatchRows + carryCount
-        // fast path: fresh IS the pruned batch (nCandidates == nBatchRows
-        // and no carry), so the hit count is identically 0 — skip the
-        // count job rather than run it to compute a constant
-        val nCacheHits =
-          if (epochFresh) 0L
-          else math.max(0L, nCandidates - fresh.count())
         phase("schedule")
 
-        if (nScheduled == 0 && nEpochDenied == 0) {
-          // candidates exhausted (batches and carry both dry) → crawl done
-          done = true
-          fresh.unpersist(); selected.unpersist()
-          if (epochGate != null) epochGate.unpersist()
-        } else {
+        // candidates exhausted (batches and carry both dry) → crawl done
+        if (nScheduled == 0 && nEpochDenied == 0) None
+        else {
+          // A4 cache-stats accounting (cache.py:598-649 analogue): requests
+          // entering this round vs requests skipped by the seen set (sketch
+          // fast-path + exact anti-join + in-round dedup merge = the
+          // request-cache hit semantics). On the fast path `fresh` IS the
+          // pruned batch, so the hit count is identically 0.
+          val (nBatchRows, nFresh) =
+            if (epochFresh) (nBatch0, nBatch0) else (observed(batchObs, "n"), observed(freshObs, "n"))
+          val nCandidates = nBatchRows + s.carryRows
+          val nCacheHits = math.max(0L, nCandidates - nFresh)
+
           // "fetch" = ONE equi join of the pages table on the batch's
           // fetch_url (J4). With a redirects side table, alias resolution
           // folds into the batch side: rows whose chain failed (redir
@@ -833,26 +846,13 @@ object CrawlJob {
               fetched.observe(redirObs, coalesce(sum(when(
                 col("url") =!= col("fetch_url"), 1L)), lit(0L)).as("n_redirected"))
             else fetched
-          // transient-fault replay (FetchRetry): attempt classification
-          // + exhausted-row removal fold into the same fetch plan; the
-          // failure/retry counts ride the extract write's Observation
-          // (CollectMetrics sits BELOW the fetch_ok filter, so it sees
-          // every scheduled-and-present row) — no extra job
+          // the failure/retry counts ride the extract write's Observation
+          // — no extra job
           val faultObs = org.apache.spark.sql.Observation(s"fault_r$round")
-          val fetchedForExtract = faultMap match {
-            case None => fetchedAliased
-            case Some(fm) =>
-              graft.frontier.FetchRetry
-                .withAttempts(fetchedAliased, fm, cfg.fetchMaxRetries)
-                .observe(faultObs,
-                  coalesce(sum(when(!col("fetch_ok"), 1L)), lit(0L))
-                    .as("n_fetch_failed"),
-                  coalesce(sum(when(col("fetch_ok"),
-                    col("fetch_attempts").cast("long") - 1L)), lit(0L))
-                    .as("n_retry_attempts"))
-                .filter(col("fetch_ok"))
-                .drop("fetch_ok", "fetch_attempts")
-          }
+          val fetchedForExtract = fetchedOk(fetchedAliased, _.observe(faultObs,
+            coalesce(sum(when(!col("fetch_ok"), 1L)), lit(0L)).as("n_fetch_failed"),
+            coalesce(sum(when(col("fetch_ok"), col("fetch_attempts").cast("long") - 1L)), lit(0L))
+              .as("n_retry_attempts")))
           // one typed parse pass written STRAIGHT to the snapshot's results
           // table (markdown + outlinks + chunk structs inline) — parquet IS
           // the round's materialization; persist()/cache() of this wide DF
@@ -873,28 +873,21 @@ object CrawlJob {
               coalesce(sum(col("n_chunks").cast("long")), lit(0L)).as("n_chunks"))
             .write.mode("overwrite").parquet(resultsPath)
           val extracted = spark.read.schema(resultsSchema).parquet(resultsPath)
-          val exM = exObs.get
-          val nFetched = exM("n_rows").asInstanceOf[Long]
-          val nChunks = exM("n_chunks").asInstanceOf[Long]
+          val nFetched = observed(exObs, "n_rows")
+          val nChunks = observed(exObs, "n_chunks")
           phase("fetch+extract")
 
           // opt-in raw-capture archive (Config.archiveWarc): the round's
           // successful payloads leave as member-per-record gzip WARC +
           // a recordAt-addressable index under the snapshot dir. Rebuilt
           // from `fetched` WITHOUT the metric Observations (a second
-          // action on the observed plan would double-fire them); the
-          // fault filter is re-applied so only payloads that actually
-          // arrived are archived. Capture attribution matches extract:
-          // requested url, the matched page row's warc_ts.
+          // action on the observed plan would double-fire them), so only
+          // payloads that actually arrived are archived. Capture
+          // attribution matches extract: requested url, the matched page
+          // row's warc_ts.
           val nWarcCaptures = if (!cfg.archiveWarc) -1L else {
-            val src = faultMap match {
-              case None => fetched
-              case Some(fm) => graft.frontier.FetchRetry
-                .withAttempts(fetched, fm, cfg.fetchMaxRetries)
-                .filter(col("fetch_ok"))
-            }
             val idx = graft.sources.WarcWriter.writeWarcFiles(
-              src.select(col("url"), col("warc_ts"), lit(200L).as("status"), col("html")),
+              fetchedOk(fetched).select(col("url"), col("warc_ts"), lit(200L).as("status"), col("html")),
               s"${store.root}/data/v$round/warc", gzip = true)
             idx.write.mode("overwrite")
               .parquet(s"${store.root}/data/v$round/warc_index")
@@ -916,16 +909,16 @@ object CrawlJob {
           // the committed seen set). The right side is just the
           // round's url_hash column (≤ budget × 8 bytes) — broadcast it
           // so the 10M-row outlink set is not shuffled for it.
-          val newFresh = notSeenDf(newLinks)
+          val newFresh = s.notSeenDf(newLinks)
             .join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
           val (newAllowed, newDenied, newGate) = Scheduler.robotsGate(newFresh, robotsDf)
+          cached += newGate
           phase("links")
 
           // ONE `visited` table = scheduled rows (rank set) ∪ denied rows
           // (rank null); seen_delta and trace are merge-on-read views of
           // it — one write job per round instead of three
-          val deniedAll =
-            if (epochDenied != null) newDenied.unionByName(epochDenied) else newDenied
+          val deniedAll = epochDenied.fold(newDenied)(newDenied.unionByName(_))
           // the denied count rides the visited WRITE as an Observation
           // (rank is null ⇔ denied) instead of its own count() job
           val visitObs = org.apache.spark.sql.Observation(s"visited_r$round")
@@ -950,8 +943,6 @@ object CrawlJob {
               fresh.join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
                 .unionByName(newAllowed))
 
-          val nMissing = nScheduled - nFetched
-
           // The round's two bookkeeping writes — `visited` and
           // carry/next-epoch — are independent: run them CONCURRENTLY so
           // one write's task waves fill the other's scheduling gaps
@@ -960,19 +951,17 @@ object CrawlJob {
           val visitedPath = s"${store.root}/data/v$round/visited"
           val visitedF = scala.concurrent.Future {
             visited.write.mode("overwrite").parquet(visitedPath)
+            observed(visitObs, "n_denied")
           }(scala.concurrent.ExecutionContext.global)
 
           // The seen index takes the round's delta CHAINED onto the
           // visited write, overlapped with the epoch-next assign below
           // (it was the last serialized job of every round); the index
           // is immutable, so this round's in-flight plans keep the
-          // sketch they captured, and the main thread takes the next
-          // index at the await after commit
-          val (thisRound, seenNow) = (round, seen)
-          val seenF = visitedF.map { _ =>
-            seenNow.add(thisRound, visitedPath,
-              nScheduled + visitObs.get("n_denied").asInstanceOf[Long])
-          }(scala.concurrent.ExecutionContext.global)
+          // sketch they captured, and the next round's state takes the
+          // next index at the await after commit
+          val seenF = visitedF.map(nDenied => s.seen.add(visitedPath, nScheduled + nDenied))(
+            scala.concurrent.ExecutionContext.global)
 
           // Epoch fast-path: this round consumed the LAST assigned batch,
           // so next round would re-epoch from (∅ remaining ∪ carry).
@@ -980,16 +969,11 @@ object CrawlJob {
           // carry-table write + read-back + re-write as `assigned` was a
           // full extra round-trip of the frontier delta every round in a
           // budget-unbound crawl. (Budget-BOUND crawls keep the carry
-          // path: their epoch amortizes over many rounds.)
-          val epochExhausted = batchIdx >= maxBatch
-          // …but not when the NEXT round re-scores priorities from the
-          // link graph: a pre-assignment under the stale ranking key
-          // would be thrown away at the boundary. Write the carry and
-          // let the boundary block re-score + assign.
-          val nextIsRescore = (cfg.linkPriorityMode.isDefined &&
-            (round + 1) % cfg.linkPriorityEvery == 0) ||
-            (adaptive && (round + 1) % cfg.recrawlEvery == 0)
-          val preAssignNext = epochExhausted && !nextIsRescore
+          // path: their epoch amortizes over many rounds.) Not when the
+          // next round forces a boundary: a pre-assignment under the
+          // stale ranking key or without the due set would be thrown
+          // away there. Write the carry and let the boundary assign.
+          val preAssignNext = batchIdx >= e.assigned.maxBatch && !forcedBoundary(round + 1)
           val carryPath = s"${store.root}/data/v$round/carry"
           val (next, nCarry) =
             if (preAssignNext) {
@@ -1002,46 +986,35 @@ object CrawlJob {
               val carryObs = org.apache.spark.sql.Observation(s"carry_r$round")
               carryNext.observe(carryObs, count(lit(1)).as("n"))
                 .write.mode("overwrite").parquet(carryPath)
-              (None, carryObs.get("n").asInstanceOf[Long])
+              (None, observed(carryObs, "n"))
             }
-          scala.concurrent.Await.result(visitedF, scala.concurrent.duration.Duration.Inf)
-          val nDenied = visitObs.get("n_denied").asInstanceOf[Long]
+          val nDenied = scala.concurrent.Await.result(visitedF, scala.concurrent.duration.Duration.Inf)
+          val epochNext = next.fold(e.copy(consumed = e.consumed + nBatchRows))(Epoch(round + 1, _, 0L))
 
           val elapsed = (System.nanoTime() - t0) / 1e9
-          val (committedEpochStart, committedTotal, committedConsumed, committedMax) = next match {
-            case Some(a) => (round + 1, a.total, 0L, a.maxBatch)
-            case None => (epochStart, assignedTotal, consumed + nBatchRows, maxBatch)
-          }
           store.commit(spark, round,
             Map.empty,
             Map(
               "scheduled" -> nScheduled.toDouble,
               "fetched" -> nFetched.toDouble,
-              "missing" -> nMissing.toDouble,
+              "missing" -> (nScheduled - nFetched).toDouble,
               "robots_denied" -> nDenied.toDouble,
               "cache_candidates" -> nCandidates.toDouble,
               "cache_hits" -> nCacheHits.toDouble,
               "chunks" -> nChunks.toDouble,
-              "elapsed_sec" -> elapsed,
-              "epoch_start" -> committedEpochStart.toDouble,
-              "assigned_total" -> committedTotal.toDouble,
-              "assigned_consumed" -> committedConsumed.toDouble,
-              "assigned_max_batch" -> committedMax.toDouble) ++
+              "elapsed_sec" -> elapsed) ++
+              epochNext.metrics ++
               (if (aliasMap.isDefined)
-                Map("redirects_followed" ->
-                  redirObs.get("n_redirected").asInstanceOf[Long].toDouble)
+                Map("redirects_followed" -> observed(redirObs, "n_redirected").toDouble)
               else Map.empty) ++
-              (if (faultMap.isDefined) {
-                val fm = faultObs.get
-                Map("fetch_failed" ->
-                  fm("n_fetch_failed").asInstanceOf[Long].toDouble,
-                  "retry_attempts" ->
-                    fm("n_retry_attempts").asInstanceOf[Long].toDouble)
-              } else Map.empty) ++
+              (if (faultMap.isDefined)
+                Map("fetch_failed" -> observed(faultObs, "n_fetch_failed").toDouble,
+                  "retry_attempts" -> observed(faultObs, "n_retry_attempts").toDouble)
+              else Map.empty) ++
               (if (cfg.archiveWarc)
                 Map("warc_captures" -> nWarcCaptures.toDouble)
               else Map.empty) ++
-              seen.counters,
+              s.seen.counters,
             partitionKeyCol = Some("host"),
             knownCounts = Map(
               "visited" -> (nScheduled + nDenied),
@@ -1049,11 +1022,11 @@ object CrawlJob {
               "results" -> nFetched,
               "chunks" -> nChunks,
               "trace" -> nScheduled,
-              "assigned" -> committedTotal,
+              "assigned" -> epochNext.assigned.total,
               "carry" -> nCarry),
             preWritten = Map("results" -> resultsPath,
               "visited" -> visitedPath,
-              "assigned" -> next.fold(assignedPath)(_.path)) ++
+              "assigned" -> epochNext.assigned.path) ++
               (if (preAssignNext) Map.empty else Map("carry" -> carryPath)),
             knownLineage = Map("trace" -> scala.concurrent.Await.result(
               lineageF, scala.concurrent.duration.Duration.Inf)),
@@ -1068,47 +1041,34 @@ object CrawlJob {
                else Map.empty))
           phase("commit")
 
-          // advance state to the committed round
-          next match {
-            case Some(a) =>
-              assignedPath = a.path
-              epochStart = round + 1
-              assignedTotal = a.total
-              maxBatch = a.maxBatch
-              batch0Rows = Some(a.batch0)
-              consumed = 0
-              carryDf = emptyFrontier(spark)
-              carryCount = 0
-            case None =>
-              carryCount = nCarry
-              carryDf = store.readTable(spark, round, "carry", Some(frontierSchema))
-              consumed += nBatchRows
-          }
-          seen = scala.concurrent.Await.result(seenF, scala.concurrent.duration.Duration.Inf)
+          val seenNext = scala.concurrent.Await.result(seenF, scala.concurrent.duration.Duration.Inf)
           phase("seen")
-
           // the sketch drops the deltas leaving the window first (a
           // resumed run builds its sketch from the window instead)
-          if (round + 1 < maxRounds) seen = seen.expire(round + 1)
+          val seen = if (round + 1 < maxRounds) seenNext.expire() else seenNext
           // retention: rounds that left the TTL window hold no table any
           // future round (or resume) reads — drop their data files,
           // keep manifests. The active epoch's `assigned` dir lives at
           // version epochStart-1 or epochStart, so never expire past it.
           if (cfg.expireBeyondTtl) cfg.seenTtlRounds.foreach { ttl =>
-            val upTo = math.min((round + 1) - ttl, epochStart - 1)
+            val upTo = math.min((round + 1) - ttl, epochNext.start - 1)
             if (upTo > 0) store.expire(upTo)
           }
           phase("expiry")
-
-          fresh.unpersist(); selected.unpersist(); newGate.unpersist()
-          if (epochGate != null) epochGate.unpersist()
-          round += 1
-          // all batches consumed and nothing carried → finished
-          if (carryCount == 0 && round - epochStart > maxBatch) done = true
+          Some(CrawlState(round + 1, Some(epochNext),
+            store.readTable(spark, round, "carry", Some(frontierSchema)), nCarry, seen, s.due))
         }
-      }
+      } finally cached.foreach(_.unpersist())
     }
-    round - 1
+
+    @scala.annotation.tailrec
+    def loop(s: CrawlState): Int =
+      if (s.finished || s.round >= maxRounds) s.round - 1
+      else step(s) match {
+        case Some(next) => loop(next)
+        case None => s.round - 1
+      }
+    CrawlState.resume(spark, store, cfg, bloomThreshold).fold(store.latestVersion.getOrElse(-1))(loop)
   }
 
   final case class CacheStats(requests: Long, hits: Long, hitRate: Double,

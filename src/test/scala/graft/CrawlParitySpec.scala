@@ -341,6 +341,62 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(sparkSeen(copy.toString, lastCopy) == sparkSeen(oneShot, last))
   }
 
+  /** Rounds 0..last's manifests with table paths relative to the work
+    * dir and without the one wall-clock metric. */
+  private def manifests(workDir: String, last: Int): Seq[SnapshotStore.Manifest] = {
+    val store = new SnapshotStore(workDir)
+    (0 to last).map { v =>
+      val m = store.manifest(v)
+      m.copy(tables = m.tables.map { case (k, t) => k -> t.copy(path = t.path.stripPrefix(workDir)) },
+        metrics = m.metrics - "elapsed_sec")
+    }
+  }
+
+  // the budget-unbound fast path (see the fresh-epoch test), crawled to
+  // its end in one run
+  private val fastCfg = graft.frontier.Scheduler.Config(roundSeconds = 500.0)
+  private lazy val fastCrawl: (String, Int) = {
+    val wd = java.nio.file.Files.createTempDirectory("graft_fast_whole").toString
+    (wd, CrawlJob.run(spark, siteDir, wd, fastCfg, bloomThreshold = 100L))
+  }
+
+  test("a crawl resumed before every round commits the same manifests as an uninterrupted one") {
+    val rounds = 6
+    def stepped(cfg: graft.frontier.Scheduler.Config): (String, Int) = {
+      val wd = java.nio.file.Files.createTempDirectory("graft_stepped").toString
+      (wd, (1 to rounds).map(r => CrawlJob.run(spark, siteDir, wd, cfg, maxRounds = r, bloomThreshold = 100L)).last)
+    }
+    // the budget-bound default (carry, multi-batch epochs, general path)
+    val whole = java.nio.file.Files.createTempDirectory("graft_whole").toString
+    val last = CrawlJob.run(spark, siteDir, whole, maxRounds = rounds, bloomThreshold = 100L)
+    val (wd, lastStepped) = stepped(graft.frontier.Scheduler.Config())
+    assert(last == rounds - 1 && lastStepped == last)
+    assert(manifests(whole, last).exists(m => m.metrics("epoch_start") < m.version), "no general-path round")
+    manifests(wd, last).zip(manifests(whole, last)).foreach { case (a, b) => assert(a == b, s"round ${a.version}") }
+    // the fast path, against the first rounds of the crawl run to its end
+    val (fastWd, fastStepped) = stepped(fastCfg)
+    assert(fastStepped == math.min(fastCrawl._2, rounds - 1))
+    manifests(fastWd, fastStepped).zip(manifests(fastCrawl._1, fastStepped)).foreach { case (a, b) =>
+      assert(a == b, s"fast-path round ${a.version}")
+    }
+  }
+
+  test("re-running a finished work dir changes no file") {
+    val (wd, last) = fastCrawl
+    val workDir = java.nio.file.Paths.get(wd)
+    def listing(): Seq[(String, Long)] =
+      scala.util.Using.resource(java.nio.file.Files.walk(workDir)) { paths =>
+        paths.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+          .map(p => (workDir.relativize(p).toString,
+            if (java.nio.file.Files.isDirectory(p)) -1L else java.nio.file.Files.size(p))).sorted
+      }
+    val before = listing()
+    assert(CrawlJob.run(spark, siteDir, wd, fastCfg, bloomThreshold = 100L) == last)
+    val after = listing()
+    assert(after.diff(before).isEmpty && before.diff(after).isEmpty,
+      s"added ${after.diff(before)}, removed ${before.diff(after)}")
+  }
+
   test("robots-denied urls are never fetched (/sec6/ disallowed, page0 allowed back)") {
     import spark.implicits._
     val workDir = java.nio.file.Files.createTempDirectory("graft_robots").toString

@@ -163,4 +163,24 @@ class CuckooFilterSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a resumed TTL crawl carries the cumulative expiry counters on") {
+    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val site = java.nio.file.Files.createTempDirectory("graft_ttl1_site").toString
+    graft.synth.SyntheticWeb.generate(spark, site, 400, 5, seed = 42L, partitions = 4)
+    val wd = java.nio.file.Files.createTempDirectory("graft_ttl1").toString
+    val cfg = graft.frontier.Scheduler.Config(seenTtlRounds = Some(1), seenSketch = "cuckoo")
+    graft.jobs.CrawlJob.run(spark, site, wd, cfg, maxRounds = 3, bloomThreshold = 10L)
+    val last = graft.jobs.CrawlJob.run(spark, site, wd, cfg, maxRounds = 4, bloomThreshold = 10L)
+    assert(last == 3)
+    val store = new graft.checkpoint.SnapshotStore(wd)
+    Seq("cuckoo_expired_deletes", "cuckoo_expiry_rebuilds").foreach { k =>
+      val counts = (0 to last).map(v => store.manifest(v).metrics(k))
+      assert(counts == counts.scanLeft(0.0)(math.max).tail, s"$k decreased: $counts")
+    }
+    assert(store.manifest(2).metrics("cuckoo_expired_deletes") > 0.0)
+  }
 }

@@ -54,5 +54,8 @@ class RoundJobsSpec extends AnyFunSuite {
     // 5 the general path: rounds of one kind run the same number of jobs
     assert(perRound(0).size == perRound(2).size && perRound(1).size == perRound(3).size,
       s"rounds of one kind ran different numbers of jobs: ${perRound.map(_.size).mkString(", ")}")
+    // the general path's batch and candidate counts ride its lineage job
+    assert(perRound(1).size <= perRound(0).size && perRound(3).size <= perRound(2).size,
+      s"general-path rounds ran more jobs than fast-path ones: ${perRound.map(_.size).mkString(", ")}")
   }
 }
