@@ -14,7 +14,7 @@ import graft.functions.GraftFunctions
   * any partitioning.
   *
   * Rate resolution mirrors throttle.py:254-266: exact host match first,
-  * then `*.suffix` wildcard (endswith pattern[1:]), then the default.
+  * then the longest matching `*.suffix` wildcard, then the default.
   * Robots gating (F7, north_rule upgrade) happens before ranking so
   * denied urls never consume budget. */
 object Scheduler {
@@ -195,15 +195,16 @@ object Scheduler {
   def hostBudgets(frontier: DataFrame, limits: DataFrame, cfg: Config,
                   robots: Option[DataFrame] = None): DataFrame = {
     val hosts = frontier.select("host").distinct()
-    val exact = limits.filter(!col("pattern").startsWith("*."))
-      .withColumnRenamed("rps", "exact_rps")
-    val wild = limits.filter(col("pattern").startsWith("*."))
-      .select(expr("substring(pattern, 2)").as("suffix"), col("rps").as("wild_rps"))
+    val wild = col("pattern").startsWith("*.")
+    // a row per pattern a host matches, then one rate per host: the exact
+    // pattern, else the longest matching suffix, ties by pattern ascending
+    // (as RefCrawl.rpsOf); grouped by the distinct's key, so no shuffle.
     val configured = hosts
-      .join(broadcast(exact), hosts("host") === exact("pattern"), "left")
-      .join(broadcast(wild), expr("endswith(host, suffix)"), "left")
-      .select(col("host"),
-        coalesce(col("exact_rps"), col("wild_rps"), lit(cfg.defaultRps)).as("rps"))
+      .join(broadcast(limits), (!wild && col("host") === col("pattern")) ||
+        (wild && col("host").endsWith(expr("substring(pattern, 2)"))), "left")
+      .groupBy("host")
+      .agg(min(struct(wild, -length(col("pattern")), col("pattern"), col("rps"))).getField("rps").as("rps"))
+      .select(col("host"), coalesce(col("rps"), lit(cfg.defaultRps)).as("rps"))
     val effective = robots.filter(r =>
         cfg.honorCrawlDelay && r.columns.contains("crawl_delay")) match {
       case Some(r) =>
@@ -219,6 +220,10 @@ object Scheduler {
     effective
       .withColumn("budget", greatest(lit(1L), floor(col("rps") * lit(cfg.roundSeconds))))
       .select("host", "budget")
+      // joined onto frontier rows by host: shuffle-hash on its own host
+      // partitioning. Unhinted, AQE chose broadcast or not by which stage
+      // finished first, so an epoch assign could compile a new shape.
+      .hint("shuffle_hash")
   }
 
   /** Robots gate (F7) over frontier-shaped rows. Returns
@@ -271,8 +276,8 @@ object Scheduler {
   /** W2 one-shot batch assignment (SURVEY §2.6): rank the WHOLE frontier
     * per host once per scheduling epoch and assign
     * `batch_no = (rank-1) / host_budget`; round k of the epoch consumes
-    * only batch k (a partition-pruned scan of a partitionBy("batch_no")
-    * table). The O(frontier) window runs once per EPOCH, not per round —
+    * only batch k (one table sorted by batch_no, read filtered to k).
+    * The O(frontier) window runs once per EPOCH, not per round —
     * per-round scheduling cost is O(batch + carry). */
   def assignBatches(frontier: DataFrame, limits: DataFrame, cfg: Config,
                     robots: Option[DataFrame] = None): DataFrame = {

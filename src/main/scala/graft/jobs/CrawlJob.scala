@@ -17,9 +17,9 @@ import graft.sitemap.Sitemap
   *   EPOCH (once per many rounds): remaining frontier ∪ carry
   *     → merge (min depth, max priority) → robots gate at INSERT only
   *     → window-rank per host → batch_no = (rank-1)/budget (W2)
-  *     → write partitionBy(batch_no)                     [O(frontier), amortized]
+  *     → write one table sorted by batch_no              [O(frontier), amortized]
   *   ROUND k of the epoch:
-  *     candidates = assigned[batch_no = k] (partition-pruned scan) ∪ carry
+  *     candidates = assigned[batch_no = k] (filtered scan) ∪ carry
   *     → merge → seen-sketch prefilter + left_anti vs seen (J1, SeenIndex)
   *     → rank ≤ budget within candidates (W2) + W4 cap   [O(batch + carry)]
   *     → inner join pages ("fetch", J4)
@@ -88,10 +88,8 @@ object CrawlJob {
       // the default is overridable like every other here for corpora
       // whose statistics misestimate.
       dflt("spark.sql.join.preferSortMergeJoin", "false"),
-      // v1's two sequential driver-side rename passes cost ~1.5 s of
-      // pure latency per dynamic-partition write (measured: the
-      // next-epoch partitionBy write dropped 24.6 s → 10.4 s over a
-      // 10-round crawl); v2 renames task outputs at task commit
+      // v2 renames task outputs at task commit, not in v1's two serial
+      // rename passes at job commit (~1.5 s a partitioned write)
       dflt("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"),
       // managed tables (the bucketed pages layout) live on a fast local
       // scratch volume, never under the process cwd — and PER PROCESS:
@@ -155,8 +153,8 @@ object CrawlJob {
   // with: a parquet read that names its schema runs no inference job
   private val frontierSchema = StructType.fromDDL(
     "url STRING, url_hash BIGINT, host STRING, depth INT, priority DOUBLE")
-  // one `assigned` batch directory (batch_no is its path)
-  private val batchSchema = frontierSchema.add("rank", IntegerType)
+  // an epoch's `assigned` table: frontier, within-batch rank, batch
+  private val assignedSchema = frontierSchema.add("rank", IntegerType).add("batch_no", IntegerType)
   private lazy val resultsSchema = org.apache.spark.sql.Encoders.product[Extracted].schema
     .add("round", IntegerType, nullable = false).add("fp", LongType, nullable = false)
 
@@ -192,26 +190,30 @@ object CrawlJob {
   private def observed(obs: org.apache.spark.sql.Observation, key: String): Long =
     obs.get(key).asInstanceOf[Long]
 
-  /** Write `batches` partitioned by batch_no to `path`. The stats ride
-    * the write job as an Observation — no read-back job, and the
-    * zero-row case (no part files, no inferable schema) needs no read
-    * that would fail with an AnalysisException. */
+  /** Write `batches` to `path` as one table sorted by batch_no within
+    * each file, so the files number the write's tasks, not the batches.
+    * The stats ride the write job as an Observation — no read-back job. */
   private def writeAssigned(batches: DataFrame, path: String, name: String): Assigned = {
     val obs = org.apache.spark.sql.Observation(name)
     batches.observe(obs, count(lit(1)).as("n"), max("batch_no").as("mb"),
         count(when(col("batch_no") === 0, 1)).as("n0"))
-      .write.partitionBy("batch_no").mode("overwrite").parquet(path)
+      .sortWithinPartitions("batch_no")
+      .write.mode("overwrite").parquet(path)
     val n = observed(obs, "n")
     Assigned(path, n, if (n == 0) -1 else obs.get("mb").asInstanceOf[Int], Some(observed(obs, "n0")))
   }
 
-  /** Batches `from` to `to` of an `assigned` table, read as their
-    * partition directories: no partition discovery over the table's
-    * other batches (a listing job past 32 directories). Every batch in
-    * between exists, since per-host ranks are consecutive. */
-  private def readBatches(spark: SparkSession, assignedPath: String,
-                          from: Int, to: Int): DataFrame =
-    spark.read.schema(batchSchema).parquet((from to to).map(b => s"$assignedPath/batch_no=$b"): _*)
+  /** Batches `from` to `to` of an `assigned` table; empty past its last
+    * batch. The bounds are `stamp`s, so no round compiles a new filter.
+    * Trade-off: parquet cannot skip row groups on such a bound, so a
+    * round scans the epoch's whole narrow table. In the growth phase
+    * every round is a boundary that reads it anyway; in a long
+    * drain-phase epoch a round reads O(epoch rows) where a directory per
+    * batch read O(batch) — ROADMAP direction 1's delta-proportional
+    * assign removes that. A `batch_no=` directory tree reads the same. */
+  private[graft] def readBatches(spark: SparkSession, path: String, from: Int, to: Int): DataFrame =
+    spark.read.schema(assignedSchema).parquet(path)
+      .filter(col("batch_no").between(stamp(from), stamp(to)))
 
   /** Generated classes compiled so far in this JVM. */
   private def compiledClasses: Long =
@@ -230,15 +232,14 @@ object CrawlJob {
     }
   }
 
-  /** The round stamp of `results` and `visited`, as a value generated
-    * code reads from its references array. A `lit(round)` is inlined
-    * into the generated source, so every round's extract and `visited`
-    * classes differed from the last round's only in that constant and
-    * missed the codegen cache. Non-nullable keeps the column
-    * `round INT NOT NULL`, as the literal wrote it; nondeterministic
-    * keeps the optimizer from treating it as a constant. */
-  private def roundStamp(r: Int): Column =
-    udf(() => r).asNonNullable().asNondeterministic()()
+  /** A per-round value (the round stamp of `results` and `visited`, an
+    * epoch's batch bounds) that generated code reads from its references
+    * array: a `lit(round)` is inlined into the generated source, so each
+    * round's classes missed the codegen cache. Non-nullable keeps `round
+    * INT NOT NULL`, as the literal wrote it; nondeterministic keeps the
+    * optimizer from treating it as a constant. */
+  private def stamp(v: Int): Column =
+    udf(() => v).asNonNullable().asNondeterministic()()
 
   private def emptyFrontier(spark: SparkSession): DataFrame = {
     import spark.implicits._
@@ -657,11 +658,8 @@ object CrawlJob {
           val st = if (refreezes(round)) s0.copy(due = Some(freezeDue(spark, store, cfg, round))) else s0
           val input = st.epoch match {
             case None => val f = initialFrontier(spark, siteDir, rules); phase("epoch-assign/initial-frontier"); f
-            // every batch consumed; a zero-row epoch (max batch -1) left
-            // a partitionBy dir with only _SUCCESS and no readable schema
-            case Some(e) if round - e.start > e.assigned.maxBatch => st.carry
             case Some(e) => readBatches(spark, e.assigned.path, round - e.start, e.assigned.maxBatch)
-              .select(frontierCols.map(col): _*) // drop the stored rank
+              .select(frontierCols.map(col): _*) // drop the stored rank and batch
               .unionByName(st.carry)
           }
           val fresh0 = st.notSeenDf(mergeFrontier(input))
@@ -710,14 +708,11 @@ object CrawlJob {
             denied, nDenied)
         }
 
-        // ---- round: consume ONE batch partition + the carry ----
+        // ---- round: consume ONE batch + the carry ----
         val e = s.epoch.get
         val batchIdx = round - e.start
-        val batchDf0 =
-          if (e.assigned.total == 0)
-            emptyFrontier(spark).withColumn("rank", lit(null).cast("int"))
-          else readBatches(spark, e.assigned.path, batchIdx, batchIdx)
-            .select((frontierCols :+ "rank").map(col): _*)
+        val batchDf0 = readBatches(spark, e.assigned.path, batchIdx, batchIdx)
+          .select((frontierCols :+ "rank").map(col): _*)
         // FAST PATH: the epoch was assigned at THIS round's boundary
         // (epoch block above, or the previous round's commit-time
         // assignment) and there is no carry — the batch is already
@@ -775,7 +770,7 @@ object CrawlJob {
           (n, if (n > counted) hosts.toMap + ("<other>" -> (n - counted)) else hosts.toMap)
         }
         // Fast path: the scheduled count is KNOWN analytically (the whole
-        // pruned batch, min'd with the W4 cap), so the lineage groupBy —
+        // batch, min'd with the W4 cap), so the lineage groupBy —
         // the only remaining pre-fetch action on `selected` — runs
         // CONCURRENTLY with the extract write and is awaited at commit.
         // This removes the last serialized scheduling job from the
@@ -803,7 +798,7 @@ object CrawlJob {
           // entering this round vs requests skipped by the seen set (sketch
           // fast-path + exact anti-join + in-round dedup merge = the
           // request-cache hit semantics). On the fast path `fresh` IS the
-          // pruned batch, so the hit count is identically 0.
+          // batch, so the hit count is identically 0.
           val (nBatchRows, nFresh) =
             if (epochFresh) (nBatch0, nBatch0) else (observed(batchObs, "n"), observed(freshObs, "n"))
           val nCandidates = nBatchRows + s.carryRows
@@ -864,7 +859,7 @@ object CrawlJob {
           // Observation — zero extra jobs, zero re-scan of the output
           val exObs = org.apache.spark.sql.Observation(s"extract_r$round")
           extract(spark, fetchedForExtract, cfg).toDF()
-            .withColumn("round", roundStamp(round))
+            .withColumn("round", stamp(round))
             // content fingerprint, stored AT extract so the adaptive-
             // recrawl history pass reads (url, round, fp) columnar and
             // never re-touches the markdown payload
@@ -923,9 +918,9 @@ object CrawlJob {
           // (rank is null ⇔ denied) instead of its own count() job
           val visitObs = org.apache.spark.sql.Observation(s"visited_r$round")
           val visited = selected
-            .select(roundStamp(round).as("round"), col("host"), col("rank").cast("int").as("rank"),
+            .select(stamp(round).as("round"), col("host"), col("rank").cast("int").as("rank"),
               col("url"), col("url_hash"))
-            .unionByName(deniedAll.select(roundStamp(round).as("round"), col("host"),
+            .unionByName(deniedAll.select(stamp(round).as("round"), col("host"),
               lit(null).cast("int").as("rank"), col("url"), col("url_hash")))
             .observe(visitObs,
               coalesce(sum(when(col("rank").isNull, 1L).otherwise(0L)), lit(0L)).as("n_denied"))
@@ -1048,7 +1043,7 @@ object CrawlJob {
           val seen = if (round + 1 < maxRounds) seenNext.expire() else seenNext
           // retention: rounds that left the TTL window hold no table any
           // future round (or resume) reads — drop their data files,
-          // keep manifests. The active epoch's `assigned` dir lives at
+          // keep manifests. The active epoch's `assigned` table lives at
           // version epochStart-1 or epochStart, so never expire past it.
           if (cfg.expireBeyondTtl) cfg.seenTtlRounds.foreach { ttl =>
             val upTo = math.min((round + 1) - ttl, epochNext.start - 1)
@@ -1093,7 +1088,7 @@ object CrawlJob {
 
   /** One-time JVM warmup: a 200-page micro-crawl on a throwaway site,
     * exercising every hot path of the real crawl (extract codegen, the
-    * window rank, dynamic-partition writes, seen sketch, commit) so the timed
+    * window rank, the epoch writes, seen sketch, commit) so the timed
     * run below measures the ENGINE, not first-use JIT + codegen
     * compilation (~30 s constant regardless of core count — a pure
     * distortion of single-run scaling cells; the multi-run median bench

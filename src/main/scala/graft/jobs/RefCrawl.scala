@@ -84,11 +84,11 @@ object RefCrawl {
       // robots-declared delay caps the configured rate at 1/delay.
       honorCrawlDelay: Boolean = false): Result = {
 
+    // Scheduler.hostBudgets' rule: exact, else the longest `*.suffix` match
     def rpsOf(host: String): Double = {
       val configured = limits.getOrElse(host,
-        limits.collectFirst {
-          case (p, r) if p.startsWith("*.") && host.endsWith(p.substring(1)) => r
-        }.getOrElse(defaultRps))
+        limits.filter { case (p, _) => p.startsWith("*.") && host.endsWith(p.substring(1)) }
+          .minByOption { case (p, _) => (-p.length, p) }.fold(defaultRps)(_._2))
       if (!honorCrawlDelay) configured
       else robots.get(host).flatMap(_.crawl_delay) match {
         case Some(d) if d > 0.0 => math.min(configured, 1.0 / d)

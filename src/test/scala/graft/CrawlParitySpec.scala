@@ -52,7 +52,7 @@ class CrawlParitySpec extends AnyFunSuite {
 
   private def runSparkCrawl(workDir: String, maxRounds: Int = 50): Int =
     CrawlJob.run(spark, siteDir, workDir, maxRounds = maxRounds, bloomThreshold = 100L)
-  // bloomThreshold forced low so the Bloom path is exercised in-test
+  // bloomThreshold forced low so the cuckoo seen sketch is engaged in-test
 
   private def sparkTrace(workDir: String, last: Int): Seq[(Int, String, Int, String)] = {
     val store = new SnapshotStore(workDir)
