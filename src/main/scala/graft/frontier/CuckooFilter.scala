@@ -1,9 +1,16 @@
 package graft.frontier
 
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Partial-key cuckoo filter over 64-bit keys (Fan et al., "Cuckoo
-  * Filter: Practically Better Than Bloom", CoNEXT'14) — the in-memory
+  * Filter: Practically Better Than Bloom", CoNEXT'14) — the
   * approximate-membership sketch of the URL-seen set ([[SeenIndex]]).
   * What it buys over a Bloom sketch is DELETION: a TTL'd seen window
   * retires an expired round by deleting that round's url_hash delta —
@@ -35,9 +42,9 @@ import org.apache.spark.sql.DataFrame
   *
   * Sizing: 4-slot buckets, 16-bit fingerprints, power-of-two bucket
   * count at ≤~0.95 load → ~2.4 bytes/key at high occupancy (vs ~1.1
-  * bytes/key for a 3% Bloom) — deletion costs ~2× space. At the
-  * 10^10 design point the seen set rides hash-range [[ShardedBloom]]
-  * files instead; this class is the single-sketch cell. */
+  * bytes/key for a 3% Bloom) — deletion costs ~2× space. The seen set
+  * at every scale is S of these, one per hash range of url_hash, each
+  * stored as a file ([[CuckooShards]]). */
 final class CuckooFilter private (
     val numBuckets: Int, // power of two
     private val slots: Array[Short], // numBuckets * 4, 0 = empty
@@ -143,7 +150,7 @@ final class CuckooFilter private (
     * subtracting a sketch of keys equals deleting the keys one by one.
     * Returns the number of entries removed, or None when either filter
     * is saturated or an entry is not found; this filter is then partly
-    * modified, so callers subtract from a [[copySketch]]. */
+    * modified, and the caller discards it. */
   def subtract(other: CuckooFilter): Option[Long] = {
     require(other.numBuckets == numBuckets,
       s"cannot subtract cuckoo filters of different geometry ($numBuckets vs ${other.numBuckets})")
@@ -179,11 +186,23 @@ final class CuckooFilter private (
   private def nextBit(): Boolean = { lcg = lcg * 6364136223846793005L + 1442695040888963407L; (lcg >>> 63) != 0L }
   private def nextSlot(): Int = { lcg = lcg * 6364136223846793005L + 1442695040888963407L; ((lcg >>> 33) & 3L).toInt }
 
-  /** Independent copy (cloned slot array) — the seen index adds to and
-    * deletes from a copy and republishes, so in-flight plans holding a
-    * broadcast of the previous sketch never see shared mutation. */
+  /** Independent copy (cloned slot array). */
   def copySketch(): CuckooFilter =
     new CuckooFilter(numBuckets, slots.clone(), stash, lcg, saturatedFlag)
+
+  /** The whole state — geometry, slots, stash, saturation and the
+    * eviction walk's LCG — so a filter read back by [[CuckooFilter.readFrom]]
+    * goes on exactly as this one would. */
+  def writeTo(out: DataOutputStream): Unit = {
+    out.writeInt(numBuckets)
+    out.writeLong(lcg)
+    out.writeBoolean(saturatedFlag)
+    out.writeInt(stash.size)
+    stash.foreach { case (b, fp) => out.writeInt(b); out.writeShort(fp) }
+    val buf = java.nio.ByteBuffer.allocate(slots.length * 2)
+    buf.asShortBuffer().put(slots)
+    out.write(buf.array())
+  }
 }
 
 object CuckooFilter {
@@ -218,20 +237,170 @@ object CuckooFilter {
 
   def apply(expectedItems: Long): CuckooFilter = new CuckooFilter(bucketsFor(expectedItems))
 
+  /** The filter [[CuckooFilter.writeTo]] wrote. */
+  def readFrom(in: DataInputStream): CuckooFilter = {
+    val m = in.readInt()
+    val lcg = in.readLong()
+    val saturated = in.readBoolean()
+    val stash = List.fill(in.readInt())((in.readInt(), in.readShort()))
+    val bytes = new Array[Byte](m * 8)
+    in.readFully(bytes)
+    val slots = new Array[Short](m * 4)
+    java.nio.ByteBuffer.wrap(bytes).asShortBuffer().get(slots)
+    new CuckooFilter(m, slots, stash, lcg, saturated)
+  }
+
   /** Build over a url_hash column: per-partition filters of the SAME
     * geometry (mergeable by fingerprint re-insert), tree-merged to the
     * driver. RDD treeAggregate because the accumulator is this custom
     * sketch. */
-  def build(df: DataFrame, expectedItems: Long): CuckooFilter =
-    buildWithBuckets(df, bucketsFor(expectedItems))
-
-  /** Build at an EXPLICIT geometry — a delta merged into, or subtracted
-    * from, the main sketch must match its bucket count. */
-  def buildWithBuckets(df: DataFrame, m: Int): CuckooFilter = {
+  def build(df: DataFrame, expectedItems: Long): CuckooFilter = {
     val spark = df.sparkSession
     import spark.implicits._
+    val m = bucketsFor(expectedItems)
     df.select("url_hash").as[Long].rdd.treeAggregate(new CuckooFilter(m))(
       (f, k) => { f.insert(k); f },
       (a, b) => a.mergeInPlace(b))
+  }
+}
+
+/** The files of the URL-seen sketch ([[SeenIndex]]). One version is S
+  * [[CuckooFilter]]s, one per hash range `pmod(url_hash, S)`, each an
+  * immutable file in a directory of the version's own, plus a sidecar of
+  * the index's counters that is renamed into place last and so marks the
+  * version complete. Every write gets a fresh directory (the round and a
+  * random tag name it), so no path is ever written twice and a reader
+  * may cache a shard by its path for good.
+  *
+  * At 10^10 seen urls the sketch is ~24 GB, too big to broadcast to
+  * every executor or to hold on the driver: one executor job writes a
+  * version, one task per shard, and a probing task loads only the shards
+  * its rows touch. With S = 1 the probe loads the one file once per JVM.
+  *
+  * All IO goes through the Hadoop FileSystem API, so the same code
+  * addresses the local FS here and HDFS on a cluster. A shard file
+  * reaches its name by rename, so a reader never sees a partial one
+  * (rename hides partial files on HDFS and the local FS; on S3A it is a
+  * copy, so there the root belongs on a consistent-rename store). */
+object CuckooShards {
+
+  private val SidecarName = "_SIDECAR"
+
+  // one per JVM: each new Configuration parses Hadoop's XML defaults again
+  private lazy val hadoopConf = new Configuration()
+
+  private def fs(p: Path): FileSystem = p.getFileSystem(hadoopConf)
+
+  private def shardFile(dir: String, i: Int): Path = new Path(dir, f"shard-$i%05d")
+
+  private def shardOf(h: Long, shards: Int): Int = java.lang.Math.floorMod(h, shards.toLong).toInt
+
+  private def read(f: Path): CuckooFilter = {
+    val in = new DataInputStream(new BufferedInputStream(fs(f).open(f)))
+    try CuckooFilter.readFrom(in) finally in.close()
+  }
+
+  /** Writes `bytes` to `f` through a uniquely named temporary file. */
+  private def publish(f: Path, bytes: DataOutputStream => Unit): Unit = {
+    val tmp = new Path(f.getParent, s"_tmp.${f.getName}.${java.util.UUID.randomUUID()}")
+    val out = new DataOutputStream(new BufferedOutputStream(fs(f).create(tmp, true)))
+    try bytes(out) finally out.close()
+    if (!fs(f).rename(tmp, f)) fs(f).delete(tmp, false)
+  }
+
+  def exists(path: String): Boolean = { val p = new Path(path); fs(p).exists(p) }
+
+  /** A fresh directory for a version of round `round` under `root`. */
+  def newVersion(root: String, round: Int): String =
+    s"$root/r$round-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** Writes the shard files of version `dir`. Shard i starts from shard i
+    * of version `base` (or, without one, empty at `buckets` buckets),
+    * inserts the rows of `rows` (url_hash, round) whose round is in
+    * `added`, then subtracts one sketch of the same geometry over the
+    * rows whose round is in `removed`. One task per shard. Returns the
+    * entries subtracted over all shards, or None when a shard could not
+    * subtract (a saturated sketch, or an entry not found): that shard
+    * writes no file, and the version stays incomplete. */
+  def write(rows: DataFrame, dir: String, shards: Int, buckets: Int, base: Option[String],
+            added: Set[Int], removed: Set[Int]): Option[Long] = {
+    val counts = rows.select("url_hash", "round").rdd
+      .map(r => (shardOf(r.getLong(0), shards), (r.getLong(0), r.getInt(1))))
+      .partitionBy(new HashPartitioner(shards)) // a shard's key is its partition
+      .mapPartitionsWithIndex { (i, it) =>
+        val cf = base.fold(new CuckooFilter(buckets))(b => read(shardFile(b, i)))
+        lazy val leaving = new CuckooFilter(cf.numBuckets)
+        it.foreach { case (_, (h, r)) =>
+          if (added(r)) cf.insert(h)
+          if (removed(r)) leaving.insert(h)
+        }
+        val n = if (removed.isEmpty) Some(0L) else cf.subtract(leaving)
+        if (n.isDefined) publish(shardFile(dir, i), cf.writeTo)
+        Iterator(n)
+      }.collect()
+    if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+  }
+
+  /** Marks version `dir` complete with its sidecar. */
+  def commit(dir: String, sidecar: Map[String, Long]): Unit =
+    publish(new Path(dir, SidecarName), _.write(
+      sidecar.map { case (k, v) => s"$k=$v\n" }.mkString.getBytes(UTF_8)))
+
+  /** The complete version written for round `round` under `root`, with
+    * its sidecar, if there is one. */
+  def committed(root: String, round: Int): Option[(String, Map[String, Long])] = {
+    val r = new Path(root)
+    val named = if (!fs(r).exists(r)) Nil
+      else fs(r).listStatus(r).toSeq.map(_.getPath).filter(_.getName.startsWith(s"r$round-"))
+    named.map(d => new Path(d, SidecarName)).find(f => fs(f).exists(f)).map { f =>
+      val in = fs(f).open(f)
+      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      (f.getParent.toString, text.linesIterator.map(_.split('=')).map(kv => kv(0) -> kv(1).toLong).toMap)
+    }
+  }
+
+  /** Deletes every version under `root` but `keep`. */
+  def dropAllBut(root: String, keep: Option[String]): Unit = {
+    val r = new Path(root)
+    val kept = keep.map(k => new Path(k).getName)
+    if (fs(r).exists(r)) fs(r).listStatus(r).map(_.getPath)
+      .filterNot(p => kept.contains(p.getName)).foreach(p => fs(p).delete(p, true))
+  }
+
+  /** Split-path seen filter against version `dir`: [[SeenIndex.antiJoin]]
+    * with a per-task probe of the shard files. With S > 1 the probe side
+    * is repartitioned by shard first, so a task loads only the shards of
+    * the rows it holds (the probe is then nondeterministic, which keeps
+    * the filter above the repartition). */
+  def notSeen(df: DataFrame, exact: DataFrame, dir: String, shards: Int): DataFrame = {
+    val probe = new Probe(dir, shards)
+    val maybeSeen = udf((h: Long) => probe.mightContain(h))
+    if (shards == 1) SeenIndex.antiJoin(df, exact, "url_hash", Some(maybeSeen(col("url_hash"))))
+    else SeenIndex.antiJoin(df.repartition(shards, pmod(col("url_hash"), lit(shards.toLong))),
+      exact, "url_hash", Some(maybeSeen.asNondeterministic()(col("url_hash"))))
+  }
+
+  /** One task's view of a version (each task deserializes its own): a
+    * shard is fetched from [[Loaded]] on its first row. */
+  private final class Probe(dir: String, shards: Int) extends Serializable {
+    @transient private lazy val local = new Array[CuckooFilter](shards)
+    def mightContain(h: Long): Boolean = {
+      val i = shardOf(h, shards)
+      if (local(i) == null) local(i) = Loaded(dir, shards, i)
+      local(i).mightContain(h)
+    }
+  }
+
+  /** The shards this JVM has read, by version directory: a path is never
+    * rewritten, so a shard is read once per JVM. The two versions used
+    * last stay (a round probes one, the next round the other). */
+  private object Loaded {
+    private final class Slot(f: Path) { lazy val filter: CuckooFilter = read(f) }
+    private val versions = new java.util.LinkedHashMap[String, Array[Slot]](4, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Array[Slot]]): Boolean = size > 2
+    }
+    def apply(dir: String, shards: Int, i: Int): CuckooFilter =
+      versions.synchronized(versions.computeIfAbsent(dir,
+        d => Array.tabulate(shards)(j => new Slot(shardFile(d, j)))))(i).filter
   }
 }

@@ -33,9 +33,10 @@ object Scheduler {
       // blocks re-crawl only while round - r0 <= ttl; after expiry a
       // link-rediscovery makes it fetchable again. None = seen forever.
       seenTtlRounds: Option[Int] = None,
-      // 10^10 scale path: shard the seen-set Bloom sketch across S
-      // hash-range files instead of one broadcast (ShardedBloom). None =
-      // single broadcast sketch (fine until ~10^9 keys).
+      // The number of hash-range shards of the seen set's cuckoo sketch
+      // (SeenIndex, one file per shard). None = one shard, which each
+      // executor loads whole (fine until ~10^9 keys); at 10^10 a probing
+      // task loads only the shards its rows touch.
       bloomShards: Option[Int] = None,
       // With a seen TTL: delete snapshot DATA of rounds that have left
       // the active window (SnapshotStore.expire — Iceberg
@@ -123,11 +124,10 @@ object Scheduler {
       // fetch join once more per round (a second sink cannot ride the
       // extract write's scan).
       archiveWarc: Boolean = false,
-      // The in-memory sketch fronting the exact seen anti-join
-      // (bloomShards overrides it): "cuckoo" (frontier.CuckooFilter,
-      // via frontier.SeenIndex) is the only value; the single Bloom
-      // sketch is retired. The key stays only because existing callers
-      // still pass it.
+      // The sketch fronting the exact seen anti-join: "cuckoo"
+      // (frontier.CuckooFilter, via frontier.SeenIndex) is the only
+      // value. The key stays only because existing callers still pass
+      // it.
       seenSketch: String = "cuckoo")
 
   object Config {
@@ -250,20 +250,13 @@ object Scheduler {
   }
 
   /** Rank pre-gated candidates within host and keep rank ≤ budget (W2),
-    * then the W4 global cap. The candidate set is SMALL (one batch
-    * partition + the carry delta), never the whole frontier. */
+    * then the W4 global cap: batch 0 of [[assignBatches]], whose
+    * within-batch rank is the rank. The candidate set is SMALL (one
+    * batch partition + the carry delta), never the whole frontier. */
   def rankSelect(candidates: DataFrame, limits: DataFrame, cfg: Config,
-                 robots: Option[DataFrame] = None): DataFrame = {
-    val budgets = hostBudgets(candidates, limits, cfg, robots)
-    val w = Window.partitionBy(col("host"))
-      .orderBy(desc_nulls_last("priority"), asc("url"))
-    val selected = candidates
-      .join(budgets, Seq("host"), "left")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= coalesce(col("budget"), lit(1L)))
-      .drop("budget")
-    globalCap(selected, cfg)
-  }
+                 robots: Option[DataFrame] = None): DataFrame =
+    globalCap(assignBatches(candidates, limits, cfg, robots)
+      .filter(col("batch_no") === 0).drop("batch_no"), cfg)
 
   /** W4: the global cap per round over ranked rows — deterministic
     * (priority DESC NULLS LAST, host, rank); (host, rank) is unique so the

@@ -1,7 +1,6 @@
 package graft.frontier
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.checkpoint.SnapshotStore
@@ -14,34 +13,35 @@ import graft.checkpoint.SnapshotStore
   * deltas of its last ttl+1 rounds, so an expired url blocks nothing and
   * a link-rediscovery re-fetches it.
   *
-  * In front of the exact anti-join sits an approximate-membership
-  * sketch, engaged once the window outgrows `threshold`: the
-  * [[CuckooFilter]] in memory, broadcast into the filter, or — the 10^10
-  * path, `Config.bloomShards` — hash-range [[ShardedBloom]] files that
-  * cover every delta from round 0 (a shard gap would be a false negative
-  * = a re-crawl). The cuckoo grows by a geometric rebuild and retires the
-  * deltas that leave the TTL window by deletion, so it stays tight
-  * through an arbitrarily long TTL crawl. Either sketch is a prefilter
-  * only: the trace is the exact anti-join's.
+  * In front of the exact anti-join sits a cuckoo sketch, engaged once
+  * the window outgrows `threshold`: `shards` hash-range [[CuckooFilter]]
+  * files ([[CuckooShards]]; `Config.bloomShards`, 1 by default), one
+  * version per round in `root`. The sketch grows by a geometric rebuild
+  * and retires the deltas that leave the TTL window by deletion
+  * (the sliding-window expiry of "A Learned Cuckoo Filter for AMQ over
+  * Variable-sized Sliding Windows", SIGMOD'23), so it stays tight
+  * through an arbitrarily long TTL crawl. It is a prefilter only: the
+  * trace is the exact anti-join's.
   *
-  * An immutable value for one round: `add` and `expire` return the next
-  * index and never mutate a sketch a running plan may hold (they work on
-  * a copy), so `add` can run on another thread while the round's
-  * next-epoch assign still reads the previous index. The round's window
-  * relation is built once, by `open` or by the `add` that ends the
-  * previous round, so `notSeen` lists no delta files. */
+  * An immutable value for one round: `add` writes the next round's
+  * version to a new directory and never touches the one this round's
+  * plans probe, so it can run on another thread while the round's
+  * next-epoch assign still reads this index. The round's window relation
+  * is built once, by `open` or by the `add` that ends the previous
+  * round, so `notSeen` lists no delta files. */
 final case class SeenIndex private (
     spark: SparkSession,
     ttl: Option[Int],
     threshold: Long,
+    shards: Int,
+    root: String, // the sketch's versions, one directory each
     round: Int, // the round this index serves
     deltas: Vector[SeenIndex.Delta], // the retained rounds, oldest first
     window: DataFrame, // the (url_hash, url) rows round `round` treats as seen
-    shards: Option[ShardedBloom.Shards],
-    cuckoo: Option[CuckooFilter],
+    sketch: Option[String], // the version this round probes
     capacity: Long,
-    // rounds whose deltas are already absent from the cuckoo sketch
-    // (deleted, or left out by a rebuild from a TTL window)
+    // rounds whose deltas are already absent from the sketch (deleted,
+    // or left out by a rebuild from a TTL window)
     deletedThrough: Int,
     expiredDeletes: Long,
     expiryRebuilds: Long) {
@@ -60,9 +60,6 @@ final case class SeenIndex private (
   private def at(r: Int): SeenIndex =
     copy(round = r, window = read(activeAt(r)).select("url_hash", "url"))
 
-  /** The (url_hash, url) rows round `r` treats as seen. */
-  private def seenAt(r: Int): DataFrame = if (r == round) window else at(r).window
-
   /** The url_hash rows of the deltas of round `v` and later. */
   def seenSince(v: Int): DataFrame = read(deltas.filter(_.round >= v)).select("url_hash")
 
@@ -72,75 +69,73 @@ final case class SeenIndex private (
     * the exact join. */
   def notSeen(df: DataFrame, except: Option[DataFrame] = None): DataFrame = {
     val exact = except.fold(window)(e => window.join(e, Seq("url_hash"), "left_anti"))
-    shards match {
-      case Some(sh) => ShardedBloom.notSeen(df, exact, sh)
-      case None =>
-        val maybe = cuckoo.map { cf =>
-          val b = spark.sparkContext.broadcast(cf)
-          udf((h: Long) => b.value.mightContain(h)).apply(col("url_hash"))
-        }
-        antiJoin(df, exact, "url_hash", maybe)
-    }
+    sketch.fold(antiJoin(df, exact, "url_hash", None))(CuckooShards.notSeen(df, exact, _, shards))
   }
 
   /** The index for the next round, after this round committed its delta
-    * of `rows` rows at `path`. The cuckoo merges the delta's sketch into a
-    * copy of the published one, or rebuilds from the window when it would
-    * pass half its capacity. */
+    * of `rows` rows at `path`. One executor job writes the next version:
+    * each shard merges the delta into this round's shard (or, past half
+    * the capacity, is rebuilt from the window), then subtracts the deltas
+    * that leave the TTL window, as one sketch of them at the same
+    * geometry. A leaving delta whose file is gone, or a shard that cannot
+    * subtract (saturation, bookkeeping drift), rebuilds the version from
+    * the next round's window instead; either way no false negative can
+    * arise, since only entries of rounds outside the exact window are
+    * removed. Run before retention drops any delta file. */
   def add(path: String, rows: Long): SeenIndex = {
     val next = copy(deltas = deltas :+ Delta(round, path, rows)).at(round + 1)
     val n = next.rowsAt(round)
-    lazy val delta = read(Seq(next.deltas.last))
-    shards match {
-      case Some(sh) => ShardedBloom.add(delta, sh); next
-      case None if n <= threshold => next
-      case None if cuckoo.isEmpty || n > capacity / 2 => next.rebuilt(round)
-      case None =>
-        val cf = cuckoo.get.copySketch()
-        cf.mergeInPlace(CuckooFilter.buildWithBuckets(delta, cf.numBuckets))
-        next.copy(cuckoo = Some(cf))
+    if (n <= threshold) next.copy(sketch = None)
+    else {
+      val grow = sketch.isEmpty || n > capacity / 2
+      val from = if (grow) next.rebuiltAt(round) else next
+      val leaving = ttl.fold(Vector.empty[Delta])(t =>
+        next.deltas.filter(d => d.round > from.deletedThrough && round + 1 - d.round > t))
+      val swept = if (leaving.isEmpty) from else from.copy(deletedThrough = round - ttl.get)
+      val merged =
+        if (leaving.exists(d => !CuckooShards.exists(d.path))) None
+        else swept.written(if (grow) next.activeAt(round) else Vector(next.deltas.last),
+          leaving, if (grow) None else sketch)
+      // a version that subtracts nothing always completes
+      merged.getOrElse(swept.rebuiltAt(round + 1).copy(expiryRebuilds = expiryRebuilds + 1)
+        .written(next.activeAt(round + 1), Nil, None).get).committed
     }
   }
 
-  /** The cuckoo sketch built from round `r`'s window. */
-  private def rebuilt(r: Int): SeenIndex = {
-    val cap = math.max(rowsAt(r) * 4, capacity)
-    copy(capacity = cap, cuckoo = Some(CuckooFilter.build(seenAt(r), cap)),
+  /** The capacity and deletion mark of a sketch rebuilt from round `r`'s
+    * window. */
+  private def rebuiltAt(r: Int): SeenIndex =
+    copy(capacity = math.max(rowsAt(r) * 4, capacity),
       deletedThrough = ttl.fold(deletedThrough)(t => r - t - 1))
+
+  /** This index probing a new version: `base` (None: an empty sketch of
+    * this capacity) plus the deltas `added`, minus the deltas `removed`;
+    * None when a shard could not subtract. */
+  private def written(added: Seq[Delta], removed: Seq[Delta], base: Option[String]): Option[SeenIndex] = {
+    val dir = CuckooShards.newVersion(root, round)
+    val buckets = CuckooFilter.bucketsFor((capacity + shards - 1) / shards)
+    CuckooShards.write(read((added ++ removed).distinct), dir, shards, buckets, base,
+      added.map(_.round).toSet, removed.map(_.round).toSet)
+      .map(k => copy(sketch = Some(dir), expiredDeletes = expiredDeletes + k))
   }
 
-  /** This index with the deltas that left the TTL window dropped from
-    * the cuckoo sketch (the window is already without them): one sketch of
-    * them, built on executors at the same geometry, is subtracted from a
-    * copy of the published sketch. Run before retention drops their
-    * files. A missing file, an entry not found (bookkeeping drift) or a
-    * saturated sketch rebuilds from the window instead; either way no
-    * false negative can arise, since only entries of rounds outside the
-    * exact window are removed. */
-  def expire(): SeenIndex = (cuckoo, ttl) match {
-    case (Some(published), Some(t)) =>
-      val leaving = deltas.filter(d => d.round > deletedThrough && round - d.round > t)
-      if (leaving.isEmpty) this
-      else {
-        val cf = published.copySketch()
-        val removed =
-          if (cf.saturated || !leaving.forall(d => new java.io.File(d.path).exists())) None
-          else cf.subtract(CuckooFilter.buildWithBuckets(read(leaving), cf.numBuckets))
-        val next = removed match {
-          case Some(n) => copy(cuckoo = Some(cf), expiredDeletes = expiredDeletes + n)
-          case None => rebuilt(round).copy(expiryRebuilds = expiryRebuilds + 1)
-        }
-        next.copy(deletedThrough = math.max(next.deletedThrough, round - t - 1))
-      }
-    case _ => this
+  /** This index with its version marked complete: the sidecar holds what
+    * `open` needs to go on from it. */
+  private def committed: SeenIndex = {
+    sketch.foreach(CuckooShards.commit(_, Map("shards" -> shards.toLong, "capacity" -> capacity,
+      "deleted_through" -> deletedThrough.toLong) ++ counters.map { case (k, v) => k -> v.toLong }))
+    this
   }
+
+  /** Deletes every sketch version but this index's: once the round that
+    * probed the previous one is over, no plan reads it. */
+  def dropSuperseded(): Unit = CuckooShards.dropAllBut(root, sketch)
 
   /** Manifest metrics: cumulative entries the expiry deleted and its
     * fallback rebuilds (the proof that deletes, not the safety net,
-    * carried expiry). The sharded path deletes nothing and has none. */
+    * carried expiry). */
   def counters: Map[String, Double] =
-    if (shards.isDefined) Map.empty
-    else Map("cuckoo_expired_deletes" -> expiredDeletes.toDouble,
+    Map("cuckoo_expired_deletes" -> expiredDeletes.toDouble,
       "cuckoo_expiry_rebuilds" -> expiryRebuilds.toDouble)
 }
 
@@ -153,10 +148,12 @@ object SeenIndex {
     StructType.fromDDL("round INT, host STRING, rank INT, url STRING, url_hash BIGINT")
 
   /** The seen set for round `round` of the crawl in `store`: the deltas
-    * of every retained earlier round, the sketch over the window
-    * (sharded files rebuilt from it on every open — a kill between
-    * commit and a shard add could otherwise lose a delta), and the
-    * cumulative expiry counters of the last manifest. */
+    * of every retained earlier round and the sketch over the window with
+    * `bloomShards` shards (1 by default). The version the last committed
+    * round wrote is reused, counters included, when its sidecar has the
+    * same shard count and it still holds every delta of the window;
+    * otherwise the sketch is rebuilt from the window and the counters
+    * read from the last manifest. */
   def open(spark: SparkSession, store: SnapshotStore, round: Int, ttl: Option[Int],
            threshold: Long, bloomShards: Option[Int]): SeenIndex = {
     val ds = (0 until round).filterNot(store.isExpired).map { v =>
@@ -165,21 +162,26 @@ object SeenIndex {
     }.toVector
     val last = if (round == 0) Map.empty[String, Double] else store.manifest(round - 1).metrics
     def counter(k: String): Long = last.getOrElse(k, 0.0).toLong
-    val empty = SeenIndex(spark, ttl, threshold, round, ds, spark.emptyDataFrame, None, None, 0L,
+    val shards = bloomShards.getOrElse(1)
+    val root = s"${store.root}/seen_sketch"
+    val empty = SeenIndex(spark, ttl, threshold, shards, root, round, ds, spark.emptyDataFrame, None, 0L,
       ttl.fold(-1)(t => round - t - 1),
       counter("cuckoo_expired_deletes"), counter("cuckoo_expiry_rebuilds")).at(round)
     val n = empty.rowsAt(round)
-    val base = empty.copy(capacity = math.max(threshold * 8, n * 4).max(1024L))
-    bloomShards match {
-      case Some(s) =>
-        val sh = ShardedBloom.Shards(s"${store.root}/bloom_shards", s,
-          itemsPerShard = math.max(1024L, base.capacity / s), fpp = 0.03)
-        ShardedBloom.clear(sh.dir)
-        if (n > 0) ShardedBloom.add(base.seenAt(round), sh)
-        base.copy(shards = Some(sh))
-      case None if n > threshold => base.rebuilt(round)
-      case None => base
+    val reused = CuckooShards.committed(root, round).collect {
+      case (dir, side) if side("shards") == shards &&
+          empty.activeAt(round).forall(_.round > side("deleted_through")) =>
+        empty.copy(sketch = Some(dir), capacity = side("capacity"),
+          deletedThrough = side("deleted_through").toInt,
+          expiredDeletes = side("cuckoo_expired_deletes"), expiryRebuilds = side("cuckoo_expiry_rebuilds"))
     }
+    val index = reused.getOrElse {
+      val base = empty.copy(capacity = math.max(threshold * 8, n * 4).max(1024L))
+      if (n > threshold) base.rebuiltAt(round).written(base.activeAt(round), Nil, None).get.committed
+      else base
+    }
+    index.dropSuperseded()
+    index
   }
 
   /** Split-path anti-join: with a membership test `maybeSeen`, the rows

@@ -500,8 +500,7 @@ object CrawlJob {
 
     /** The state after the last committed round of the crawl in `store`
       * (round 0's when there is none), or None when that crawl finished:
-      * a re-run then opens no seen index (the sharded one rewrites its
-      * files) and does no round work. */
+      * a re-run then opens no seen index and does no round work. */
     def resume(spark: SparkSession, store: SnapshotStore, cfg: Scheduler.Config,
                bloomThreshold: Long): Option[CrawlState] = {
       val round = store.latestVersion.map(_ + 1).getOrElse(0)
@@ -949,12 +948,13 @@ object CrawlJob {
             observed(visitObs, "n_denied")
           }(scala.concurrent.ExecutionContext.global)
 
-          // The seen index takes the round's delta CHAINED onto the
-          // visited write, overlapped with the epoch-next assign below
-          // (it was the last serialized job of every round); the index
-          // is immutable, so this round's in-flight plans keep the
-          // sketch they captured, and the next round's state takes the
-          // next index at the await after commit
+          // The seen index takes the round's delta and drops the deltas
+          // that leave the TTL window CHAINED onto the visited write,
+          // overlapped with the epoch-next assign below (it was the last
+          // serialized job of every round); the index is immutable and
+          // writes its next sketch version to a new directory, so this
+          // round's in-flight plans keep probing theirs, and the next
+          // round's state takes the next index at the await after commit
           val seenF = visitedF.map(nDenied => s.seen.add(visitedPath, nScheduled + nDenied))(
             scala.concurrent.ExecutionContext.global)
 
@@ -1036,11 +1036,10 @@ object CrawlJob {
                else Map.empty))
           phase("commit")
 
-          val seenNext = scala.concurrent.Await.result(seenF, scala.concurrent.duration.Duration.Inf)
+          val seen = scala.concurrent.Await.result(seenF, scala.concurrent.duration.Duration.Inf)
+          // every plan of this round is done: its sketch version can go
+          seen.dropSuperseded()
           phase("seen")
-          // the sketch drops the deltas leaving the window first (a
-          // resumed run builds its sketch from the window instead)
-          val seen = if (round + 1 < maxRounds) seenNext.expire() else seenNext
           // retention: rounds that left the TTL window hold no table any
           // future round (or resume) reads — drop their data files,
           // keep manifests. The active epoch's `assigned` table lives at

@@ -362,9 +362,9 @@ class CrawlParitySpec extends AnyFunSuite {
 
   test("a crawl resumed before every round commits the same manifests as an uninterrupted one") {
     val rounds = 6
-    def stepped(cfg: graft.frontier.Scheduler.Config): (String, Int) = {
+    def stepped(cfg: graft.frontier.Scheduler.Config, bloomThreshold: Long = 100L): (String, Int) = {
       val wd = java.nio.file.Files.createTempDirectory("graft_stepped").toString
-      (wd, (1 to rounds).map(r => CrawlJob.run(spark, siteDir, wd, cfg, maxRounds = r, bloomThreshold = 100L)).last)
+      (wd, (1 to rounds).map(r => CrawlJob.run(spark, siteDir, wd, cfg, maxRounds = r, bloomThreshold = bloomThreshold)).last)
     }
     // the budget-bound default (carry, multi-batch epochs, general path)
     val whole = java.nio.file.Files.createTempDirectory("graft_whole").toString
@@ -378,6 +378,17 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(fastStepped == math.min(fastCrawl._2, rounds - 1))
     manifests(fastWd, fastStepped).zip(manifests(fastCrawl._1, fastStepped)).foreach { case (a, b) =>
       assert(a == b, s"fast-path round ${a.version}")
+    }
+    // a seen TTL with expiry and the sketch engaged from the start: the
+    // cuckoo_* counters must carry on across every stop as well
+    val ttlCfg = graft.frontier.Scheduler.Config(seenTtlRounds = Some(1), expireBeyondTtl = true)
+    val ttlWhole = java.nio.file.Files.createTempDirectory("graft_whole_ttl").toString
+    val ttlLast = CrawlJob.run(spark, siteDir, ttlWhole, ttlCfg, maxRounds = rounds, bloomThreshold = 10L)
+    val (ttlWd, ttlStepped) = stepped(ttlCfg, bloomThreshold = 10L)
+    assert(ttlStepped == ttlLast)
+    assert(manifests(ttlWhole, ttlLast).last.metrics("cuckoo_expired_deletes") > 0.0)
+    manifests(ttlWd, ttlLast).zip(manifests(ttlWhole, ttlLast)).foreach { case (a, b) =>
+      assert(a == b, s"TTL round ${a.version}")
     }
   }
 
@@ -456,27 +467,29 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(ref.trace.groupBy(_.url).values.count(_.size > 1) > 0)
 
     // bloomThreshold 10 forces the sketch path immediately, so BOTH the
-    // delta-merge publish and the TTL delete-and-republish run; the
-    // sketch is a prefilter over the same exact join, so the trace must
-    // be IDENTICAL to the bloom path's (and to the reference)
-    val workDir = java.nio.file.Files.createTempDirectory("graft_cuckoo").toString
-    val cfg = graft.frontier.Scheduler.Config(seenTtlRounds = Some(ttl),
-      seenSketch = "cuckoo")
-    val last = CrawlJob.run(spark, siteDir, workDir, cfg, maxRounds = rounds,
-      bloomThreshold = 10L)
-    val got = sparkTrace(workDir, last)
-    val want = ref.trace.map(t => (t.round, t.host, t.rank, t.url)).sortBy(t => (t._1, t._2, t._3))
-    assert(got.size == want.size, s"trace size: spark=${got.size} ref=${want.size}")
-    got.zip(want).foreach { case (g, w) => assert(g == w, s"trace differs: spark=$g ref=$w") }
-    assert(sparkSeen(workDir, last) == ref.seen)
+    // delta merge and the TTL delete run; the sketch is a prefilter over
+    // the same exact join, so the trace must be IDENTICAL to the
+    // reference's — with one shard and with four
+    Seq(None, Some(4)).foreach { shards =>
+      val workDir = java.nio.file.Files.createTempDirectory("graft_cuckoo").toString
+      val cfg = graft.frontier.Scheduler.Config(seenTtlRounds = Some(ttl),
+        seenSketch = "cuckoo", bloomShards = shards)
+      val last = CrawlJob.run(spark, siteDir, workDir, cfg, maxRounds = rounds,
+        bloomThreshold = 10L)
+      val got = sparkTrace(workDir, last)
+      val want = ref.trace.map(t => (t.round, t.host, t.rank, t.url)).sortBy(t => (t._1, t._2, t._3))
+      assert(got.size == want.size, s"trace size: spark=${got.size} ref=${want.size}")
+      got.zip(want).foreach { case (g, w) => assert(g == w, s"trace differs: spark=$g ref=$w") }
+      assert(sparkSeen(workDir, last) == ref.seen)
 
-    // the DELETE path carried expiry — not its rebuild safety net
-    val store = new SnapshotStore(workDir)
-    val finalMetrics = store.manifest(last).metrics
-    assert(finalMetrics.getOrElse("cuckoo_expired_deletes", 0.0) > 0.0,
-      s"no expiry deletes recorded: $finalMetrics")
-    assert(finalMetrics.getOrElse("cuckoo_expiry_rebuilds", -1.0) == 0.0,
-      s"expiry fell back to rebuild: $finalMetrics")
+      // the DELETE path carried expiry — not its rebuild safety net
+      val store = new SnapshotStore(workDir)
+      val finalMetrics = store.manifest(last).metrics
+      assert(finalMetrics.getOrElse("cuckoo_expired_deletes", 0.0) > 0.0,
+        s"no expiry deletes recorded: $finalMetrics")
+      assert(finalMetrics.getOrElse("cuckoo_expiry_rebuilds", -1.0) == 0.0,
+        s"expiry fell back to rebuild: $finalMetrics")
+    }
 
     // bad sketch name rejected up front
     val err = intercept[IllegalArgumentException] {
@@ -646,7 +659,7 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(eNone.getMessage.contains("expired"))
   }
 
-  test("sharded-Bloom seen set: trace and seen parity, incl. resume") {
+  test("sharded cuckoo seen set: trace and seen parity, incl. resume") {
     val (pages, robots, sitemaps, limits, seeds) = collectSite()
     val ref = RefCrawl.run(pages, robots, sitemaps, limits, seeds)
     val cfg = graft.frontier.Scheduler.Config(bloomShards = Some(4))
@@ -657,15 +670,28 @@ class CrawlParitySpec extends AnyFunSuite {
     assert(got.size == want.size, s"trace size: spark=${got.size} ref=${want.size}")
     got.zip(want).foreach { case (g, w) => assert(g == w, s"trace differs: spark=$g ref=$w") }
     assert(sparkSeen(workDir, last) == ref.seen)
-    // resume rebuilds the shard files from the committed seen set
+    // resume reuses the shard files the last committed round wrote: a
+    // run that opens the seen index and stops before its first round
+    // writes and deletes none
     val workKill = java.nio.file.Files.createTempDirectory("graft_shardb_kill").toString
     CrawlJob.run(spark, siteDir, workKill, cfg, maxRounds = 2, bloomThreshold = 100L)
+    val sketch = java.nio.file.Paths.get(workKill, "seen_sketch")
+    def shardFiles(): Seq[(String, Long, Long)] =
+      scala.util.Using.resource(java.nio.file.Files.walk(sketch)) { paths =>
+        paths.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).filter(java.nio.file.Files.isRegularFile(_))
+          .map(p => (sketch.relativize(p).toString, java.nio.file.Files.size(p),
+            java.nio.file.Files.getLastModifiedTime(p).toMillis)).sorted
+      }
+    val written = shardFiles()
+    assert(written.count(_._1.matches("r2-[^/]+/shard-\\d{5}")) == 4, s"no round-2 version: $written")
+    assert(CrawlJob.run(spark, siteDir, workKill, cfg, maxRounds = 2, bloomThreshold = 100L) == 1)
+    assert(shardFiles() == written, "opening the seen index rewrote shard files")
     val lastResumed = CrawlJob.run(spark, siteDir, workKill, cfg, bloomThreshold = 100L)
     assert(lastResumed == last)
     assert(sparkTrace(workKill, lastResumed) == got)
   }
 
-  test("sharded-Bloom composed with redirects + faults: the 10^10 seen path carries the fetch-side features") {
+  test("sharded cuckoo composed with redirects + faults: the 10^10 seen path carries the fetch-side features") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_site_shall").toString
     SyntheticWeb.generate(spark, dir, nPages, nHosts, seed = 42L, partitions = 4,

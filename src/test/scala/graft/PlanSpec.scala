@@ -188,26 +188,6 @@ class PlanSpec extends AnyFunSuite {
     assert(topk.count() == 10)
   }
 
-  test("epoch frontier: round-k scheduling scans ONLY batch k's partition") {
-    import spark.implicits._
-    val frontier = (0 until 200).map { i =>
-      (s"https://h${i % 4}.example/p$i", i.toLong, s"h${i % 4}.example", 1, Option.empty[Double])
-    }.toDF("url", "url_hash", "host", "depth", "priority")
-    val limits = Seq(("h0.example", 2.0)).toDF("pattern", "rps")
-    val cfg = graft.frontier.Scheduler.Config(defaultRps = 1.0, roundSeconds = 5.0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_assigned").toString
-    graft.frontier.Scheduler.assignBatches(frontier, limits, cfg)
-      .write.partitionBy("batch_no").mode("overwrite").parquet(dir)
-    val scan = spark.read.parquet(dir).filter(col("batch_no") === 3)
-    val p = scan.queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters") && p.contains("batch_no"),
-      s"batch filter not pushed to partition pruning:\n${p.take(800)}")
-    // the pruned scan must read strictly fewer files than the full table
-    val partDirs = new java.io.File(dir).listFiles().count(_.getName.startsWith("batch_no="))
-    assert(partDirs > 3, s"expected multiple batch partitions, got $partDirs")
-    assert(scan.count() > 0)
-  }
-
   test("incremental dedup chain (d14): key-joined end-to-end, no all-pairs, no corpus re-sign") {
     // the whole new-batch-vs-corpus chain (fingerprint anti-join, LSH
     // bucket join, jaccard verify, final anti-join) must stay equi-
