@@ -76,7 +76,7 @@ final class CuckooFilter private (
   /** Insert; returns false only when the filter saturated (the key is
     * still covered — saturation makes membership answer true). */
   def insert(key: Long): Boolean =
-    !saturatedFlag && { insertFp(index(key, numBuckets), fingerprint(key), kickFromEither = true); true }
+    !saturatedFlag && { insertFp(index(key, numBuckets), fingerprint(key)); true }
 
   /** Delete ONE entry for the key; returns whether an entry was found.
     * On a saturated filter membership is degenerate — nothing is
@@ -131,19 +131,6 @@ final class CuckooFilter private (
     stash.forall { case (b, fp) => f(b, fp) }
   }
 
-  /** Fold `other`'s entries into this filter (same numBuckets
-    * required): each stored fingerprint re-inserts by its (bucket,
-    * fingerprint) identity — either of its two homes is derivable from
-    * either index, so the merged filter covers the union (multiset:
-    * entry counts add). */
-  def mergeInPlace(other: CuckooFilter): this.type = {
-    require(other.numBuckets == numBuckets,
-      s"cannot merge cuckoo filters of different geometry ($numBuckets vs ${other.numBuckets})")
-    if (other.saturatedFlag) { saturatedFlag = true; stash = Nil; return this }
-    other.forallEntries { (b, fp) => insertFp(b, fp.toShort); !saturatedFlag }
-    this
-  }
-
   /** Remove one entry per entry of `other` (same numBuckets required) —
     * the bulk form of [[delete]]: a stored (bucket, fingerprint) names
     * the same bucket pair `delete(key)` searches for its key, so
@@ -160,13 +147,13 @@ final class CuckooFilter private (
   }
 
   /** Store `fp` in bucket `i` or its alternate, evicting along a
-    * deterministic walk of up to MaxKicks victims (from either bucket
-    * when `kickFromEither`, else the alternate) and stashing the last. */
-  private def insertFp(i: Int, fp: Short, kickFromEither: Boolean = false): Unit = {
+    * deterministic walk of up to MaxKicks victims (starting from either
+    * bucket) and stashing the last. */
+  private def insertFp(i: Int, fp: Short): Unit = {
     if (tryPut(i, fp)) return
     val i2 = altIndex(i, fp)
     if (tryPut(i2, fp)) return
-    var curI = if (kickFromEither && nextBit()) i else i2
+    var curI = if (nextBit()) i else i2
     var curFp = fp
     var kicks = 0
     while (kicks < MaxKicks) {
@@ -185,10 +172,6 @@ final class CuckooFilter private (
 
   private def nextBit(): Boolean = { lcg = lcg * 6364136223846793005L + 1442695040888963407L; (lcg >>> 63) != 0L }
   private def nextSlot(): Int = { lcg = lcg * 6364136223846793005L + 1442695040888963407L; ((lcg >>> 33) & 3L).toInt }
-
-  /** Independent copy (cloned slot array). */
-  def copySketch(): CuckooFilter =
-    new CuckooFilter(numBuckets, slots.clone(), stash, lcg, saturatedFlag)
 
   /** The whole state — geometry, slots, stash, saturation and the
     * eviction walk's LCG — so a filter read back by [[CuckooFilter.readFrom]]
@@ -248,19 +231,6 @@ object CuckooFilter {
     val slots = new Array[Short](m * 4)
     java.nio.ByteBuffer.wrap(bytes).asShortBuffer().get(slots)
     new CuckooFilter(m, slots, stash, lcg, saturated)
-  }
-
-  /** Build over a url_hash column: per-partition filters of the SAME
-    * geometry (mergeable by fingerprint re-insert), tree-merged to the
-    * driver. RDD treeAggregate because the accumulator is this custom
-    * sketch. */
-  def build(df: DataFrame, expectedItems: Long): CuckooFilter = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val m = bucketsFor(expectedItems)
-    df.select("url_hash").as[Long].rdd.treeAggregate(new CuckooFilter(m))(
-      (f, k) => { f.insert(k); f },
-      (a, b) => a.mergeInPlace(b))
   }
 }
 
@@ -368,16 +338,18 @@ object CuckooShards {
   }
 
   /** Split-path seen filter against version `dir`: [[SeenIndex.antiJoin]]
-    * with a per-task probe of the shard files. With S > 1 the probe side
-    * is repartitioned by shard first, so a task loads only the shards of
-    * the rows it holds (the probe is then nondeterministic, which keeps
-    * the filter above the repartition). */
+    * with a per-task probe of the shard files. The probe is
+    * nondeterministic to the optimizer, which keeps the split where it
+    * is written: above `df`'s exchange, so both branches read one
+    * shuffle, and out of the constraints inferred for the exact side.
+    * With S > 1 the probe side is repartitioned by shard first, so a
+    * task loads only the shards of the rows it holds. */
   def notSeen(df: DataFrame, exact: DataFrame, dir: String, shards: Int): DataFrame = {
     val probe = new Probe(dir, shards)
-    val maybeSeen = udf((h: Long) => probe.mightContain(h))
-    if (shards == 1) SeenIndex.antiJoin(df, exact, "url_hash", Some(maybeSeen(col("url_hash"))))
-    else SeenIndex.antiJoin(df.repartition(shards, pmod(col("url_hash"), lit(shards.toLong))),
-      exact, "url_hash", Some(maybeSeen.asNondeterministic()(col("url_hash"))))
+    val maybeSeen = udf((h: Long) => probe.mightContain(h)).asNondeterministic()
+    SeenIndex.antiJoin(
+      if (shards == 1) df else df.repartition(shards, pmod(col("url_hash"), lit(shards.toLong))),
+      exact, "url_hash", Some(maybeSeen(col("url_hash"))))
   }
 
   /** One task's view of a version (each task deserializes its own): a

@@ -177,8 +177,39 @@ object Scheduler {
     }
   }
 
-  /** Resolve per-host budgets for the hosts present in `frontier`.
-    * `limits` is the tiny (pattern, rps) config table → broadcast joins.
+  /** The configured rate table, resolved once on the driver (it is the
+    * crawl's small (pattern, rps) config table): an exact host pattern
+    * wins, else the longest matching `*.suffix` wildcard (ties between
+    * copies of one pattern take the least rate), else none — the rule
+    * of throttle.py:254-266, mirrored by RefCrawl.rpsOf. A host's rate
+    * is then a lookup per row, so the budget needs no join and no pass
+    * over the distinct hosts of the rows it ranks. */
+  final case class Rates(exact: Map[String, java.lang.Double], suffix: Map[String, java.lang.Double]) {
+    /** The configured rps of `host`; null when no pattern matches. */
+    def of(host: String): java.lang.Double =
+      if (host == null) null
+      else exact.getOrElse(host, Iterator.iterate(host.indexOf('.'))(i => host.indexOf('.', i + 1))
+        .takeWhile(_ >= 0).map(i => suffix.get(host.substring(i))).collectFirst { case Some(r) => r }
+        .orNull)
+  }
+
+  object Rates {
+    def apply(limits: DataFrame): Rates = {
+      // copies of one pattern resolve to the least rate, a null rate first
+      def least(rs: Seq[java.lang.Double]): java.lang.Double =
+        if (rs.contains(null)) null else rs.minBy(_.doubleValue)
+      val byPattern = limits.select(col("pattern"), col("rps").cast("double")).collect().toSeq
+        .collect { case r if !r.isNullAt(0) =>
+          r.getString(0) -> (if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1)))
+        }
+        .groupMap(_._1)(_._2).view.mapValues(least).toMap
+      val (wild, exact) = byPattern.partition(_._1.startsWith("*."))
+      Rates(exact, wild.map { case (p, r) => p.substring(1) -> r })
+    }
+  }
+
+  /** `rows` with each row's per-round `budget`: max(1, floor(rps ×
+    * roundSeconds)), rps being the host's configured rate or the default.
     *
     * With `cfg.honorCrawlDelay` and a `robots` table (host, crawl_delay),
     * a host-declared positive Crawl-delay CAPS the configured rate:
@@ -191,20 +222,14 @@ object Scheduler {
     * high-delay host still progresses one url per round rather than
     * starving forever (same floor the configured path has). Null /
     * non-positive / unparsable delays are ignored. The robots side is
-    * one row per host — broadcast, like the limits. */
-  def hostBudgets(frontier: DataFrame, limits: DataFrame, cfg: Config,
-                  robots: Option[DataFrame] = None): DataFrame = {
-    val hosts = frontier.select("host").distinct()
-    val wild = col("pattern").startsWith("*.")
-    // a row per pattern a host matches, then one rate per host: the exact
-    // pattern, else the longest matching suffix, ties by pattern ascending
-    // (as RefCrawl.rpsOf); grouped by the distinct's key, so no shuffle.
-    val configured = hosts
-      .join(broadcast(limits), (!wild && col("host") === col("pattern")) ||
-        (wild && col("host").endsWith(expr("substring(pattern, 2)"))), "left")
-      .groupBy("host")
-      .agg(min(struct(wild, -length(col("pattern")), col("pattern"), col("rps"))).getField("rps").as("rps"))
-      .select(col("host"), coalesce(col("rps"), lit(cfg.defaultRps)).as("rps"))
+    * one row per host, broadcast and joined by host, so the rows keep
+    * their partitioning. */
+  private def withBudget(rows: DataFrame, rates: Rates, cfg: Config,
+                         robots: Option[DataFrame]): DataFrame = {
+    val rateOf = udf((h: String) => rates.of(h))
+    // host first: the column order of the `assigned` files
+    val configured = rows.select(col("host") +: rows.columns.filter(_ != "host").map(col) :+
+      coalesce(rateOf(col("host")), lit(cfg.defaultRps)).as("rps"): _*)
     val effective = robots.filter(r =>
         cfg.honorCrawlDelay && r.columns.contains("crawl_delay")) match {
       case Some(r) =>
@@ -219,12 +244,14 @@ object Scheduler {
     }
     effective
       .withColumn("budget", greatest(lit(1L), floor(col("rps") * lit(cfg.roundSeconds))))
-      .select("host", "budget")
-      // joined onto frontier rows by host: shuffle-hash on its own host
-      // partitioning. Unhinted, AQE chose broadcast or not by which stage
-      // finished first, so an epoch assign could compile a new shape.
-      .hint("shuffle_hash")
+      .drop("rps")
   }
+
+  /** The per-host budgets (host, budget) of the hosts present in
+    * `frontier`, under the configured `limits` (pattern, rps). */
+  def hostBudgets(frontier: DataFrame, limits: DataFrame, cfg: Config,
+                  robots: Option[DataFrame] = None): DataFrame =
+    withBudget(frontier.select("host").distinct(), Rates(limits), cfg, robots).select("host", "budget")
 
   /** Robots gate (F7) over frontier-shaped rows. Returns
     * (allowed, denied, gateCache); `gateCache` is the single cached
@@ -253,10 +280,14 @@ object Scheduler {
     * then the W4 global cap: batch 0 of [[assignBatches]], whose
     * within-batch rank is the rank. The candidate set is SMALL (one
     * batch partition + the carry delta), never the whole frontier. */
+  def rankSelect(candidates: DataFrame, rates: Rates, cfg: Config,
+                 robots: Option[DataFrame]): DataFrame =
+    globalCap(assignBatches(candidates, rates, cfg, robots)
+      .filter(col("batch_no") === 0).drop("batch_no"), cfg)
+
   def rankSelect(candidates: DataFrame, limits: DataFrame, cfg: Config,
                  robots: Option[DataFrame] = None): DataFrame =
-    globalCap(assignBatches(candidates, limits, cfg, robots)
-      .filter(col("batch_no") === 0).drop("batch_no"), cfg)
+    rankSelect(candidates, Rates(limits), cfg, robots)
 
   /** W4: the global cap per round over ranked rows — deterministic
     * (priority DESC NULLS LAST, host, rank); (host, rank) is unique so the
@@ -271,21 +302,26 @@ object Scheduler {
     * `batch_no = (rank-1) / host_budget`; round k of the epoch consumes
     * only batch k (one table sorted by batch_no, read filtered to k).
     * The O(frontier) window runs once per EPOCH, not per round —
-    * per-round scheduling cost is O(batch + carry). */
-  def assignBatches(frontier: DataFrame, limits: DataFrame, cfg: Config,
-                    robots: Option[DataFrame] = None): DataFrame = {
-    val budgets = hostBudgets(frontier, limits, cfg, robots)
+    * per-round scheduling cost is O(batch + carry).
+    *
+    * The budget is a per-row lookup and the window is partitioned by
+    * host, so rows that arrive hash-partitioned by host (CrawlJob's
+    * frontier plans) are ranked with no Exchange; other rows take one. */
+  def assignBatches(frontier: DataFrame, rates: Rates, cfg: Config,
+                    robots: Option[DataFrame]): DataFrame = {
     val w = Window.partitionBy(col("host"))
       .orderBy(desc_nulls_last("priority"), asc("url"))
-    frontier
-      .join(budgets, Seq("host"), "left")
+    withBudget(frontier, rates, cfg, robots)
       .withColumn("rank", row_number().over(w))
-      .withColumn("batch_no",
-        floor((col("rank") - 1) / coalesce(col("budget"), lit(1L))).cast("int"))
+      .withColumn("batch_no", floor((col("rank") - 1) / col("budget")).cast("int"))
       // the WITHIN-batch rank = the round rank this row will get when its
       // batch is consumed — stored so a fresh epoch's first round can
       // skip re-ranking entirely (CrawlJob fast path)
-      .withColumn("rank", ((col("rank") - 1) % coalesce(col("budget"), lit(1L)) + 1).cast("int"))
+      .withColumn("rank", ((col("rank") - 1) % col("budget") + 1).cast("int"))
       .drop("budget")
   }
+
+  def assignBatches(frontier: DataFrame, limits: DataFrame, cfg: Config,
+                    robots: Option[DataFrame] = None): DataFrame =
+    assignBatches(frontier, Rates(limits), cfg, robots)
 }

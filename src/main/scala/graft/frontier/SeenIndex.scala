@@ -63,13 +63,21 @@ final case class SeenIndex private (
   /** The url_hash rows of the deltas of round `v` and later. */
   def seenSince(v: Int): DataFrame = read(deltas.filter(_.round >= v)).select("url_hash")
 
-  /** Rows of `df` (with url_hash) that this round has not seen. `except`
-    * (url_hash) lifts urls out of the blocking set — adaptive recrawl's
-    * due urls; the sketch may still hold them, which only sends them to
-    * the exact join. */
-  def notSeen(df: DataFrame, except: Option[DataFrame] = None): DataFrame = {
+  /** Rows of `df` (with url_hash) that this round has not seen, passed
+    * through `exchange`. `except` (url_hash) lifts urls out of the
+    * blocking set — adaptive recrawl's due urls; the sketch may still
+    * hold them, which only sends them to the exact join. A one-shard
+    * sketch splits the rows above the exchange, so both branches read
+    * its one shuffle; otherwise the filter runs below it, and seen rows
+    * are not shuffled. */
+  def notSeen(df: DataFrame, except: Option[DataFrame] = None,
+              exchange: DataFrame => DataFrame = identity): DataFrame = {
     val exact = except.fold(window)(e => window.join(e, Seq("url_hash"), "left_anti"))
-    sketch.fold(antiJoin(df, exact, "url_hash", None))(CuckooShards.notSeen(df, exact, _, shards))
+    sketch match {
+      case Some(dir) if shards == 1 => CuckooShards.notSeen(exchange(df), exact, dir, shards)
+      case Some(dir) => exchange(CuckooShards.notSeen(df, exact, dir, shards))
+      case None => exchange(antiJoin(df, exact, "url_hash", None))
+    }
   }
 
   /** The index for the next round, after this round committed its delta
@@ -187,7 +195,12 @@ object SeenIndex {
   /** Split-path anti-join: with a membership test `maybeSeen`, the rows
     * it rules out are definitely new and skip the exact `left_anti`
     * against `seen` on `key`; only the maybe-seen rows pay it. A false
-    * positive costs an exact probe, never a wrong row. */
+    * positive costs an exact probe, never a wrong row. The crawl splits
+    * a frontier plan's input rows just above its one host exchange
+    * ([[notSeen]]), and the merge runs above the Union: both branches
+    * read that shuffle, and the Union keeps its partitioning. (A split
+    * of merged rows is pushed below the merge's aggregate and plans one
+    * aggregate and Exchange per branch.) */
   def antiJoin(df: DataFrame, seen: DataFrame, key: String, maybeSeen: Option[Column]): DataFrame =
     maybeSeen match {
       case Some(m) =>

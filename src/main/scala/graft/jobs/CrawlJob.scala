@@ -15,18 +15,31 @@ import graft.sitemap.Sitemap
 /** The crawl round loop (SURVEY.md §3.2), epoch-batched:
   *
   *   EPOCH (once per many rounds): remaining frontier ∪ carry
+  *     → EXCHANGE: hash-partition by host
+  *     → seen-sketch prefilter + left_anti vs seen (J1, SeenIndex)
   *     → merge (min depth, max priority) → robots gate at INSERT only
-  *     → window-rank per host → batch_no = (rank-1)/budget (W2)
+  *     → host budget per row → window-rank per host → batch_no = (rank-1)/budget (W2)
   *     → write one table sorted by batch_no              [O(frontier), amortized]
   *   ROUND k of the epoch:
   *     candidates = assigned[batch_no = k] (filtered scan) ∪ carry
-  *     → merge → seen-sketch prefilter + left_anti vs seen (J1, SeenIndex)
+  *     → EXCHANGE by host → seen filter → merge
   *     → rank ≤ budget within candidates (W2) + W4 cap   [O(batch + carry)]
   *     → inner join pages ("fetch", J4)
   *     → one-pass parse → markdown/outlinks/chunks (P4/P8/G1)
-  *     → new links: canonicalize → seen filter → robots gate (insert-time F7)
+  *     → new links: canonicalize → EXCHANGE by host → seen filter → merge
+  *       → robots gate (insert-time F7)
   *     → carry′ = unselected candidates ∪ new allowed links  [∝ delta, NOT frontier]
   *     → commit snapshot: seen_delta, carry, results, chunks, trace
+  *
+  * Each frontier plan shuffles its rows once (`byHost`): `host` is a
+  * function of `url`, so the host partitioning clusters the merge's
+  * groups too, and the merge, the budget lookup and the per-host window
+  * run on it with no further Exchange. The seen filter runs on the
+  * input rows, before the merge (url_hash is a grouping key of the
+  * merge, so it drops the same urls): the sketch's split above the
+  * exchange, so both of its branches read the one shuffle, the plain
+  * anti-join below it; the exact side of either anti-join is broadcast
+  * while the seen window is small.
   *
   * Correctness vs the sequential reference (RefCrawl): per-host batches
   * under a FIXED ranking key (priority DESC NULLS LAST, url ASC) are
@@ -254,6 +267,13 @@ object CrawlJob {
     df.groupBy("url_hash", "url", "host")
       .agg(min("depth").as("depth"), max("priority").as("priority"))
       .select(frontierCols.map(col): _*)
+
+  /** `df` hash-partitioned by host: the one Exchange of a frontier plan.
+    * `host` is a function of `url`, so this partitioning also clusters
+    * the merge's (url_hash, url, host) groups, and the per-host budget
+    * lookup and window run on it as they stand. Rows already so
+    * partitioned are not shuffled again. */
+  private def byHost(df: DataFrame): DataFrame = df.repartition(col("host"))
 
   /** Round-0 frontier: seeds file (S1 semantics: skip blank + `#` lines)
     * ∪ sitemap expansion for seed hosts (S2/S3: robots Sitemap: lines →
@@ -486,11 +506,13 @@ object CrawlJob {
                                       carryRows: Long, seen: SeenIndex, due: Option[Due]) {
     def finished: Boolean = CrawlState.finished(round, epoch, carryRows)
 
-    /** Rows of `df` this round has not seen. The still-due urls (due AND
-      * not refetched since the freeze) do not block: in adaptive mode
-      * every seen filter lifts them out. */
+    /** Rows of `df` this round has not seen, hash-partitioned by host
+      * (`byHost`). The still-due urls (due AND not refetched since the
+      * freeze) do not block: in adaptive mode every seen filter lifts
+      * them out. */
     def notSeenDf(df: DataFrame): DataFrame = seen.notSeen(df, due.map(d =>
-      d.frontier.select("url_hash").join(seen.seenSince(d.freeze), Seq("url_hash"), "left_anti")))
+      d.frontier.select("url_hash").join(seen.seenSince(d.freeze), Seq("url_hash"), "left_anti")),
+      byHost)
   }
 
   private object CrawlState {
@@ -568,7 +590,7 @@ object CrawlJob {
     }
     val rules = robotsRules(spark, spark.read.parquet(s"$siteDir/robots.parquet")).cache()
     val robotsDf = rules.toDF()
-    val limits = spark.read.parquet(s"$siteDir/host_limits.parquet")
+    val rates = Scheduler.Rates(spark.read.parquet(s"$siteDir/host_limits.parquet"))
     // site-declared rate caps (Crawl-delay) fold into every budget
     // resolution when honorCrawlDelay is on — one Option threaded to all
     // three budget call sites so the epoch assign, the per-round carry
@@ -661,16 +683,18 @@ object CrawlJob {
               .select(frontierCols.map(col): _*) // drop the stored rank and batch
               .unionByName(st.carry)
           }
-          val fresh0 = st.notSeenDf(mergeFrontier(input))
+          // the seen filter runs on the input rows, at the host exchange:
+          // url_hash is a grouping key of the merge, so it drops the same
+          // urls a filter of the merged rows would
+          val unseen = st.notSeenDf(input)
           // due urls enter AFTER the seen filter (they are, by
           // construction, seen) and merge against any link-rediscovered
           // twin already in the input (min depth, max priority — the
           // injected row's depth 0 and Recrawl.priority win); they carry
           // no robots risk (only FETCHED urls have history ⇒ they were
           // allowed, and rules are static per crawl)
-          val fresh =
-            if (refreezes(round)) mergeFrontier(fresh0.unionByName(st.due.get.frontier))
-            else fresh0
+          val fresh = mergeFrontier(
+            if (refreezes(round)) byHost(unseen.unionByName(st.due.get.frontier)) else unseen)
           // F7 at insert: only the round-0 input is un-gated (later epochs
           // re-rank rows that were gated when they were first inserted)
           val (allowed, denied, nDenied) = if (round == 0) {
@@ -700,7 +724,7 @@ object CrawlJob {
                   .withColumnRenamed("link_rank", "priority")
                   .select(frontierCols.map(col): _*)
             } else allowed
-          val a = writeAssigned(Scheduler.assignBatches(toAssign, limits, cfg, budgetRobots),
+          val a = writeAssigned(Scheduler.assignBatches(toAssign, rates, cfg, budgetRobots),
             s"${store.root}/data/v$round/assigned", s"assign_epoch_r$round")
           phase("epoch-assign")
           (st.copy(epoch = Some(Epoch(round, a, 0L)), carry = emptyFrontier(spark), carryRows = 0L),
@@ -732,12 +756,12 @@ object CrawlJob {
           if (epochFresh)
             (batchDf0.select(frontierCols.map(col): _*).cache(), Scheduler.globalCap(batchDf0, cfg).cache())
           else {
-            val fr = s.notSeenDf(mergeFrontier(
+            val fr = mergeFrontier(s.notSeenDf(
                 batchDf0.observe(batchObs, count(lit(1)).as("n"))
                   .select(frontierCols.map(col): _*).unionByName(s.carry)))
               .observe(freshObs, count(lit(1)).as("n"))
               .cache()
-            (fr, Scheduler.rankSelect(fr, limits, cfg, budgetRobots).cache())
+            (fr, Scheduler.rankSelect(fr, rates, cfg, budgetRobots).cache())
           }
         cached ++= Seq(fresh, selected)
         // batch 0's row count rode the assign write's Observation when
@@ -890,23 +914,27 @@ object CrawlJob {
           }
 
           // frontier growth: outlinks → canonical keys → depth+1 (G6),
-          // seen-filtered, then robots-gated AT INSERT (F7)
+          // seen-filtered, merged on one host exchange, then robots-gated
+          // AT INSERT (F7)
           val newLinks0 = extracted
             .select(explode(col("outlinks")).as("raw_url"), (col("depth") + 1).as("depth"))
             .filter(col("depth") <= cfg.maxDepth)
           val newLinks = Frontier.withFrontierKeys(newLinks0, "raw_url")
-            .groupBy("url", "url_hash", "host")
-            .agg(min("depth").as("depth"))
             .withColumn("priority", lit(null).cast("double"))
             .select(frontierCols.map(col): _*)
-          // second anti-join excludes THIS round's selections (not yet in
-          // the committed seen set). The right side is just the
-          // round's url_hash column (≤ budget × 8 bytes) — broadcast it
-          // so the 10M-row outlink set is not shuffled for it.
-          val newFresh = s.notSeenDf(newLinks)
-            .join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
-          val (newAllowed, newDenied, newGate) = Scheduler.robotsGate(newFresh, robotsDf)
+          val (newGated, newDenied, newGate) =
+            Scheduler.robotsGate(mergeFrontier(s.notSeenDf(newLinks)), robotsDf)
           cached += newGate
+          // second anti-join excludes THIS round's selections (not yet in
+          // the committed seen set). The right side is just the round's
+          // url_hash column (≤ budget × 8 bytes) — broadcast it so the
+          // 10M-row outlink set is not shuffled for it. A selected url
+          // passed the robots gate when it was inserted, so only the
+          // allowed side can hold one; the join reads the gate's cache,
+          // where the seen split's two branches cannot each plan a
+          // broadcast of the cached `selected` of their own.
+          val newAllowed =
+            newGated.join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
           phase("links")
 
           // ONE `visited` table = scheduled rows (rank set) ∪ denied rows
@@ -933,9 +961,9 @@ object CrawlJob {
           val carryNext =
             if (epochFresh && cfg.globalBudget.isEmpty)
               newAllowed.select(frontierCols.map(col): _*)
-            else mergeFrontier(
+            else mergeFrontier(byHost(
               fresh.join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
-                .unionByName(newAllowed))
+                .unionByName(newAllowed)))
 
           // The round's two bookkeeping writes — `visited` and
           // carry/next-epoch — are independent: run them CONCURRENTLY so
@@ -972,7 +1000,7 @@ object CrawlJob {
           val carryPath = s"${store.root}/data/v$round/carry"
           val (next, nCarry) =
             if (preAssignNext) {
-              val a = writeAssigned(Scheduler.assignBatches(carryNext, limits, cfg, budgetRobots),
+              val a = writeAssigned(Scheduler.assignBatches(carryNext, rates, cfg, budgetRobots),
                 s"${store.root}/data/v$round/assigned_next", s"assign_next_r$round")
               phase("epoch-next")
               (Some(a), 0L)

@@ -92,24 +92,26 @@ object Redirects {
       .localCheckpoint(true)
     val done = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-    // Per hop, ONE materialized table: the stepped join is LAZILY
-    // checkpointed and materialized by the in-flight count — so the
-    // hop's single job both truncates lineage and tells us whether any
-    // chain is still walking. All three consumers (the two retirement
-    // branches and the next active set) then read the cached blocks;
-    // the previous shape checkpointed only the active side, which made
-    // the final union re-execute every hop's join twice more (once per
-    // retirement branch). Chains that all retire before maxHops stop
+    // Per hop, ONE materialized table: the stepped join is checkpointed
+    // eagerly, and the in-flight count rides that job as an Observation —
+    // so the hop's single job both truncates lineage and tells us whether
+    // any chain is still walking. All three consumers (the two
+    // retirement branches and the next active set) then read the cached
+    // blocks; the previous shape checkpointed only the active side, which
+    // made the final union re-execute every hop's join twice more (once
+    // per retirement branch). Chains that all retire before maxHops stop
     // the walk early — the remaining hops could only contribute empty
     // branches.
     var inflight = 1L
     var hop = 0
     while (hop < maxHops && inflight > 0) {
       hop += 1
-      val stepped = active.join(rmap, active("cur") === rmap("src"), "left")
-        .localCheckpoint(false)
       val walking = col("src").isNotNull && !array_contains(col("path"), col("dst"))
-      inflight = stepped.filter(walking).count() // materializes the checkpoint
+      val obs = org.apache.spark.sql.Observation()
+      val stepped = active.join(rmap, active("cur") === rmap("src"), "left")
+        .observe(obs, count(when(walking, 1)).as("inflight"))
+        .localCheckpoint(true)
+      inflight = obs.get("inflight").asInstanceOf[Long]
       // no outgoing redirect → chain ended at cur (terminal or dangling)
       done += stepped.filter(col("src").isNull)
         .select(col("start"), col("cur"), col("hops"), lit("terminal").as("k"))

@@ -6,7 +6,7 @@ import graft.frontier.CuckooFilter
 
 /** The cuckoo seen-sketch's contract: NO false negatives ever (the
   * crawl-correctness invariant), multiset delete safety, conservative
-  * saturation, deterministic merge — plus the Spark build path. */
+  * saturation, bulk subtraction — plus the Spark build path. */
 class CuckooFilterSpec extends AnyFunSuite {
 
   private def keys(n: Int, seed: Long): Array[Long] = {
@@ -52,22 +52,12 @@ class CuckooFilterSpec extends AnyFunSuite {
     assert(!cf.delete(many(0)), "saturated filter refuses deletes (caller rebuilds)")
   }
 
-  test("merge covers the union; same-geometry requirement enforced") {
-    val a = CuckooFilter(4000L)
-    val b = CuckooFilter(4000L)
-    val ka = keys(2000, 4L); val kb = keys(2000, 5L)
-    ka.foreach(a.insert); kb.foreach(b.insert)
-    a.mergeInPlace(b)
-    assert((ka ++ kb).forall(a.mightContain))
-    val c = CuckooFilter(100000L)
-    assertThrows[IllegalArgumentException](a.mergeInPlace(c))
-  }
-
   test("subtract equals deleting the sketch's keys one by one") {
     val rounds = (0 until 5).map(r => keys(2000, 200L + r))
+    // same inserts in the same order: the same filter
     val byKey = CuckooFilter(10000L)
-    rounds.foreach(_.foreach(byKey.insert))
-    val bySketch = byKey.copySketch()
+    val bySketch = CuckooFilter(10000L)
+    rounds.foreach(_.foreach { k => byKey.insert(k); bySketch.insert(k) })
     rounds.take(3).foreach(_.foreach(k => assert(byKey.delete(k))))
     val leaving = CuckooFilter(10000L)
     rounds.take(3).foreach(_.foreach(leaving.insert))
@@ -120,10 +110,26 @@ class CuckooFilterSpec extends AnyFunSuite {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val ks = keys(50000, 7L)
-    val df = ks.toSeq.toDF("url_hash").repartition(8)
-    val cf = CuckooFilter.build(df, ks.length.toLong)
-    assert(!cf.saturated)
-    assert(ks.forall(cf.mightContain), "false negative after distributed build+merge")
+    val df = ks.toSeq.map(k => (k, 0)).toDF("url_hash", "round").repartition(8)
+    // the engine's build: one task per shard file, inserting in the order
+    // its rows arrive
+    val dir = java.nio.file.Files.createTempDirectory("graft_cf_build").toString
+    val buckets = CuckooFilter.bucketsFor(ks.length.toLong)
+    assert(graft.frontier.CuckooShards.write(df, dir, 1, buckets, None, Set(0), Set.empty)
+      .contains(0L))
+    val shard = new java.io.File(dir).listFiles().filter(_.getName.startsWith("shard-"))
+    assert(shard.length == 1, shard.toSeq)
+    val in = new java.io.DataInputStream(new java.io.FileInputStream(shard(0)))
+    val cf = try CuckooFilter.readFrom(in) finally in.close()
+    assert(!cf.saturated && cf.numBuckets == buckets)
+    assert(ks.forall(cf.mightContain), "false negative after the distributed build")
+    // an entry's fingerprint decides both of its buckets, so the answers
+    // do not depend on the insert order
+    val seq = new CuckooFilter(buckets)
+    ks.foreach(seq.insert)
+    val probe = keys(50000, 70L)
+    assert(probe.forall(k => cf.mightContain(k) == seq.mightContain(k)))
+    graft.util.LocalFs.deleteRecursively(dir)
   }
 
   test("TTL-2 crawl with snapshot expiry retires the sketch by deletes, never a rebuild") {

@@ -121,6 +121,66 @@ class EpochAssignSpec extends AnyFunSuite {
       s"per-round batches on b.example hosts: $bHosts")
   }
 
+  test("a round's epoch assign and link frontier each shuffle their rows once, by host") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+
+    /** `p` and the nodes under it: AQE's final plans and query stages
+      * included; a reused exchange, once; cached plans not (they are
+      * plans of their own). */
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case _ => p.children.flatMap(nodes)
+    })
+    /** The cached plans `p` reads, and those they read. */
+    def cachedUnder(p: SparkPlan): Seq[SparkPlan] = nodes(p).collect {
+      case i: InMemoryTableScanExec => i.relation.cachedPlan
+    }.flatMap(c => c +: cachedUnder(c))
+
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        nodes(qe.executedPlan).collect { case w: DataWritingCommandExec => w.cmd }.foreach {
+          case i: InsertIntoHadoopFsRelationCommand => writes.add(i.outputPath.toString -> qe.executedPlan)
+          case _ =>
+        }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // a low threshold engages the seen sketch from round 1 on
+    val wd = java.nio.file.Files.createTempDirectory("graft_wild_plans").toString
+    CrawlJob.run(spark, wildSite, wd, maxRounds = 1, bloomThreshold = 10L)
+    spark.listenerManager.register(listener)
+    try {
+      CrawlJob.run(spark, wildSite, wd, maxRounds = 5, bloomThreshold = 10L)
+      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val captured = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
+    val assigns = captured.collect { case (path, p) if path.endsWith("/assigned") => path -> p }
+    // the link frontier: the cached plan that explodes the outlinks, read
+    // by the round's carry (or next-epoch assign) and visited writes
+    val links = captured.flatMap { case (path, p) =>
+      cachedUnder(p).filter(c => nodes(c).exists(_.isInstanceOf[GenerateExec])).map(path -> _)
+    }.distinctBy(_._2)
+    assert(assigns.nonEmpty, s"no epoch assign in rounds 1-4: ${captured.map(_._1)}")
+    assert(links.nonEmpty, s"no link frontier in rounds 1-4: ${captured.map(_._1)}")
+    (assigns ++ links).foreach { case (path, p) =>
+      val shuffles = nodes(p).collect { case e: ShuffleExchangeExec => e }
+      val byHost = shuffles.map(_.outputPartitioning).collect {
+        case h: HashPartitioning if h.expressions.map(_.references.map(_.name).toSeq) == Seq(Seq("host")) => h
+      }
+      assert(shuffles.size == 1 && byHost.size == 1,
+        s"the plan behind $path shuffles ${shuffles.map(_.outputPartitioning).mkString(", ")}:\n$p")
+    }
+    graft.util.LocalFs.deleteRecursively(wd)
+  }
+
   test("an epoch's assigned table is one file set sorted by batch, and reads back batch by batch") {
     import spark.implicits._
     val (wd, last) = crawl

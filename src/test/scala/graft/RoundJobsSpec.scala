@@ -50,6 +50,11 @@ class RoundJobsSpec extends AnyFunSuite {
       val reads = js.filter(_.contains("DataFrameReader"))
       assert(reads.isEmpty, s"round ${i + 2} ran metadata jobs for reads: $reads")
     }
+    // rounds 2 and 4 start an epoch and take the fast path: their epoch
+    // assign and link frontier each shuffle their rows once, by host
+    Seq(0, 2).foreach { i =>
+      assert(perRound(i).size <= 22, s"fast-path round ${i + 2} ran ${perRound(i).size} jobs")
+    }
     // rounds 2 and 4 start an epoch and take the fast path, rounds 3 and
     // 5 the general path: rounds of one kind run the same number of jobs
     assert(perRound(0).size == perRound(2).size && perRound(1).size == perRound(3).size,
