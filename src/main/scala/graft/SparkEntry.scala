@@ -739,7 +739,7 @@ object SparkEntry {
         .orderBy("host", "rank")
     }),
 
-    // ---- W12 robots Crawl-delay budget fold (Scheduler.hostBudgets):
+    // ---- W12 robots Crawl-delay budget fold (Scheduler.assignBatches):
     // a host-declared positive delay caps the configured rate at
     // 1/delay; null/zero/negative delays are ignored; the ≥1 budget
     // floor keeps a high-delay host progressing. 96 distinct urls over

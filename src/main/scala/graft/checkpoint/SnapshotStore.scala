@@ -24,10 +24,20 @@ import org.json4s.jackson.Serialization
   * manifest rename lands, so a killed run resumes from the last complete
   * version; data for never-committed versions is orphaned and ignored.
   *
+  * API:
+  *   dataPath(v, name)        where a writer puts table `name` of version v
+  *   write(spark, v, name, df, rows)  a plain parquet write → its TableMeta
+  *   commit(v, tables, metrics)       publish the manifest; writes no data,
+  *                                    counts nothing, runs no Spark job
+  *   manifest / readTable / latestVersion   read side (views merge on read)
+  *   expire / isExpired       retention: drop old data, keep manifests
+  * A writer builds the TableMeta of each table it wrote (rows, lineage,
+  * view kind), so the commit is only the atomic publish.
+  *
   * The reference's own resume idiom is per-stage JSON file handoff
   * (/root/reference/RAGnificent/rag/pipeline.py:1193-1204) — this is its
-  * table-native analogue. The API (`commit`, `readTable`,
-  * `latestVersion`) keeps a drop-in path to real Iceberg later. */
+  * table-native analogue, and the API keeps a drop-in path to real
+  * Iceberg later. */
 object SnapshotStore {
   /** `view = Some("explode_chunks")` marks a MERGE-ON-READ table: the
     * rows live nested inside the parquet at `path` (the results table)
@@ -37,7 +47,7 @@ object SnapshotStore {
     * Iceberg analogue is a MOR table whose data files are shared with
     * results and compacted only when a flat layout is actually needed
     * (the jsonl/export sinks). */
-  final case class TableMeta(rows: Long, path: String, partitions: Map[String, Long],
+  final case class TableMeta(rows: Long, path: String, partitions: Map[String, Long] = Map.empty,
                              view: Option[String] = None)
   final case class Manifest(version: Int, parent: Int, tables: Map[String, TableMeta],
                             metrics: Map[String, Double])
@@ -63,62 +73,28 @@ final class SnapshotStore(val root: String) {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
-  /** Write all tables for version v, then commit the manifest atomically.
-    * `partitionKeyCol` when present records per-partition lineage (row
-    * count per value of that column, e.g. host bucket). */
-  def commit(spark: SparkSession, version: Int,
-             tables: Map[String, DataFrame],
-             metrics: Map[String, Double],
-             partitionKeyCol: Option[String] = None,
-             lineageTables: Set[String] = Set("trace", "seen_delta"),
-             knownCounts: Map[String, Long] = Map.empty,
-             preWritten: Map[String, String] = Map.empty,
-             viewTables: Map[String, (String, String)] = Map.empty,
-             knownLineage: Map[String, Map[String, Long]] = Map.empty): Unit = {
+  /** `<root>/data/v<version>/<name>`: where a writer puts table `name`
+    * of a version. */
+  def dataPath(version: Int, name: String): String = s"$root/data/v$version/$name"
+
+  /** Write `df` as table `name` of `version` and return its record. The
+    * row count is the caller's when it knows it, else a count over the
+    * written footers. */
+  def write(spark: SparkSession, version: Int, name: String, df: DataFrame,
+            rows: Option[Long] = None): TableMeta = {
+    val path = dataPath(version, name)
+    df.write.mode("overwrite").parquet(path)
+    TableMeta(rows.getOrElse(spark.read.parquet(path).count()), path)
+  }
+
+  /** Publish version `version`: its manifest, written to a tmp file and
+    * moved into place atomically, so a reader sees all of it or none.
+    * The tables' data is already written; table paths under `root` are
+    * recorded relative to it. */
+  def commit(version: Int, tables: Map[String, TableMeta], metrics: Map[String, Double]): Unit = {
     Files.createDirectories(snapshotsDir)
-    val metas = (tables.map { case (name, df) =>
-      val path = s"$root/data/v$version/$name"
-      df.write.mode("overwrite").parquet(path)
-      // row count: caller-supplied when already computed this round;
-      // otherwise a metadata-only count over the committed footers.
-      // Per-partition lineage only for the small bookkeeping tables —
-      // a groupBy over every committed table per round would double the
-      // round's work.
-      val committed = spark.read.parquet(path)
-      // lineage is driver-bounded: top maxLineageParts partitions by row
-      // count (TakeOrdered, never a full collect — a web-scale round can
-      // touch millions of hosts) + a rollup bucket for the tail.
-      val maxLineageParts = 10000
-      // caller-supplied lineage (fused with a count the round already
-      // ran) skips a per-round groupBy shuffle here
-      val parts: Map[String, Long] = if (knownLineage.contains(name)) knownLineage(name)
-      else partitionKeyCol match {
-        case Some(k) if lineageTables.contains(name) && committed.columns.contains(k) =>
-          val top = committed.groupBy(k).count()
-            .orderBy(org.apache.spark.sql.functions.desc("count"),
-              org.apache.spark.sql.functions.asc(k))
-            .limit(maxLineageParts).collect()
-            .map(r => (String.valueOf(r.get(0)), r.getLong(1)))
-          val m = top.toMap
-          val counted = top.map(_._2).sum
-          val total = knownCounts.get(name)
-          total match {
-            case Some(t) if t > counted => m + ("<other>" -> (t - counted))
-            case _ => m
-          }
-        case _ => Map.empty
-      }
-      val rows = knownCounts.getOrElse(name, committed.count())
-      name -> TableMeta(rows, path, parts)
-    }) ++ preWritten.map { case (name, path) =>
-      val rows = knownCounts.getOrElse(name, spark.read.parquet(path).count())
-      name -> TableMeta(rows, path, Map.empty[String, Long])
-    } ++ viewTables.map { case (name, (srcPath, kind)) =>
-      val rows = knownCounts.getOrElse(name, readView(spark, srcPath, kind).count())
-      name -> TableMeta(rows, srcPath, knownLineage.getOrElse(name, Map.empty[String, Long]), Some(kind))
-    }
     val manifest = Manifest(version, version - 1,
-      metas.map { case (name, m) => name -> m.copy(path = m.path.stripPrefix(s"$root/")) }, metrics)
+      tables.map { case (name, m) => name -> m.copy(path = m.path.stripPrefix(s"$root/")) }, metrics)
     val tmp = snapshotsDir.resolve(s".v$version.json.tmp")
     Files.writeString(tmp, Serialization.writePretty(manifest))
     Files.move(tmp, manifestPath(version), StandardCopyOption.ATOMIC_MOVE,

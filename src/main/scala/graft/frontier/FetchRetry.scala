@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE broadcast left-join of the fault table against the
   * politeness-budget-bounded batch (faults are a corpus-sized side
-  * input but the join probes only batch rows; at 10^10 the fault table
-  * joins the same way the alias map does) and a codegen'd projection —
+  * input but the join probes only batch rows; the crawl joins it as one
+  * table with its redirect alias map) and a codegen'd projection —
   * no shuffle, no state, no extra action. Retry backoff consumes
   * in-visit wall-clock in the reference (sleep between attempts), which
   * the round abstraction already treats as zero-latency fetch time, so
@@ -33,10 +33,10 @@ import org.apache.spark.sql.functions._
 object FetchRetry {
 
   /** Classify each batch row against the fault table. `batch` must
-    * carry a `url` column; `faults` columns (url, fail_times),
-    * key-unique on url — dedup ONCE at load with [[loadFaults]] (a
-    * per-call groupBy here would re-shuffle the side table every
-    * round). Adds:
+    * carry a `url` column; `faults` columns (url, fail_times, and any
+    * others, which ride along), key-unique on url — dedup ONCE at load
+    * with [[loadFaults]] (a per-call groupBy here would re-shuffle the
+    * side table every round). Adds:
     *   fetch_ok (boolean)    — attempt fail_times+1 succeeded
     *   fetch_attempts (int)  — attempts consumed (maxRetries when
     *                           exhausted, fail_times+1 when fetched) */
@@ -52,11 +52,10 @@ object FetchRetry {
 
   /** Load + key-uniquify a fault side table (url, fail_times):
     * duplicate capture records collapse to max — the conservative read
-    * of conflicting evidence. One bounded job per CRAWL, checkpointed
-    * so every round's broadcast rebuilds from the deduped blocks, not
-    * the raw parquet. */
+    * of conflicting evidence. The crawl runs it once and checkpoints it
+    * inside its fetch side table, so every round's broadcast rebuilds
+    * from the deduped blocks, not the raw parquet. */
   def loadFaults(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
       .groupBy(col("url")).agg(max("fail_times").cast("int").as("fail_times"))
-      .localCheckpoint(true)
 }

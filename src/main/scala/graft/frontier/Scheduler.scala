@@ -83,7 +83,7 @@ object Scheduler {
       recrawlMaxRounds: Option[Int] = None,
       recrawlEvery: Int = 1,
       // Honor robots-declared Crawl-delay as a per-host rate CAP
-      // (rps_eff = min(configured, 1/delay) — see hostBudgets). Off by
+      // (rps_eff = min(configured, 1/delay) — see withBudget). Off by
       // default: the reference ignores the field entirely (its
       // RequestThrottler rates are operator-configured only), so parity
       // crawls keep reference semantics unless a run opts in.
@@ -246,12 +246,6 @@ object Scheduler {
       .withColumn("budget", greatest(lit(1L), floor(col("rps") * lit(cfg.roundSeconds))))
       .drop("rps")
   }
-
-  /** The per-host budgets (host, budget) of the hosts present in
-    * `frontier`, under the configured `limits` (pattern, rps). */
-  def hostBudgets(frontier: DataFrame, limits: DataFrame, cfg: Config,
-                  robots: Option[DataFrame] = None): DataFrame =
-    withBudget(frontier.select("host").distinct(), Rates(limits), cfg, robots).select("host", "budget")
 
   /** Robots gate (F7) over frontier-shaped rows. Returns
     * (allowed, denied, gateCache); `gateCache` is the single cached

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 import graft.checkpoint.SnapshotStore
+import graft.checkpoint.SnapshotStore.TableMeta
 import graft.chunk.{ChunkRec, Chunker}
 import graft.frontier.{Frontier, Scheduler, SeenIndex}
 import graft.html.{Doc, DocRender}
@@ -228,23 +229,6 @@ object CrawlJob {
     spark.read.schema(assignedSchema).parquet(path)
       .filter(col("batch_no").between(stamp(from), stamp(to)))
 
-  /** Generated classes compiled so far in this JVM. */
-  private def compiledClasses: Long =
-    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-  /** `GRAFT_TIMING` phase lines: each call prints the wall time and the
-    * generated classes compiled since the previous call. */
-  private final class PhaseTimer(prefix: String) {
-    private val on = sys.env.contains("GRAFT_TIMING")
-    private var t = System.nanoTime()
-    private var c = compiledClasses
-    def apply(name: String): Unit = if (on) {
-      val (now, cNow) = (System.nanoTime(), compiledClasses)
-      println(f"[timing] $prefix $name: ${(now - t) / 1e9}%.1fs, ${cNow - c} classes compiled")
-      t = now; c = cNow
-    }
-  }
-
   /** A per-round value (the round stamp of `results` and `visited`, an
     * epoch's batch bounds) that generated code reads from its references
     * array: a `lit(round)` is inlined into the generated source, so each
@@ -319,7 +303,6 @@ object CrawlJob {
         org.apache.spark.sql.expressions.Window.partitionBy("sm_host").orderBy("cand_rank")))
       .filter(col("rn") === 1)
       .select("sm_host", "sm_url")
-    val ifPhase = new PhaseTimer("initial-frontier")
     // Fixpoint job discipline: each level runs exactly TWO jobs — the
     // eager parse checkpoint (entryParts re-reads it later, so it must
     // materialize) and one count() that lazily materializes BOTH the
@@ -331,7 +314,6 @@ object CrawlJob {
       .groupBy("sm_url").agg(min("sm_host").as("sm_host")) // F5: one parse per sitemap url
       .localCheckpoint(false)
     var nPending = pending.count()
-    ifPhase("pending0")
     var processed = pending.select("sm_url").limit(0)
     val entryParts = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var level = 0
@@ -343,7 +325,6 @@ object CrawlJob {
           (h, r.entries.map(e => (e.loc, e.priority)), r.childSitemaps)
         }.toDF("sm_host", "locs", "children")
         .localCheckpoint() // materialize: one parse pass, lineage cut per level
-      ifPhase(s"level$level-parse")
       entryParts += parsed.select(col("sm_host"), explode(col("locs")).as("e"))
         .select(col("sm_host"), col("e._1").as("loc"), col("e._2").as("pr"))
       processed = processed.unionByName(pending.select("sm_url")).distinct()
@@ -353,7 +334,6 @@ object CrawlJob {
         .groupBy("sm_url").agg(min("sm_host").as("sm_host"))
         .localCheckpoint(false)
       nPending = pending.count()
-      ifPhase(s"level$level-next")
       level += 1
     }
 
@@ -590,47 +570,44 @@ object CrawlJob {
     }
     val rules = robotsRules(spark, spark.read.parquet(s"$siteDir/robots.parquet")).cache()
     val robotsDf = rules.toDF()
+    // the robots rules go to all three budget call sites (the epoch
+    // assign, the per-round ranking, the next-epoch pre-assign), which
+    // fold their Crawl-delay caps in when cfg.honorCrawlDelay is on
     val rates = Scheduler.Rates(spark.read.parquet(s"$siteDir/host_limits.parquet"))
-    // site-declared rate caps (Crawl-delay) fold into every budget
-    // resolution when honorCrawlDelay is on — one Option threaded to all
-    // three budget call sites so the epoch assign, the per-round carry
-    // ranking, and the next-epoch pre-assign agree on the same budgets
-    val budgetRobots = if (cfg.honorCrawlDelay) Some(robotsDf) else None
 
+    def sideTable(name: String)(load: String => DataFrame): Option[DataFrame] =
+      Option.when(new java.io.File(s"$siteDir/$name").exists())(load(s"$siteDir/$name"))
     // Redirect aliases (requests' invisible-follow made explicit — see
     // Scheduler.Config.redirectMaxHops): when the corpus carries a
     // `redirects` side table (WARC corpora record 3xx hops as rows),
     // the chain map is flattened ONCE per crawl via
     // Redirects.resolveMap — alias → terminal destination; loop /
-    // over-cap chains → null = fetch failure — so each round pays
-    // exactly ONE broadcast left-join on the budget-bounded batch, no
-    // per-round iteration. At 10^10 the flatten is one bounded
-    // O(maxHops)-equi-join job over only the 3xx captures (a few
-    // percent of a web corpus), amortized over the whole crawl.
-    val aliasMap: Option[DataFrame] = {
-      val rp = s"$siteDir/redirects.parquet"
-      if (!new java.io.File(rp).exists()) None
-      else {
-        val rmap = spark.read.parquet(rp)
-          .groupBy(col("src")).agg(min("dst").as("dst")).localCheckpoint(true)
-        Some(graft.url.Redirects
-          .resolveMap(rmap.select(col("src").as("url")), rmap, cfg.redirectMaxHops)
-          .select(col("start").as("url"),
-            when(col("k") === "terminal", col("cur")).as("redirect_final"),
-            lit(true).as("redir"))
-          .localCheckpoint(true))
-      }
+    // over-cap chains → null = fetch failure. At 10^10 the flatten is
+    // one bounded O(maxHops)-equi-join job over only the 3xx captures
+    // (a few percent of a web corpus), amortized over the whole crawl.
+    val aliases = sideTable("redirects.parquet") { rp =>
+      val rmap = spark.read.parquet(rp)
+        .groupBy(col("src")).agg(min("dst").as("dst")).localCheckpoint(true)
+      graft.url.Redirects
+        .resolveMap(rmap.select(col("src").as("url")), rmap, cfg.redirectMaxHops)
+        .select(col("start").as("url"),
+          when(col("k") === "terminal", col("cur")).as("redirect_final"),
+          lit(true).as("redir"))
     }
-
     // Transient-fault replay (scraper.py's in-visit retry loop made a
-    // recorded per-row fact — see frontier.FetchRetry): loaded + key-
-    // uniquified ONCE per crawl; each round pays one broadcast left-join
-    // on the budget-bounded batch, exactly the alias-map shape.
-    val faultMap: Option[DataFrame] = {
-      val fp = s"$siteDir/faults.parquet"
-      if (!new java.io.File(fp).exists()) None
-      else Some(graft.frontier.FetchRetry.loadFaults(spark, fp))
-    }
+    // recorded per-row fact — see frontier.FetchRetry)
+    val faults = sideTable("faults.parquet")(graft.frontier.FetchRetry.loadFaults(spark, _))
+    // Both are keyed by the requested url: one fetch side table (url,
+    // redirect_final, redir, fail_times), built ONCE per crawl, so each
+    // round pays exactly one broadcast left-join on its budget-bounded
+    // batch (FetchRetry.withAttempts), no per-round iteration.
+    val fetchSide: Option[DataFrame] =
+      (aliases ++ faults).reduceOption(_.join(_, Seq("url"), "full_outer")).map { t =>
+        Seq("redirect_final" -> "string", "redir" -> "boolean", "fail_times" -> "int")
+          .foldLeft(t) { case (df, (c, tpe)) =>
+            if (df.columns.contains(c)) df else df.withColumn(c, lit(null).cast(tpe))
+          }.localCheckpoint(true)
+      }
 
     // Rounds whose epoch boundary is forced, each a pure function of the
     // round number, so RefCrawl mirrors it and trace parity holds through
@@ -646,23 +623,12 @@ object CrawlJob {
     def refreezes(r: Int): Boolean = adaptive && r > 0 && r % cfg.recrawlEvery == 0
     def forcedBoundary(r: Int): Boolean = rescores(r) || refreezes(r)
 
-    // Transient-fault replay (FetchRetry): attempt classification and
-    // exhausted-row removal fold into the fetch plan. `observe` sits below
-    // the fetch_ok filter, so it sees every scheduled-and-present row.
-    def fetchedOk(fetched: DataFrame, observe: DataFrame => DataFrame = identity): DataFrame =
-      faultMap.fold(fetched) { fm =>
-        observe(graft.frontier.FetchRetry.withAttempts(fetched, fm, cfg.fetchMaxRetries))
-          .filter(col("fetch_ok"))
-          .drop("fetch_ok", "fetch_attempts")
-      }
-
     /** Round `s0.round`: the state after it commits, or None when it
       * finds nothing to schedule (the crawl ends; the round commits
       * nothing). */
     def step(s0: CrawlState): Option[CrawlState] = {
       val t0 = System.nanoTime()
       val round = s0.round
-      val phase = new PhaseTimer(s"r$round")
       // the round's cached frames, unpersisted however the round ends
       val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       try {
@@ -678,7 +644,7 @@ object CrawlJob {
         val (s, epochDenied, nEpochDenied) = if (!boundary) (s0, None, 0L) else {
           val st = if (refreezes(round)) s0.copy(due = Some(freezeDue(spark, store, cfg, round))) else s0
           val input = st.epoch match {
-            case None => val f = initialFrontier(spark, siteDir, rules); phase("epoch-assign/initial-frontier"); f
+            case None => initialFrontier(spark, siteDir, rules)
             case Some(e) => readBatches(spark, e.assigned.path, round - e.start, e.assigned.maxBatch)
               .select(frontierCols.map(col): _*) // drop the stored rank and batch
               .unionByName(st.carry)
@@ -700,9 +666,7 @@ object CrawlJob {
           val (allowed, denied, nDenied) = if (round == 0) {
             val (alw, den, gate) = Scheduler.robotsGate(fresh, robotsDf)
             cached += gate
-            val n = den.count()
-            phase("epoch-assign/robots-gate")
-            (alw, Some(den), n)
+            (alw, Some(den), den.count())
           } else (fresh, None, 0L)
           val toAssign =
             if (rescores(round)) {
@@ -724,9 +688,8 @@ object CrawlJob {
                   .withColumnRenamed("link_rank", "priority")
                   .select(frontierCols.map(col): _*)
             } else allowed
-          val a = writeAssigned(Scheduler.assignBatches(toAssign, rates, cfg, budgetRobots),
-            s"${store.root}/data/v$round/assigned", s"assign_epoch_r$round")
-          phase("epoch-assign")
+          val a = writeAssigned(Scheduler.assignBatches(toAssign, rates, cfg, Some(robotsDf)),
+            store.dataPath(round, "assigned"), s"assign_epoch_r$round")
           (st.copy(epoch = Some(Epoch(round, a, 0L)), carry = emptyFrontier(spark), carryRows = 0L),
             denied, nDenied)
         }
@@ -761,7 +724,7 @@ object CrawlJob {
                   .select(frontierCols.map(col): _*).unionByName(s.carry)))
               .observe(freshObs, count(lit(1)).as("n"))
               .cache()
-            (fr, Scheduler.rankSelect(fr, rates, cfg, budgetRobots).cache())
+            (fr, Scheduler.rankSelect(fr, rates, cfg, Some(robotsDf)).cache())
           }
         cached ++= Seq(fresh, selected)
         // batch 0's row count rode the assign write's Observation when
@@ -812,7 +775,6 @@ object CrawlJob {
             val (n, m) = lineageAndCount()
             (n, scala.concurrent.Future.successful(m))
           }
-        phase("schedule")
 
         // candidates exhausted (batches and carry both dry) → crawl done
         if (nScheduled == 0 && nEpochDenied == 0) None
@@ -828,12 +790,13 @@ object CrawlJob {
           val nCacheHits = math.max(0L, nCandidates - nFresh)
 
           // "fetch" = ONE equi join of the pages table on the batch's
-          // fetch_url (J4). With a redirects side table, alias resolution
-          // folds into the batch side: rows whose chain failed (redir
-          // set, redirect_final null) are unfetchable and land in
-          // `missing`; the rest fetch the destination's payload and
-          // attribute it to the REQUESTED url (scraper.py:158-169 — cache
-          // key, conversion base, chunk source_url all use it). The batch
+          // fetch_url (J4). The fetch side table folds into the batch
+          // side: rows whose redirect chain failed (redir set,
+          // redirect_final null) are unfetchable and land in `missing`;
+          // the rest fetch the destination's payload and attribute it to
+          // the REQUESTED url (scraper.py:158-169 — cache key, conversion
+          // base, chunk source_url all use it), and each row's fault
+          // record classifies its attempts (fetch_ok). The batch
           // is politeness-budget-bounded, so it is broadcast into the
           // pages scan: pages stream through a hash probe with no
           // shuffle/sort of the (html-payload-heavy) big side. Over the
@@ -841,33 +804,29 @@ object CrawlJob {
           // has no Exchange either way, and shuffling only the batch side
           // into bucket alignment is the 10^10 shape (AQE picks per batch
           // size); AQE skew-join covers a too-large batch.
-          val requested = selected.select(col("url").as("req_url"), col("url_hash"),
+          val requested = selected.select(col("url"), col("url_hash"),
             col("host"), col("depth"), col("rank"))
-          val batch = aliasMap match {
-            case None => requested.withColumn("fetch_url", col("req_url"))
-            case Some(am) => requested
-              .join(broadcast(am.withColumnRenamed("url", "req_url")), Seq("req_url"), "left")
+          val batch = fetchSide.fold(requested.withColumn("fetch_url", col("url"))) { t =>
+            graft.frontier.FetchRetry.withAttempts(requested, t, cfg.fetchMaxRetries)
               .filter(col("redir").isNull || col("redirect_final").isNotNull)
-              .withColumn("fetch_url", coalesce(col("redirect_final"), col("req_url")))
+              .withColumn("fetch_url", coalesce(col("redirect_final"), col("url")))
               .drop("redirect_final", "redir")
-          }
+          }.withColumnRenamed("url", "req_url")
           val batchSide =
             if (cfg.bucketedPagesTable.isEmpty && nScheduled <= 2000000L) broadcast(batch)
             else batch
           val fetched = pages.join(batchSide, pages("url") === batchSide("fetch_url"), "inner")
             .drop(pages("url")).withColumnRenamed("req_url", "url")
-          // redirect accounting rides the extract write (url != fetch_url
-          // ⇔ the row arrived via an alias) — no extra job
-          val redirObs = org.apache.spark.sql.Observation(s"redir_r$round")
-          val fetchedAliased =
-            if (aliasMap.isDefined)
-              fetched.observe(redirObs, coalesce(sum(when(
-                col("url") =!= col("fetch_url"), 1L)), lit(0L)).as("n_redirected"))
-            else fetched
-          // the failure/retry counts ride the extract write's Observation
-          // — no extra job
-          val faultObs = org.apache.spark.sql.Observation(s"fault_r$round")
-          val fetchedForExtract = fetchedOk(fetchedAliased, _.observe(faultObs,
+          // the rows whose fetch succeeded: exhausted retries drop here
+          def fetchOk(df: DataFrame): DataFrame =
+            if (fetchSide.isEmpty) df else df.filter(col("fetch_ok")).drop("fetch_ok", "fetch_attempts")
+          // redirect, failure and retry accounting ride the extract write
+          // as one Observation below the fetch_ok filter, so it sees every
+          // scheduled-and-present row (url != fetch_url ⇔ the row arrived
+          // via an alias) — no extra job
+          val fetchObs = org.apache.spark.sql.Observation(s"fetch_r$round")
+          val fetchedForExtract = fetchOk(if (fetchSide.isEmpty) fetched else fetched.observe(fetchObs,
+            coalesce(sum(when(col("url") =!= col("fetch_url"), 1L)), lit(0L)).as("n_redirected"),
             coalesce(sum(when(!col("fetch_ok"), 1L)), lit(0L)).as("n_fetch_failed"),
             coalesce(sum(when(col("fetch_ok"), col("fetch_attempts").cast("long") - 1L)), lit(0L))
               .as("n_retry_attempts")))
@@ -877,7 +836,7 @@ object CrawlJob {
           // costs more than the parquet write (in-memory columnar builders
           // on big string columns) and a second consumer would re-parse.
           // All derived tables read back columnar + pruned.
-          val resultsPath = s"${store.root}/data/v$round/results"
+          val resultsPath = store.dataPath(round, "results")
           // accounting (row count + chunk sum) rides the WRITE job as an
           // Observation — zero extra jobs, zero re-scan of the output
           val exObs = org.apache.spark.sql.Observation(s"extract_r$round")
@@ -893,7 +852,6 @@ object CrawlJob {
           val extracted = spark.read.schema(resultsSchema).parquet(resultsPath)
           val nFetched = observed(exObs, "n_rows")
           val nChunks = observed(exObs, "n_chunks")
-          phase("fetch+extract")
 
           // opt-in raw-capture archive (Config.archiveWarc): the round's
           // successful payloads leave as member-per-record gzip WARC +
@@ -905,11 +863,9 @@ object CrawlJob {
           // row's warc_ts.
           val nWarcCaptures = if (!cfg.archiveWarc) -1L else {
             val idx = graft.sources.WarcWriter.writeWarcFiles(
-              fetchedOk(fetched).select(col("url"), col("warc_ts"), lit(200L).as("status"), col("html")),
-              s"${store.root}/data/v$round/warc", gzip = true)
-            idx.write.mode("overwrite")
-              .parquet(s"${store.root}/data/v$round/warc_index")
-            phase("warc-archive")
+              fetchOk(fetched).select(col("url"), col("warc_ts"), lit(200L).as("status"), col("html")),
+              store.dataPath(round, "warc"), gzip = true)
+            idx.write.mode("overwrite").parquet(store.dataPath(round, "warc_index"))
             idx.count() // local: idx is checkpointed
           }
 
@@ -935,7 +891,6 @@ object CrawlJob {
           // broadcast of the cached `selected` of their own.
           val newAllowed =
             newGated.join(broadcast(selected.select("url_hash")), Seq("url_hash"), "left_anti")
-          phase("links")
 
           // ONE `visited` table = scheduled rows (rank set) ∪ denied rows
           // (rank null); seen_delta and trace are merge-on-read views of
@@ -970,7 +925,7 @@ object CrawlJob {
           // one write's task waves fill the other's scheduling gaps
           // (a wall-clock win exactly when idle task slots exist, i.e.
           // at higher core counts; a 1-core run serializes them anyway).
-          val visitedPath = s"${store.root}/data/v$round/visited"
+          val visitedPath = store.dataPath(round, "visited")
           val visitedF = scala.concurrent.Future {
             visited.write.mode("overwrite").parquet(visitedPath)
             observed(visitObs, "n_denied")
@@ -997,26 +952,38 @@ object CrawlJob {
           // stale ranking key or without the due set would be thrown
           // away there. Write the carry and let the boundary assign.
           val preAssignNext = batchIdx >= e.assigned.maxBatch && !forcedBoundary(round + 1)
-          val carryPath = s"${store.root}/data/v$round/carry"
-          val (next, nCarry) =
+          val (next, carry) =
             if (preAssignNext) {
-              val a = writeAssigned(Scheduler.assignBatches(carryNext, rates, cfg, budgetRobots),
-                s"${store.root}/data/v$round/assigned_next", s"assign_next_r$round")
-              phase("epoch-next")
-              (Some(a), 0L)
+              val a = writeAssigned(Scheduler.assignBatches(carryNext, rates, cfg, Some(robotsDf)),
+                store.dataPath(round, "assigned_next"), s"assign_next_r$round")
+              // no carry rows: the carry is an empty view, no parquet table
+              (Some(a), TableMeta(0L, visitedPath, view = Some("empty_frontier")))
             } else {
               // the carry's row count rides its write, as the assign's does
               val carryObs = org.apache.spark.sql.Observation(s"carry_r$round")
+              val carryPath = store.dataPath(round, "carry")
               carryNext.observe(carryObs, count(lit(1)).as("n"))
                 .write.mode("overwrite").parquet(carryPath)
-              (None, observed(carryObs, "n"))
+              (None, TableMeta(observed(carryObs, "n"), carryPath))
             }
           val nDenied = scala.concurrent.Await.result(visitedF, scala.concurrent.duration.Duration.Inf)
           val epochNext = next.fold(e.copy(consumed = e.consumed + nBatchRows))(Epoch(round + 1, _, 0L))
 
           val elapsed = (System.nanoTime() - t0) / 1e9
-          store.commit(spark, round,
-            Map.empty,
+          val lineage = scala.concurrent.Await.result(lineageF, scala.concurrent.duration.Duration.Inf)
+          // chunks, seen_delta and trace are merge-on-read views: the chunk
+          // rows live nested in the results parquet (a second flat write
+          // would double the round's largest write), the other two are
+          // projections of `visited`
+          val nVisited = nScheduled + nDenied
+          store.commit(round, Map(
+              "results" -> TableMeta(nFetched, resultsPath),
+              "chunks" -> TableMeta(nChunks, resultsPath, view = Some("explode_chunks")),
+              "visited" -> TableMeta(nVisited, visitedPath),
+              "seen_delta" -> TableMeta(nVisited, visitedPath, view = Some("seen_from_visited")),
+              "trace" -> TableMeta(nScheduled, visitedPath, lineage, Some("trace_from_visited")),
+              "assigned" -> TableMeta(epochNext.assigned.total, epochNext.assigned.path),
+              "carry" -> carry),
             Map(
               "scheduled" -> nScheduled.toDouble,
               "fetched" -> nFetched.toDouble,
@@ -1027,47 +994,21 @@ object CrawlJob {
               "chunks" -> nChunks.toDouble,
               "elapsed_sec" -> elapsed) ++
               epochNext.metrics ++
-              (if (aliasMap.isDefined)
-                Map("redirects_followed" -> observed(redirObs, "n_redirected").toDouble)
+              (if (aliases.isDefined)
+                Map("redirects_followed" -> observed(fetchObs, "n_redirected").toDouble)
               else Map.empty) ++
-              (if (faultMap.isDefined)
-                Map("fetch_failed" -> observed(faultObs, "n_fetch_failed").toDouble,
-                  "retry_attempts" -> observed(faultObs, "n_retry_attempts").toDouble)
+              (if (faults.isDefined)
+                Map("fetch_failed" -> observed(fetchObs, "n_fetch_failed").toDouble,
+                  "retry_attempts" -> observed(fetchObs, "n_retry_attempts").toDouble)
               else Map.empty) ++
               (if (cfg.archiveWarc)
                 Map("warc_captures" -> nWarcCaptures.toDouble)
               else Map.empty) ++
-              s.seen.counters,
-            partitionKeyCol = Some("host"),
-            knownCounts = Map(
-              "visited" -> (nScheduled + nDenied),
-              "seen_delta" -> (nScheduled + nDenied),
-              "results" -> nFetched,
-              "chunks" -> nChunks,
-              "trace" -> nScheduled,
-              "assigned" -> epochNext.assigned.total,
-              "carry" -> nCarry),
-            preWritten = Map("results" -> resultsPath,
-              "visited" -> visitedPath,
-              "assigned" -> epochNext.assigned.path) ++
-              (if (preAssignNext) Map.empty else Map("carry" -> carryPath)),
-            knownLineage = Map("trace" -> scala.concurrent.Await.result(
-              lineageF, scala.concurrent.duration.Duration.Inf)),
-            // chunks = merge-on-read view over results: the chunk rows
-            // are already materialized (nested) in the results parquet —
-            // a second flat write would double the round's largest write
-            viewTables = Map(
-              "chunks" -> (resultsPath, "explode_chunks"),
-              "seen_delta" -> (visitedPath, "seen_from_visited"),
-              "trace" -> (visitedPath, "trace_from_visited")) ++
-              (if (preAssignNext) Map("carry" -> (visitedPath, "empty_frontier"))
-               else Map.empty))
-          phase("commit")
+              s.seen.counters)
 
           val seen = scala.concurrent.Await.result(seenF, scala.concurrent.duration.Duration.Inf)
           // every plan of this round is done: its sketch version can go
           seen.dropSuperseded()
-          phase("seen")
           // retention: rounds that left the TTL window hold no table any
           // future round (or resume) reads — drop their data files,
           // keep manifests. The active epoch's `assigned` table lives at
@@ -1076,9 +1017,8 @@ object CrawlJob {
             val upTo = math.min((round + 1) - ttl, epochNext.start - 1)
             if (upTo > 0) store.expire(upTo)
           }
-          phase("expiry")
           Some(CrawlState(round + 1, Some(epochNext),
-            store.readTable(spark, round, "carry", Some(frontierSchema)), nCarry, seen, s.due))
+            store.readTable(spark, round, "carry", Some(frontierSchema)), carry.rows, seen, s.due))
         }
       } finally cached.foreach(_.unpersist())
     }

@@ -49,8 +49,11 @@ object ExtractJob {
         val source =
           if (siteDir.startsWith("warc:"))
             graft.sources.Warc.readWarcFiles(spark, siteDir.stripPrefix("warc:"))
+              // a record without WARC-Target-URI or with a missing or
+              // malformed WARC-Date (parseTs quarantines it as null) drops
+              // here, as in the wet: branch, instead of failing the extract
               .filter(col("rec_type") === "response" && col("status") === 200 &&
-                col("html").isNotNull)
+                col("html").isNotNull && col("url").isNotNull && col("warc_ts").isNotNull)
               .select(col("url"), col("html"), col("warc_ts"))
           else spark.read.parquet(s"$siteDir/pages.parquet")
             .select(col("url"), col("html"), col("warc_ts"))

@@ -80,11 +80,11 @@ object RefCrawl {
       recrawlEvery: Option[Int] = None,
       recrawlMinRounds: Int = 1,
       recrawlMaxRounds: Int = 8,
-      // Crawl-delay mirror (Scheduler.hostBudgets fold): a positive
+      // Crawl-delay mirror (Scheduler.assignBatches' budget fold): a positive
       // robots-declared delay caps the configured rate at 1/delay.
       honorCrawlDelay: Boolean = false): Result = {
 
-    // Scheduler.hostBudgets' rule: exact, else the longest `*.suffix` match
+    // Scheduler.Rates' rule: exact, else the longest `*.suffix` match
     def rpsOf(host: String): Double = {
       val configured = limits.getOrElse(host,
         limits.filter { case (p, _) => p.startsWith("*.") && host.endsWith(p.substring(1)) }

@@ -37,7 +37,7 @@ object RagPipeline {
         .select(col("url").as("source_url"),
           GraftFunctions.chunk_markdown(col("markdown"), col("url"),
             date_format(col("warc_ts"), "yyyy-MM-dd'T'HH:mm:ss"), lit(chunkSize), lit(chunkOverlap)))
-      store.commit(spark, 0, Map("chunks" -> chunks), Map.empty)
+      store.commit(0, Map("chunks" -> store.write(spark, 0, "chunks", chunks)), Map.empty)
     }
     val chunks = store.readTable(spark, 0, "chunks")
     val nChunks = store.manifest(0).tables("chunks").rows
@@ -50,8 +50,9 @@ object RagPipeline {
       val embedded = Embedder.embedWithCache(
         chunks.select(col("id"), col("content"), col("source_url")),
         "content", cacheTbl, encoder)
-      store.commit(spark, 1,
-        Map("embedded" -> embedded, "cache_delta" -> Embedder.newEntries(embedded)),
+      store.commit(1, Map(
+        "embedded" -> store.write(spark, 1, "embedded", embedded),
+        "cache_delta" -> store.write(spark, 1, "cache_delta", Embedder.newEntries(embedded))),
         Map.empty)
     }
     val embedded = store.readTable(spark, 1, "embedded")

@@ -94,13 +94,11 @@ final class VectorStore(val root: String, val table: String = "vectors",
     val chain = activeChain
 
     def commit(df: DataFrame, delta: Boolean, dim: Int, rows: Option[Long]): Int = {
-      val known = rows.map(r => Map(table -> r)).getOrElse(Map.empty[String, Long])
-      store.commit(spark, v, Map(table -> df),
+      store.commit(v, Map(table -> store.write(spark, v, table, df, rows)),
         metrics = Map(
           "is_delta" -> (if (delta) 1.0 else 0.0),
           "dim" -> dim.toDouble,
-          "upserted" -> nValid.toDouble), // reuses the stats action, no extra count
-        knownCounts = known)
+          "upserted" -> nValid.toDouble)) // reuses the stats action, no extra count
       v
     }
 

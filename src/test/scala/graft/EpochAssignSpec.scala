@@ -35,12 +35,14 @@ class EpochAssignSpec extends AnyFunSuite {
     val rates = Seq(("*.example", 2.0), ("*.b.example", 0.2), ("x.b.example", 4.0))
     val cfg = Scheduler.Config() // 1 rps default, 5 s rounds
     // exact beats wildcard, the longer suffix beats the shorter, no
-    // match takes the default — in either order of the limits table
-    val want = Seq(("a.b.example", 1L), ("c.example", 10L), ("d.other", 5L), ("x.b.example", 20L))
+    // match has no rate (the budget takes the default) — in either
+    // order of the limits table
+    val want = Seq[(String, java.lang.Double)](
+      ("a.b.example", 0.2), ("c.example", 2.0), ("d.other", null), ("x.b.example", 4.0))
     Seq(rates, rates.reverse).foreach { rs =>
-      val got = Scheduler.hostBudgets(frontier, rs.toDF("pattern", "rps"), cfg)
-        .as[(String, Long)].collect().toSeq.sorted
-      assert(got == want, s"budgets for limits $rs")
+      val of = Scheduler.Rates(rs.toDF("pattern", "rps"))
+      val got = want.map { case (h, _) => (h, of.of(h)) }
+      assert(got == want, s"rates for limits $rs")
     }
     val limits = rates.toDF("pattern", "rps")
     val assigned = Scheduler.assignBatches(frontier, limits, cfg)

@@ -326,6 +326,22 @@ class WarcCcSpec extends AnyFunSuite {
     assert(!got.contains("https://wx4.example/p4"), "non-200 capture must not extract")
   }
 
+  test("warc extract: a response with a malformed WARC-Date is dropped, not an aborted job") {
+    import spark.implicits._
+    val good = record("response", "https://wd.example/good",
+      httpPayload("<html><head><title>G</title></head><body><p>good page</p></body></html>"))
+    val bad = record("response", "https://wd.example/bad",
+      httpPayload("<html><body><p>bad date</p></body></html>"))
+      .replace("WARC-Date: 2026-01-01T00:00:00Z", "WARC-Date: not-a-date")
+    val dir = Files.createTempDirectory("graft_warc_baddate").toString
+    Files.write(java.nio.file.Paths.get(dir, "mixed.warc"), (good + bad).getBytes(UTF_8))
+    val out = Files.createTempDirectory("graft_warc_baddate_out").toString
+    val (nPages, nChunks) = graft.jobs.ExtractJob.run(spark, s"warc:$dir/*.warc", out)
+    assert(nPages == 1L && nChunks > 0L)
+    assert(spark.read.parquet(s"$out/extracted.parquet").select("url").as[String].collect().toSeq ==
+      Seq("https://wd.example/good"))
+  }
+
   test("wet: conversion records round-trip; warcinfo skipped; corrupt tail quarantined") {
     import graft.sources.WarcWriter
     val ts = java.sql.Timestamp.from(java.time.Instant.parse("2026-02-03T04:05:06Z"))
