@@ -16,8 +16,13 @@
 # publish, and record the ns/hop next to the result: a crawl number
 # taken at 250+ ns/hop understates the engine ~2.5-3x.
 #
+# The probe runs pinned to one CPU: MEMLAT_CPU, or by default the highest
+# CPU in this shell's affinity list (the list is ascending, so its last
+# number).
+#
 # Output: one JSON line {"l2_ns":..,"llc_ns":..,"dram_ns":..,"stride_gbps":..}
 set -e
+cpu=${MEMLAT_CPU:-$(taskset -pc $$ | awk -F'[ ,-]+' '{print $NF}')}
 d=$(mktemp -d)
 trap 'rm -rf "$d"' EXIT
 cat > "$d/MemLat.java" <<'EOF'
@@ -50,4 +55,4 @@ public class MemLat {
 }
 EOF
 javac -d "$d" "$d/MemLat.java"
-taskset -c "${MEMLAT_CPU:-30}" java -cp "$d" -Xmx2g MemLat
+taskset -c "$cpu" java -cp "$d" -Xmx2g MemLat

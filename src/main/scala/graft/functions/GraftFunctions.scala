@@ -152,13 +152,6 @@ object GraftFunctions {
   private def expr(c: Column): Expression = org.apache.spark.sql.graftbridge.Bridge.expression(c)
   private def col(e: Expression): Column = org.apache.spark.sql.graftbridge.Bridge.column(e)
 
-  /** 64-bit deterministic url hash used as frontier key everywhere
-    * (driver loop, Spark jobs, tests) so all components agree. xxhash64
-    * seed 42 — same as Spark SQL's xxhash64() builtin, via the Catalyst
-    * eval, so SQL probes match Scala-side values. */
-  def url64(s: String): Long =
-    XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
-
   // Column helpers
   def html_to_markdown(html: Column, base: Column): Column =
     col(HtmlToMarkdown(expr(html), expr(base)))

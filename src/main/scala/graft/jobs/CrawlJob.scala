@@ -17,30 +17,48 @@ import graft.sitemap.Sitemap
   *
   *   EPOCH (once per many rounds): remaining frontier ∪ carry
   *     → EXCHANGE: hash-partition by host
-  *     → seen-sketch prefilter + left_anti vs seen (J1, SeenIndex)
   *     → merge (min depth, max priority) → robots gate at INSERT only
   *     → host budget per row → window-rank per host → batch_no = (rank-1)/budget (W2)
   *     → write one table sorted by batch_no              [O(frontier), amortized]
   *   ROUND k of the epoch:
   *     candidates = assigned[batch_no = k] (filtered scan) ∪ carry
-  *     → EXCHANGE by host → seen filter → merge
+  *     → EXCHANGE by host → merge
   *     → rank ≤ budget within candidates (W2) + W4 cap   [O(batch + carry)]
   *     → inner join pages ("fetch", J4)
   *     → one-pass parse → markdown/outlinks/chunks (P4/P8/G1)
-  *     → new links: canonicalize → EXCHANGE by host → seen filter → merge
-  *       → robots gate (insert-time F7)
+  *     → new links: canonicalize → EXCHANGE by host
+  *       → seen filter (J1, SeenIndex) → merge → robots gate (insert-time F7)
   *     → carry′ = unselected candidates ∪ new allowed links  [∝ delta, NOT frontier]
   *     → commit snapshot: seen_delta, carry, results, chunks, trace
   *
   * Each frontier plan shuffles its rows once (`byHost`): `host` is a
   * function of `url`, so the host partitioning clusters the merge's
   * groups too, and the merge, the budget lookup and the per-host window
-  * run on it with no further Exchange. The seen filter runs on the
-  * input rows, before the merge (url_hash is a grouping key of the
-  * merge, so it drops the same urls): the sketch's split above the
-  * exchange, so both of its branches read the one shuffle, the plain
-  * anti-join below it; the exact side of either anti-join is broadcast
-  * while the seen window is small.
+  * run on it with no further Exchange.
+  *
+  * One seen check per url, where it enters the frontier (as the
+  * reference's addFrontier does): the frontier (the epoch's unconsumed
+  * batches and the carry) holds only unseen rows, so neither the epoch
+  * assign nor a round's candidates check them again.
+  *   - Rows enter only through the link frontier, which is seen-
+  *     filtered, or at round 0, whose seen set is empty.
+  *   - The due set is seen by design and lifted out of the check.
+  *   - A row leaves only by being selected: selection writes it to
+  *     `visited`, the anti-join with `selected` drops it from the carry,
+  *     and its batch is consumed.
+  *   - A url can sit in the carry and in a later batch at once (a link
+  *     found it after the assign). The carry's copy ranks no higher
+  *     than the batch's (a link row's priority is null), and every
+  *     earlier batch fills its host's budget with rows that rank above
+  *     both, so the two copies merge before either is selected.
+  *   - Robots rules are static, so a denied url never enters the
+  *     allowed frontier.
+  * The link frontier's seen filter runs on the link rows, before the
+  * merge (url_hash is a grouping key of the merge, so it drops the same
+  * urls): the sketch's split above the exchange, so both of its
+  * branches read the one shuffle, the plain anti-join below it; the
+  * exact side of either anti-join is broadcast while the seen window is
+  * small.
   *
   * Correctness vs the sequential reference (RefCrawl): per-host batches
   * under a FIXED ranking key (priority DESC NULLS LAST, url ASC) are
@@ -346,12 +364,9 @@ object CrawlJob {
           col("pr").as("priority"))
     }
 
+    // a url both seeded and declared appears twice: every row has depth
+    // 0, so the round-0 merge keeps its max priority
     seeds.unionByName(sitemapFrontier)
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("url_hash")
-          .orderBy(desc_nulls_last("priority"), asc("url"))))
-      .filter(col("rn") === 1).drop("rn")
-      .select(frontierCols.map(col): _*)
   }
 
   /** One-pass extract: html → Doc → (markdown, outlinks, chunks). */
@@ -487,9 +502,9 @@ object CrawlJob {
     def finished: Boolean = CrawlState.finished(round, epoch, carryRows)
 
     /** Rows of `df` this round has not seen, hash-partitioned by host
-      * (`byHost`). The still-due urls (due AND not refetched since the
-      * freeze) do not block: in adaptive mode every seen filter lifts
-      * them out. */
+      * (`byHost`): the link frontier's filter. The still-due urls (due
+      * AND not refetched since the freeze) do not block: in adaptive
+      * mode the filter lifts them out. */
     def notSeenDf(df: DataFrame): DataFrame = seen.notSeen(df, due.map(d =>
       d.frontier.select("url_hash").join(seen.seenSince(d.freeze), Seq("url_hash"), "left_anti")),
       byHost)
@@ -649,18 +664,14 @@ object CrawlJob {
               .select(frontierCols.map(col): _*) // drop the stored rank and batch
               .unionByName(st.carry)
           }
-          // the seen filter runs on the input rows, at the host exchange:
-          // url_hash is a grouping key of the merge, so it drops the same
-          // urls a filter of the merged rows would
-          val unseen = st.notSeenDf(input)
-          // due urls enter AFTER the seen filter (they are, by
-          // construction, seen) and merge against any link-rediscovered
+          // the input is unseen (see the invariant above). Due urls are
+          // seen by construction and merge against any link-rediscovered
           // twin already in the input (min depth, max priority — the
           // injected row's depth 0 and Recrawl.priority win); they carry
           // no robots risk (only FETCHED urls have history ⇒ they were
           // allowed, and rules are static per crawl)
-          val fresh = mergeFrontier(
-            if (refreezes(round)) byHost(unseen.unionByName(st.due.get.frontier)) else unseen)
+          val fresh = mergeFrontier(byHost(
+            if (refreezes(round)) input.unionByName(st.due.get.frontier) else input))
           // F7 at insert: only the round-0 input is un-gated (later epochs
           // re-rank rows that were gated when they were first inserted)
           val (allowed, denied, nDenied) = if (round == 0) {
@@ -702,24 +713,24 @@ object CrawlJob {
         // FAST PATH: the epoch was assigned at THIS round's boundary
         // (epoch block above, or the previous round's commit-time
         // assignment) and there is no carry — the batch is already
-        // merged, seen-filtered, and ranked, and nothing can have
-        // entered the seen set since assignment, so the stored
-        // within-batch rank IS the round rank. Skips a merge shuffle, a
-        // seen-filter pass, and a window per round (measured 2–3 s
-        // of the ~8 s rounds in the budget-unbound bench). Budget-bound
-        // epochs (carry present or batchIdx > 0) take the general path,
-        // whose re-rank under the fixed key is trace-equivalent —
-        // CrawlParitySpec holds parity over both.
+        // merged and ranked, so the stored within-batch rank IS the
+        // round rank. Skips a merge shuffle and a window per round
+        // (measured 2–3 s of the ~8 s rounds in the budget-unbound
+        // bench). Budget-bound epochs (carry present or batchIdx > 0)
+        // take the general path, which merges the batch with the carry
+        // and re-ranks under the fixed key, trace-equivalently —
+        // CrawlParitySpec holds parity over both. Neither path checks
+        // the seen set: the batch and the carry hold only unseen rows.
         val epochFresh = s.carryRows == 0 && e.start == round
-        // the general path's batch size and the rows that pass its seen
-        // filter ride the lineage job below, which builds `fresh`'s cache
+        // the general path's batch size and its merged row count ride
+        // the lineage job below, which builds `fresh`'s cache
         val batchObs = org.apache.spark.sql.Observation(s"batch_r$round")
         val freshObs = org.apache.spark.sql.Observation(s"fresh_r$round")
         val (fresh, selected) =
           if (epochFresh)
             (batchDf0.select(frontierCols.map(col): _*).cache(), Scheduler.globalCap(batchDf0, cfg).cache())
           else {
-            val fr = mergeFrontier(s.notSeenDf(
+            val fr = mergeFrontier(byHost(
                 batchDf0.observe(batchObs, count(lit(1)).as("n"))
                   .select(frontierCols.map(col): _*).unionByName(s.carry)))
               .observe(freshObs, count(lit(1)).as("n"))
@@ -780,10 +791,11 @@ object CrawlJob {
         if (nScheduled == 0 && nEpochDenied == 0) None
         else {
           // A4 cache-stats accounting (cache.py:598-649 analogue): requests
-          // entering this round vs requests skipped by the seen set (sketch
-          // fast-path + exact anti-join + in-round dedup merge = the
-          // request-cache hit semantics). On the fast path `fresh` IS the
-          // batch, so the hit count is identically 0.
+          // entering this round vs requests the in-round merge folds into
+          // another copy of the same url (a carry copy of a batch row) —
+          // the request-cache hit semantics; the seen set already dropped
+          // seen urls when they were discovered. On the fast path `fresh`
+          // IS the batch, so the hit count is identically 0.
           val (nBatchRows, nFresh) =
             if (epochFresh) (nBatch0, nBatch0) else (observed(batchObs, "n"), observed(freshObs, "n"))
           val nCandidates = nBatchRows + s.carryRows

@@ -49,15 +49,13 @@ object ExtractJob {
         val source =
           if (siteDir.startsWith("warc:"))
             graft.sources.Warc.readWarcFiles(spark, siteDir.stripPrefix("warc:"))
-              // a record without WARC-Target-URI or with a missing or
-              // malformed WARC-Date (parseTs quarantines it as null) drops
-              // here, as in the wet: branch, instead of failing the extract
-              .filter(col("rec_type") === "response" && col("status") === 200 &&
-                col("html").isNotNull && col("url").isNotNull && col("warc_ts").isNotNull)
-              .select(col("url"), col("html"), col("warc_ts"))
+              .filter(col("rec_type") === "response" && col("status") === 200)
           else spark.read.parquet(s"$siteDir/pages.parquet")
-            .select(col("url"), col("html"), col("warc_ts"))
+        // a page without a url, a payload or a capture time (a missing or
+        // malformed WARC-Date, which parseTs quarantines as null) drops
+        // here, as in the wet: branch, instead of failing the extract
         val pages = source
+          .filter(col("html").isNotNull && col("url").isNotNull && col("warc_ts").isNotNull)
           .select(col("url"), xxhash64(col("url")).as("url_hash"),
             graft.frontier.Frontier.hostUdf(col("url")).as("host"),
             lit(0).as("depth"), col("html"), col("warc_ts"))

@@ -7,21 +7,6 @@ import java.sql.Timestamp
   * (url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING). */
 final case class Page(url: String, warc_ts: Timestamp, html: Array[Byte], text: String, lang: String)
 
-/** URL frontier entry (reference `SitemapURL` + crawl state —
-  * /root/reference/RAGnificent/utils/sitemap_utils.py:27-34 and the
-  * follow_links/max_depth config at core/config.py:255-262).
-  * `url_hash` is the host-salted partition key: xxhash64(canonical url). */
-final case class FrontierEntry(
-    url: String,
-    url_hash: Long,
-    host: String,
-    depth: Int,
-    priority: Option[Double],
-    lastmod: Option[String],
-    changefreq: Option[String],
-    discovered_round: Int
-)
-
 /** Parsed robots.txt rules for one host (FIXTURES.md §2; reference
   * consumes only Sitemap: lines — sitemap_utils.py:128-160 — the
   * north_rule extends robots to fetch gating). */
@@ -31,24 +16,6 @@ final case class RobotsRules(
     disallow: Seq[String],
     sitemaps: Seq[String],
     crawl_delay: Option[Double]
-)
-
-/** Per-host politeness budget for one crawl round (throttle.py:254-299
-  * turned into data: requests allowed this round = rate × round length). */
-final case class HostBudget(host: String, rps: Double, budget: Int, backoff_until_round: Int, consecutive_errors: Int)
-
-/** Extracted result row per fetched url. */
-final case class ExtractedPage(
-    url: String,
-    url_hash: Long,
-    host: String,
-    depth: Int,
-    round: Int,
-    title: String,
-    markdown: String,
-    n_links: Int,
-    n_chunks: Int,
-    fetch_status: Int
 )
 
 /** Sitemap entry (SitemapURL). */

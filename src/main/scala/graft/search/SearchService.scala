@@ -35,7 +35,6 @@ final class QueryCache[R](ttlSeconds: Long, maxEntries: Int = 100,
     }
   }
 
-  def clear(): Unit = cache.clear() // clear_cache (search.py:110-112)
   def size: Int = cache.size
 }
 
@@ -51,8 +50,6 @@ final class SearchService(
   final case class Hit(id: String, score: Double, content: String)
 
   private val cache = new QueryCache[Seq[Hit]](ttlSeconds, now = now)
-
-  def clearCache(): Unit = cache.clear()
 
   /** `metadataFilter`: the reference's metadata dict alongside the
     * vector query (vector_store.py:326-368 — each entry becomes a

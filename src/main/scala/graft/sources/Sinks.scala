@@ -1,27 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.chunk.ChunkRec
 import graft.text.PipelineOps
 
 /** File sinks mirroring the reference's output formats:
-  *  - S7 per-document converted-content files (filename derived from the
-  *    URL — core/scraper.py:448-459, 944-968) — expressed as a DataFrame
-  *    (filename, content) written via partitioned text/parquet, not a
-  *    driver loop
   *  - S8 chunks.jsonl with the reference's exact record shape
   *    (utils/chunk_utils.py:222-245: `json.dumps(asdict(chunk))`, one
   *    line per chunk; metadata key SET varies by chunk_type)
   *  - S11 url export lines (loc[,priority][,lastmod])
   */
 object Sinks {
-
-  /** S7: attach the derived filename column; caller writes
-    * `df.write.partitionBy(...)` or uses it for parity tests. */
-  def withFilename(df: DataFrame, urlCol: String, outputFormat: String): DataFrame =
-    df.withColumn("filename", PipelineOps.filenameFromUrlCol(col(urlCol), outputFormat))
 
   /** Python json.dumps string escaping (ensure_ascii=True: non-ASCII →
     * \\uXXXX). */
@@ -100,12 +91,6 @@ object Sinks {
     kv("chunk_type", pyJsonString(c.chunk_type))
     sb.append('}')
     sb.toString
-  }
-
-  /** S8: chunks → JSONL lines dataset (write with `.text(...)`). */
-  def chunksToJsonl(chunks: Dataset[ChunkRec]): Dataset[String] = {
-    import chunks.sparkSession.implicits._
-    chunks.map(chunkJsonl)
   }
 
   /** S11: url export line column. */

@@ -166,11 +166,6 @@ object TextOps {
   def fingerprint64(text: Column): Column =
     xxhash64(regexp_replace(trim(text), "\\s+", " "))
 
-  def fingerprint64Scala(text: String): Long = {
-    val norm = text.trim.replaceAll("\\s+", " ")
-    graft.functions.GraftFunctions.url64(norm)
-  }
-
   /** Character bigrams of the lowercased, whitespace-collapsed text as
     * an array column; empty when the normalized text has < 2 chars
     * (guarded: Spark's `sequence(1, 0)` would DESCEND, not return []). */

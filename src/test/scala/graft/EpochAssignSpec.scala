@@ -2,6 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.SnapshotStore
@@ -123,29 +129,24 @@ class EpochAssignSpec extends AnyFunSuite {
       s"per-round batches on b.example hosts: $bHosts")
   }
 
-  test("a round's epoch assign and link frontier each shuffle their rows once, by host") {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.command.DataWritingCommandExec
-    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+  /** `p` and the nodes under it: AQE's final plans and query stages
+    * included; a reused exchange, once; cached plans not (they are
+    * plans of their own). */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case _: ReusedExchangeExec => Nil
+    case _ => p.children.flatMap(nodes)
+  })
 
-    /** `p` and the nodes under it: AQE's final plans and query stages
-      * included; a reused exchange, once; cached plans not (they are
-      * plans of their own). */
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case _: ReusedExchangeExec => Nil
-      case _ => p.children.flatMap(nodes)
-    })
-    /** The cached plans `p` reads, and those they read. */
-    def cachedUnder(p: SparkPlan): Seq[SparkPlan] = nodes(p).collect {
-      case i: InMemoryTableScanExec => i.relation.cachedPlan
-    }.flatMap(c => c +: cachedUnder(c))
+  /** The cached plans `p` reads, and those they read. */
+  private def cachedUnder(p: SparkPlan): Seq[SparkPlan] = nodes(p).collect {
+    case i: InMemoryTableScanExec => i.relation.cachedPlan
+  }.flatMap(c => c +: cachedUnder(c))
 
+  /** The parquet write plans of rounds 1-4 of a crawl of the wildcard
+    * site, by output path. */
+  private lazy val roundWrites: Seq[(String, SparkPlan)] = {
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
@@ -163,12 +164,22 @@ class EpochAssignSpec extends AnyFunSuite {
       CrawlJob.run(spark, wildSite, wd, maxRounds = 5, bloomThreshold = 10L)
       org.apache.spark.graft.TestBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    val captured = writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
+    graft.util.LocalFs.deleteRecursively(wd)
+    writes.toArray(Array.empty[(String, SparkPlan)]).toSeq
+  }
+
+  /** The link frontier: the cached plan that explodes the outlinks, read
+    * by a round's carry (or next-epoch assign) and visited writes. */
+  private def isLinkFrontier(c: SparkPlan): Boolean = nodes(c).exists(_.isInstanceOf[GenerateExec])
+
+  test("a round's epoch assign and link frontier each shuffle their rows once, by host") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
+    val captured = roundWrites
     val assigns = captured.collect { case (path, p) if path.endsWith("/assigned") => path -> p }
-    // the link frontier: the cached plan that explodes the outlinks, read
-    // by the round's carry (or next-epoch assign) and visited writes
     val links = captured.flatMap { case (path, p) =>
-      cachedUnder(p).filter(c => nodes(c).exists(_.isInstanceOf[GenerateExec])).map(path -> _)
+      cachedUnder(p).filter(isLinkFrontier).map(path -> _)
     }.distinctBy(_._2)
     assert(assigns.nonEmpty, s"no epoch assign in rounds 1-4: ${captured.map(_._1)}")
     assert(links.nonEmpty, s"no link frontier in rounds 1-4: ${captured.map(_._1)}")
@@ -180,7 +191,28 @@ class EpochAssignSpec extends AnyFunSuite {
       assert(shuffles.size == 1 && byHost.size == 1,
         s"the plan behind $path shuffles ${shuffles.map(_.outputPartitioning).mkString(", ")}:\n$p")
     }
-    graft.util.LocalFs.deleteRecursively(wd)
+  }
+
+  test("a seen delta is read only by the link frontier, not by the epoch assign or a round's candidates") {
+    /** The crawl tables a plan scans, by the last segment of their path. */
+    def scanned(p: SparkPlan): Seq[String] = nodes(p).collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+    }.flatten
+    val captured = roundWrites
+    val assigns = captured.collect { case (path, p) if path.endsWith("/assigned") => p }
+    val cached = captured.flatMap { case (_, p) => cachedUnder(p) }.distinct
+    val (links, others) = cached.partition(isLinkFrontier)
+    // the general path's candidates (`fresh`, and `selected` above it)
+    // merge an assigned batch with the carry
+    val candidates = others.filter(c => scanned(c).contains("carry"))
+    assert(assigns.nonEmpty && candidates.nonEmpty,
+      s"no epoch assign or general-path round in rounds 1-4: ${captured.map(_._1)}")
+    assert(links.nonEmpty && links.forall(c => scanned(c).contains("visited")),
+      s"a link frontier reads no seen delta:\n${links.mkString("\n")}")
+    (assigns ++ others).foreach { p =>
+      assert(!(p +: cachedUnder(p).filterNot(isLinkFrontier)).exists(c => scanned(c).contains("visited")),
+        s"a plan other than the link frontier reads a seen delta:\n$p")
+    }
   }
 
   test("an epoch's assigned table is one file set sorted by batch, and reads back batch by batch") {

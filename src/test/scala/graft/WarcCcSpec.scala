@@ -342,6 +342,22 @@ class WarcCcSpec extends AnyFunSuite {
       Seq("https://wd.example/good"))
   }
 
+  test("pages extract: a pages.parquet row with a null warc_ts is dropped, not an aborted job") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2026-01-01T00:00:00Z"))
+    val site = Files.createTempDirectory("graft_pages_nullts").toString
+    Seq[(String, java.sql.Timestamp, String)](("https://pn.example/good", ts,
+        "<html><head><title>G</title></head><body><p>good page</p></body></html>"),
+      ("https://pn.example/bad", null, "<html><body><p>no capture time</p></body></html>"))
+      .toDF("url", "warc_ts", "html").withColumn("html", $"html".cast("binary"))
+      .write.parquet(s"$site/pages.parquet")
+    val out = Files.createTempDirectory("graft_pages_nullts_out").toString
+    val (nPages, nChunks) = graft.jobs.ExtractJob.run(spark, site, out)
+    assert(nPages == 1L && nChunks > 0L)
+    assert(spark.read.parquet(s"$out/extracted.parquet").select("url").as[String].collect().toSeq ==
+      Seq("https://pn.example/good"))
+  }
+
   test("wet: conversion records round-trip; warcinfo skipped; corrupt tail quarantined") {
     import graft.sources.WarcWriter
     val ts = java.sql.Timestamp.from(java.time.Instant.parse("2026-02-03T04:05:06Z"))
